@@ -468,7 +468,7 @@ object Dedup {
       maxBucketSize: Int = -1): DataFrame = {
     // kept is read twice (signature build + final anti-join): one
     // eager checkpoint runs the quality scan once (see [[curateFull]])
-    val rounds = new Rounds(df)
+    val rounds = new Rounds(df, "curate")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -817,55 +817,23 @@ object Dedup {
       (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
     }
 
-    // Checkpoint lifecycle. Local mode: lazy localCheckpoint —
-    // materialization happens inside the signature aggregation, one
-    // Spark job per round. Reliable mode (a checkpoint dir is set):
-    // persist the round FIRST — the reliable checkpoint-write job that
-    // follows the signature job re-reads the cached blocks instead of
-    // recomputing the whole contraction (without the persist, every
-    // round ran twice); the persist is dropped as soon as the files
-    // are written. Each round's checkpoint data (local blocks /
-    // reliable files) is released once the NEXT round is materialized
-    // — only the final star edge set stays, because the returned
+    // Each round is a [[Rounds]] checkpoint materialized by its own
+    // signature aggregate (one Spark job per round), and the
+    // superseded round is released once the next is materialized —
+    // only the final star edge set stays, because the returned
     // DataFrame reads through it (its storage follows the result's
     // lifetime: ContextCleaner reclaims local blocks when the RDD is
     // GC'd; reliable files need spark.cleaner.referenceTracking
     // .cleanCheckpoints or session teardown).
-    val sc = pairs.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    case class Marked(df: DataFrame, cached: Option[DataFrame])
-    def checkpointRddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    def mark(e: DataFrame): Marked =
-      if (reliable) {
-        val p = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Marked(p.checkpoint(false), Some(p))
-      } else Marked(e.localCheckpoint(false), None)
-    // called after the round's signature job has run (checkpoint data
-    // is written by then): the cached pre-checkpoint relation is
-    // always droppable; the checkpoint data itself only when the
-    // round is superseded
-    def dropCache(m: Marked): Unit = m.cached.foreach(_.unpersist(false))
-    def releaseCheckpoint(m: Marked): Unit = checkpointRddOf(m.df).foreach { rdd =>
-      if (reliable) rdd.getCheckpointFile.foreach { f =>
-        val path = new org.apache.hadoop.fs.Path(f)
-        path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-      }
-      else rdd.unpersist(false)
-    }
-    var cur = mark(canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))
-    var curSig = sig(cur.df)
-    dropCache(cur)
+    val rounds = new Rounds(pairs, "connectedComponents")
+    var (cur, curSig) = rounds.markWith(
+      canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))(sig)
     var converged = curSig._1 == 0L
     var round = 0
     while (!converged && round < maxIter) {
-      val next = mark(canon(smallStar(canon(largeStar(cur.df)))))
-      val nextSig = sig(next.df)
-      dropCache(next)
+      val (next, nextSig) = rounds.replaceWith(cur,
+        canon(smallStar(canon(largeStar(cur)))))(sig)
       converged = nextSig == curSig
-      releaseCheckpoint(cur) // superseded round's blocks/files
       cur = next
       curSig = nextSig
       round += 1
@@ -873,8 +841,8 @@ object Dedup {
     require(converged, s"connectedComponents: no convergence in $maxIter rounds")
     // converged edges are stars (member, component-min); minima map to
     // themselves
-    cur.df.select(col("u").as("id"), col("v").as("rep"))
-      .union(cur.df.select(col("v").as("id"), col("v").as("rep")))
+    cur.select(col("u").as("id"), col("v").as("rep"))
+      .union(cur.select(col("v").as("id"), col("v").as("rep")))
       .distinct()
   }
 
@@ -892,7 +860,7 @@ object Dedup {
       maxBucketSize: Int = -1): DataFrame = {
     // kept read twice (signature build + final anti-join): checkpoint
     // the quality scan once (see [[curateFull]])
-    val rounds = new Rounds(df)
+    val rounds = new Rounds(df, "curateClustered")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -952,7 +920,7 @@ object Dedup {
     // kept read THREE times here (signature build, the keeper scores,
     // the final anti-join): checkpoint the quality scan once (see
     // [[curateFull]])
-    val rounds = new Rounds(df)
+    val rounds = new Rounds(df, "curateClusteredBest")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -994,15 +962,14 @@ object Dedup {
     // ONCE; the kept checkpoint is released as soon as uniq
     // supersedes it, and uniq's blocks follow the result's lifetime
     // (the documented final-round contract).
-    val rounds = new Rounds(df)
+    val rounds = new Rounds(df, "curateFull")
     val kept = rounds.mark(
       df.select(idCol.as("id"), Text.redactPii(text).as("text"))
         .withColumn("quality", Text.qualityScore(col("text"), stopwords))
         .filter(col("quality") >= minQuality))
     val keepers = kept.groupBy(Text.fingerprint(col("text")).as("fp"))
       .agg(min(col("id")).as("id")).select(col("id"))
-    val uniq = rounds.mark(kept.join(keepers, "id"))
-    rounds.release(kept)
+    val uniq = rounds.replace(kept, kept.join(keepers, "id"))
     // pipeline-owned caches: released once connectedComponents has
     // materialized the pairs into its round checkpoints (see CacheScope)
     val scope = new CacheScope

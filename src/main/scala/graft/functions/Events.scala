@@ -81,15 +81,11 @@ object Events {
     maxSpanUs.foreach(sp => require(sp > 0, "maxSpanUs must be positive"))
     val ev = events.select(col(userCol).as("user"),
       toUs(events, tsCol).as("us"), col(typeCol).as("et"))
-    var reached = ev.filter(col("et") === steps.head)
+    val first = ev.filter(col("et") === steps.head)
       .groupBy(col("user")).agg(min(col("us")).as("t1"))
-    if (steps.size == 1) return reached
-    val rounds = new Rounds(ev)
-    var prevMark: Option[DataFrame] = None
-    for (k <- 2 to steps.size) {
-      val prev = rounds.mark(reached)
-      prevMark.foreach(rounds.release)
-      prevMark = Some(prev)
+    if (steps.size == 1) return first
+    val rounds = new Rounds(ev, "funnel")
+    (2 to steps.size).foldLeft(rounds.mark(first)) { (prev, k) =>
       val prevT = s"t${k - 1}"
       val carry =
         if (prevT == "t1") prev.select(col("user"), col("t1"))
@@ -101,13 +97,8 @@ object Events {
         .join(carry, Seq("user"))
         .filter(col("us") > col(prevT) && within)
         .groupBy(col("user")).agg(min(col("us")).as(s"t$k"))
-      reached = prev.join(nxt, Seq("user"), "left")
+      rounds.replace(prev, prev.join(nxt, Seq("user"), "left"))
     }
-    // materialize the final join before releasing the last round it
-    // still references (the graph-family exit shape)
-    val res = rounds.mark(reached)
-    prevMark.foreach(rounds.release)
-    res
   }
 
   /** Funnel conversion report: (step, step_name, users) — users who

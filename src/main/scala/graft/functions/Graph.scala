@@ -269,7 +269,7 @@ object Graph {
 
   private def propagate(e0: DataFrame, based0: DataFrame, iterations: Int,
       dampingPermille: Int, longExact: Boolean = false): DataFrame = {
-    val rounds = new Rounds(e0)
+    val rounds = new Rounds(e0, "pageRank")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // weighted flavor: when the edge relation carries a `w` column,
     // a node's mass splits w_uv/Σ_u w instead of 1/outdeg — for
@@ -334,11 +334,9 @@ object Graph {
           (col("base") + idiv(dec(lit(dampingPermille)) *
             coalesce(col("agg"), dec(lit(0))), dec(lit(1000))))
             .cast("decimal(38,0)")
-      val next = rounds.mark(
+      cur = rounds.replace(cur,
         based.join(contrib.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"), rankExpr.as("rank")))
-      rounds.release(cur)
-      cur = next
     }
     e.unpersist(false); based.unpersist(false)
     cur
@@ -365,7 +363,7 @@ object Graph {
     require(iterations >= 0, "iterations must be >= 0")
     require(unit > 0, "unit must be positive")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "hits")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
       .persist(lvl)
@@ -396,18 +394,14 @@ object Graph {
         .groupBy(e("dst").as("id"))
         .agg(sum(col("hub")).cast("decimal(38,0)").as("auth"))
         .persist(lvl)
-      val aNext = rounds.mark(normalized(aRaw, "auth"))
+      a = rounds.replace(a, normalized(aRaw, "auth"))
       aRaw.unpersist(false)
-      rounds.release(a)
-      a = aNext
       val hRaw = e.join(a.hint("shuffle_hash"), e("dst") === a("id"))
         .groupBy(e("src").as("id"))
         .agg(sum(col("auth")).cast("decimal(38,0)").as("hub"))
         .persist(lvl)
-      val hNext = rounds.mark(normalized(hRaw, "hub"))
+      h = rounds.replace(h, normalized(hRaw, "hub"))
       hRaw.unpersist(false)
-      rounds.release(h)
-      h = hNext
     }
     val out = nodes.join(h, Seq("id"), "left").join(a, Seq("id"), "left")
       .select(col("id"),
@@ -442,7 +436,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "labelPropagation")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // pinned on src: every round joins the label relation on src, so
     // with the stationary layout only the node-sized label relation
@@ -460,12 +454,10 @@ object Graph {
         .agg(max(struct(col("cnt").as("c"),
           bitwise_not(col("label")).as("nl"))).as("m"))
         .select(col("id"), bitwise_not(col("m.nl")).as("adopted"))
-      val next = rounds.mark(
+      lab = rounds.replace(lab,
         lab.join(best.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"),
             coalesce(col("adopted"), col("label")).as("label")))
-      rounds.release(lab)
-      lab = next
     }
     e.unpersist(false); nodes.unpersist(false)
     lab
@@ -498,35 +490,22 @@ object Graph {
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be >= 0")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "bfsDistance")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
       .repartition(col("src")).persist(lvl)
-    var dist = rounds.mark(seeds.select(col(seeds.columns.head).as("id"))
-      .distinct().withColumn("dist", lit(0L)))
-    var frontier = dist
-    var depth = 1
-    var exhausted = false
-    while (depth <= maxDepth && !exhausted) {
-      // shuffle_hash: sort-merge would re-sort the pinned edge set
-      // AND the frontier every round; hashing the frontier (and the
-      // discovered set for the anti-join) leaves both streaming
-      val (next, nNext) = rounds.markN(
+    val (dist, _) = rounds.fixpoint(
+        seeds.select(col(seeds.columns.head).as("id"))
+          .distinct().withColumn("dist", lit(0L)), maxDepth) {
+      (dist, frontier, depth) =>
+        // shuffle_hash: sort-merge would re-sort the pinned edge set
+        // AND the frontier every round; hashing the frontier (and the
+        // discovered set for the anti-join) leaves both streaming
         e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
           .select(e("dst").as("id")).distinct()
           .join(dist.hint("shuffle_hash"), Seq("id"), "left_anti")
-          .withColumn("dist", lit(depth.toLong)))
-      if (nNext == 0) { rounds.release(next); exhausted = true }
-      else {
-        val acc = rounds.mark(dist.unionByName(next))
-        rounds.release(dist)
-        if (frontier ne dist) rounds.release(frontier)
-        dist = acc
-        frontier = next
-        depth += 1
-      }
-    }
-    if (frontier ne dist) rounds.release(frontier)
+          .withColumn("dist", lit(depth.toLong))
+    }(_ unionByName _)
     e.unpersist(false)
     dist
   }
@@ -558,7 +537,7 @@ object Graph {
     * BIGINT counts — nothing sampled, nothing probabilistic.
     */
   def triangles(edges: DataFrame): DataFrame = {
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "triangles")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = canonicalUndirected(edges).persist(lvl)
     val deg = undirectedDegrees(e).persist(lvl)
@@ -661,7 +640,7 @@ object Graph {
   def clusteringCoefficient(edges: DataFrame,
       unit: Long = 1000000L): DataFrame = {
     require(unit > 0, "unit must be positive")
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "clusteringCoefficient")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = canonicalUndirected(edges).persist(lvl)
     val deg = undirectedDegrees(e).persist(lvl)
@@ -672,8 +651,7 @@ object Graph {
           idiv(dec(lit(unit)) * dec(lit(2L)) * dec(col("triangles")),
             dec(col("deg")) * dec(col("deg") - lit(1L))).cast("long"))
           .as("cc"))
-    val res = rounds.mark(out)
-    rounds.release(tri)
+    val res = rounds.replace(tri, out)
     e.unpersist(false); deg.unpersist(false)
     res
   }
@@ -708,36 +686,43 @@ object Graph {
   def kcore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "kcore")
+    val (e, _) = peel(rounds.mark(canonicalUndirected(edges)), k, maxRounds,
+      rounds)
+    rounds.replace(e, undirectedDegrees(e).select(col("id"), col("deg")))
+  }
+
+  /** The synchronous sub-k peel shared by [[kcore]] and [[coreness]]:
+    * from the checkpointed canonical edge set `e0`, drop every edge
+    * touching a node of current degree < k, up to `maxRounds` peels.
+    * Returns the surviving edge checkpoint and whether the fixpoint
+    * was reached (a round with no sub-k node).
+    */
+  private def peel(e0: DataFrame, k: Int, maxRounds: Int,
+      rounds: Rounds): (DataFrame, Boolean) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def degOf(e: DataFrame): DataFrame = undirectedDegrees(e)
-    var e = rounds.mark(canonicalUndirected(edges))
+    var e = e0
     var r = 0
-    var done = false
-    while (r < maxRounds && !done) {
-      val deg = degOf(e).persist(lvl)
+    var fix = false
+    while (r < maxRounds && !fix) {
+      val deg = undirectedDegrees(e).persist(lvl)
       val keep = deg.filter(col("deg") >= k).select(col("id"))
       // one aggregate answers the fixpoint test (total == survivors)
       // that two separate count() jobs used to: the agg job also
       // materializes the persisted degree relation for the joins
       val fx = deg.agg(count(lit(1)).as("t"),
         count(when(col("deg") >= k, 1)).as("s")).head()
-      if (fx.getLong(0) == fx.getLong(1)) { deg.unpersist(false); done = true }
-      else {
-        val next = rounds.mark(
+      fix = fx.getLong(0) == fx.getLong(1)
+      if (!fix) {
+        e = rounds.replace(e,
           e.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
             .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
             .select(col("a"), col("b")))
-        deg.unpersist(false)
-        rounds.release(e)
-        e = next
         r += 1
       }
+      deg.unpersist(false)
     }
-    val out = degOf(e).select(col("id"), col("deg"))
-    val res = rounds.mark(out)
-    rounds.release(e)
-    res
+    (e, fix)
   }
 
   /** Per-node core numbers — the degeneracy decomposition the
@@ -809,8 +794,7 @@ object Graph {
       "coreness: auto-degeneracy mode (maxK = 0) requires " +
         "maxRoundsPerK >= 1 — a zero-round peel never empties the " +
         "graph, so the unbounded k-loop would never terminate")
-    val rounds = new Rounds(edges)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val rounds = new Rounds(edges, "coreness")
     var e = rounds.mark(canonicalUndirected(edges))
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // every node in the edge set has degree ≥ 1: the 1-core layer
@@ -820,26 +804,8 @@ object Graph {
     var empty = false
     val cappedKs = scala.collection.mutable.ArrayBuffer.empty[Int]
     while ((maxK == 0 || k <= maxK) && !empty) {
-      var r = 0
-      var fix = false
-      while (r < maxRoundsPerK && !fix) {
-        val deg = undirectedDegrees(e).persist(lvl)
-        val keep = deg.filter(col("deg") >= k).select(col("id"))
-        // one aggregate for the fixpoint test (the kcore posture)
-        val fx = deg.agg(count(lit(1)).as("t"),
-          count(when(col("deg") >= k, 1)).as("s")).head()
-        if (fx.getLong(0) == fx.getLong(1)) { deg.unpersist(false); fix = true }
-        else {
-          val next = rounds.mark(
-            e.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-              .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-              .select(col("a"), col("b")))
-          deg.unpersist(false)
-          rounds.release(e)
-          e = next
-          r += 1
-        }
-      }
+      val (peeled, fix) = peel(e, k, maxRoundsPerK, rounds)
+      e = peeled
       // cap path only: did the cap land exactly on the fixpoint?
       if (!fix &&
           !undirectedDegrees(e).filter(col("deg") < k).isEmpty)
@@ -875,10 +841,12 @@ object Graph {
     * (a, b) — the edge-level analogue of [[trianglesCanonical]],
     * same degree-ordered orientation (wedge work ≤ m^1.5): each
     * triangle (n0, x, y) credits its THREE canonical edges, one
-    * grouped count, zero-filled onto the edge set. Returns the
-    * checkpointed (a, b, support) relation; the caller owns it.
+    * grouped count, zero-filled onto the edge set. `markAs` checkpoints
+    * the (a, b, support) relation while the oriented edge set is still
+    * pinned; the caller owns the checkpoint.
     */
-  private def edgeSupport(e: DataFrame, rounds: Rounds): DataFrame = {
+  private def edgeSupport(e: DataFrame)(
+      markAs: DataFrame => DataFrame): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val deg = undirectedDegrees(e).persist(lvl)
     val wd = e.join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
@@ -914,7 +882,7 @@ object Graph {
     val out = e.join(hits, Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
-    val res = rounds.mark(out)
+    val res = markAs(out)
     deg.unpersist(false); oriented.unpersist(false)
     res
   }
@@ -972,23 +940,18 @@ object Graph {
       requireConverged: Boolean = false): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val rounds = new Rounds(edges)
-    var supp = {
-      val e0 = rounds.mark(canonicalUndirected(edges))
-      val s0 = edgeSupport(e0, rounds)
-      rounds.release(e0)
-      s0
-    }
+    val rounds = new Rounds(edges, "ktruss")
+    val e0 = rounds.mark(canonicalUndirected(edges))
+    var supp = edgeSupport(e0)(rounds.replace(e0, _))
     var r = 0
     var fixpoint = false
     while (r < maxRounds && !fixpoint) {
-      val deleted = rounds.mark(
+      val (deleted, delCnt) = rounds.markN(
         supp.filter(col("support") < k - 2).select(col("a"), col("b")))
-      val delCnt = deleted.count()
       if (delCnt == 0) { rounds.release(deleted); fixpoint = true }
       else {
-        val keep = rounds.mark(supp.filter(col("support") >= k - 2))
-        val keepCnt = keep.count()
+        val (keep, keepCnt) = rounds.markN(
+          supp.filter(col("support") >= k - 2))
         // ADAPTIVE branch: incremental decrement costs ∝ the
         // cascade's wedge mass, full recompute ∝ the survivor set's.
         // A mass-extinction round (most edges below threshold — the
@@ -998,10 +961,11 @@ object Graph {
         // produce the survivor subgraph's exact support, so the
         // choice is invisible in the output (bit-identical either
         // way) and the round stays deterministic.
-        val next = if (delCnt > keepCnt) {
+        supp = if (delCnt > keepCnt) {
           // a projection over keep's checkpoint — edgeSupport's
           // scans all read the stored relation, no extra mark
-          edgeSupport(keep.select(col("a"), col("b")), rounds)
+          edgeSupport(keep.select(col("a"), col("b")))(
+            rounds.replace(supp, _))
         } else {
           // triangles of the PRE-deletion graph containing a deleted
           // edge: z is a common neighbor of both endpoints (the
@@ -1034,14 +998,12 @@ object Graph {
             .join(keep.select(col("a"), col("b")), Seq("a", "b"),
               "left_semi")
             .groupBy(col("a"), col("b")).agg(count(lit(1)).as("loss"))
-          rounds.mark(keep.join(loss, Seq("a", "b"), "left")
+          rounds.replace(supp, keep.join(loss, Seq("a", "b"), "left")
             .select(col("a"), col("b"),
               (col("support") - coalesce(col("loss"), lit(0L)))
                 .as("support")))
         }
         rounds.release(keep); rounds.release(deleted)
-        rounds.release(supp)
-        supp = next
         r += 1
       }
     }
@@ -1184,7 +1146,7 @@ object Graph {
     require(maxOuter >= 1, "maxOuter must be >= 1")
     require(maxPropRounds >= 1, "maxPropRounds must be >= 1")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "stronglyConnectedComponents")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // every emptiness/size probe below rides the count the mark
     // already runs (markN) — a separate .count()/.isEmpty costs one
@@ -1237,14 +1199,13 @@ object Graph {
           // anti-join on the TRIMMED side (not semi on keep): the
           // cascade is the small side, so AQE broadcasts it and the
           // edge relation streams map-side on thin cascades
-          val (nextE, nE) = rounds.markN(
+          val (nextE, nE) = rounds.replaceN(e,
             e.join(trimmed.select(col("id").as("src")), Seq("src"),
                 "left_anti")
               .join(trimmed.select(col("id").as("dst")), Seq("dst"),
                 "left_anti")
               .select(col("src"), col("dst")))
           layers += trimmed
-          rounds.release(e)
           e = nextE
           eN = nE
           tr += 1
@@ -1275,50 +1236,39 @@ object Graph {
         else Some(sq)
       }
       val squareAfter = 6
+      // one propagation loop's relation: once the loop is still
+      // running after `squareAfter` rounds it squares (while the cap
+      // allows), and the round after a squaring propagates from the
+      // full state — shortcuts can improve nodes a pruned frontier no
+      // longer covers
+      class Prop(var rel: DataFrame, pin: String, var owned: Boolean) {
+        private var canSquare = true
+        def source(state: DataFrame, frontier: DataFrame, t: Int): DataFrame =
+          if (!canSquare || t <= squareAfter) frontier
+          else squareOf(rel, pin) match {
+            case Some(sq) => close(); rel = sq; owned = true; state
+            case None => canSquare = false; frontier
+          }
+        def close(): Unit = if (owned) rel.unpersist(false)
+      }
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
-      // 1. COLOR — frontier-pruned min-reachable-id fixpoint over a
-      // propagation relation that squares when the loop drags
-      var color = rounds.mark(nodes.select(col("id"), col("id").as("c")))
-      var cFrontier = color
-      var cProp = eDst
-      var cOwned: DataFrame = null
-      var cCanSquare = true
-      var r = 0
-      var cDone = false
-      while (r < maxPropRounds && !cDone) {
-        val cand = cProp.join(cFrontier.select(col("id").as("dst"),
-            col("c").as("fc")), Seq("dst"))
-          .groupBy(col("src").as("id")).agg(min(col("fc")).as("cand"))
-        val (improved, nImp) = rounds.markN(cand.join(color, Seq("id"))
-          .filter(col("cand") < col("c"))
-          .select(col("id"), col("cand").as("c")))
-        if (nImp == 0) { rounds.release(improved); cDone = true }
-        else {
-          val merged = rounds.mark(color.join(
-              improved.withColumnRenamed("c", "nc"), Seq("id"), "left")
-            .select(col("id"), coalesce(col("nc"), col("c")).as("c")))
-          rounds.release(color)
-          if (cFrontier ne color) rounds.release(cFrontier)
-          color = merged
-          r += 1
-          if (cCanSquare && r >= squareAfter) {
-            squareOf(cProp, "dst") match {
-              case Some(sq) =>
-                if (cOwned ne null) cOwned.unpersist(false)
-                cOwned = sq; cProp = sq
-                // shortcuts can improve nodes a pruned frontier no
-                // longer covers — re-arm with a full-relation round
-                rounds.release(improved)
-                cFrontier = color
-              case None =>
-                cCanSquare = false
-                cFrontier = improved
-            }
-          } else cFrontier = improved
-        }
+      // 1. COLOR — frontier-pruned min-reachable-id fixpoint
+      val cProp = new Prop(eDst, "dst", owned = false)
+      val (color, cDone) = rounds.fixpoint(
+          nodes.select(col("id"), col("id").as("c")), maxPropRounds) {
+        (color, frontier, t) =>
+          val from = cProp.source(color, frontier, t)
+          cProp.rel.join(from.select(col("id").as("dst"),
+              col("c").as("fc")), Seq("dst"))
+            .groupBy(col("src").as("id")).agg(min(col("fc")).as("cand"))
+            .join(color, Seq("id"))
+            .filter(col("cand") < col("c"))
+            .select(col("id"), col("cand").as("c"))
+      } { (color, improved) =>
+        color.join(improved.withColumnRenamed("c", "nc"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("nc"), col("c")).as("c"))
       }
-      if (cFrontier ne color) rounds.release(cFrontier)
       require(cDone, s"color propagation did not converge within " +
         s"$maxPropRounds rounds — raise maxPropRounds (the graph's " +
         "min-label diameter exceeds the wall-time guard)")
@@ -1326,56 +1276,31 @@ object Graph {
       // flood relation inherits the color loop's squared relation
       // (re-pinned on src) and can square further on its own: flood
       // distance can exceed the min-label diameter
-      var fProp = eSrc
-      var fOwned: DataFrame = null
-      if (cOwned ne null) {
-        val s = cOwned.repartition(col("src")).persist(lvl)
-        s.count()
-        fOwned = s; fProp = s
-      }
-      var fCanSquare = true
-      var flood = rounds.mark(color.filter(col("id") === col("c")))
-      var fFrontier = flood
-      r = 0
-      var fDone = false
-      while (r < maxPropRounds && !fDone) {
-        val cand = fProp.join(fFrontier.select(col("id").as("src"),
-            col("c").as("fc")), Seq("src"))
-          .select(col("dst").as("id"), col("fc")).distinct()
-        val (fresh, nFresh) = rounds.markN(cand
-          .join(color.withColumnRenamed("c", "vc"), Seq("id"))
-          .filter(col("fc") === col("vc"))
-          .select(col("id"), col("vc").as("c"))
-          .join(flood, Seq("id"), "left_anti"))
-        if (nFresh == 0) { rounds.release(fresh); fDone = true }
-        else {
-          val merged = rounds.mark(flood.unionByName(fresh))
-          rounds.release(flood)
-          if (fFrontier ne flood) rounds.release(fFrontier)
-          flood = merged
-          r += 1
-          if (fCanSquare && r >= squareAfter) {
-            squareOf(fProp, "src") match {
-              case Some(sq) =>
-                if (fOwned ne null) fOwned.unpersist(false)
-                fOwned = sq; fProp = sq
-                rounds.release(fresh)
-                fFrontier = flood
-              case None =>
-                fCanSquare = false
-                fFrontier = fresh
-            }
-          } else fFrontier = fresh
-        }
-      }
-      if (fFrontier ne flood) rounds.release(fFrontier)
+      val fProp =
+        if (cProp.owned) {
+          val s = cProp.rel.repartition(col("src")).persist(lvl)
+          s.count()
+          new Prop(s, "src", owned = true)
+        } else new Prop(eSrc, "src", owned = false)
+      val (flood, fDone) = rounds.fixpoint(
+          color.filter(col("id") === col("c")), maxPropRounds) {
+        (flood, frontier, t) =>
+          val from = fProp.source(flood, frontier, t)
+          fProp.rel.join(from.select(col("id").as("src"),
+              col("c").as("fc")), Seq("src"))
+            .select(col("dst").as("id"), col("fc")).distinct()
+            .join(color.withColumnRenamed("c", "vc"), Seq("id"))
+            .filter(col("fc") === col("vc"))
+            .select(col("id"), col("vc").as("c"))
+            .join(flood, Seq("id"), "left_anti")
+      }(_ unionByName _)
       require(fDone, s"SCC flood did not converge within " +
         s"$maxPropRounds rounds — raise maxPropRounds (a partially " +
         "flooded SCC must never be peeled)")
       // 3. PEEL — emit flooded SCCs, drop their edges (nodes the
       // peel isolates are caught by the final missing-node sweep)
       val flaggedIds = flood.select(col("id"))
-      val (nextE, nE2) = rounds.markN(
+      val (nextE, nE2) = rounds.replaceN(e,
         e.join(flaggedIds.withColumnRenamed("id", "src"), Seq("src"),
             "left_anti")
           .join(flaggedIds.withColumnRenamed("id", "dst"), Seq("dst"),
@@ -1384,9 +1309,7 @@ object Graph {
       layers += flood
       rounds.release(color)
       eSrc.unpersist(false); eDst.unpersist(false)
-      if (cOwned ne null) cOwned.unpersist(false)
-      if (fOwned ne null) fOwned.unpersist(false)
-      rounds.release(e)
+      cProp.close(); fProp.close()
       e = nextE
       eN = nE2
       emptied = eN == 0
@@ -1558,7 +1481,7 @@ object Graph {
       p: Int, wantTrace: Boolean = true):
       (DataFrame, Vector[java.math.BigDecimal]) = {
     require(maxRadius >= 1, "maxRadius must be >= 1")
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "hyperBall")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val Array(cs, cd) = edges.columns.take(2)
     val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
@@ -1580,14 +1503,9 @@ object Graph {
         .head().getDecimal(0)
     val trace = Vector.newBuilder[java.math.BigDecimal]
     if (wantTrace) trace += nOf(cur)
-    // measurement hook (GraphScale): per-round frontier size + wall,
-    // the decay evidence for the frontier-pruned formulation
-    val traceRounds = sys.env.contains("SPARK_GRAFT_TRACE_ROUNDS")
     var t = 1
     var done = false
     while (t <= maxRadius && !done) {
-      val t0 = System.nanoTime()
-      val frontierN = if (traceRounds) changed.count() else -1L
       // shuffle_hash: both the frontier and the delta are stats-less
       // checkpoint derivations — sort-merge would re-sort the pinned
       // edge layout / the ball table (2^p-byte payload rows) per round
@@ -1596,29 +1514,32 @@ object Graph {
         .select(col("dst").as("id"), col("sk"))
       val delta = pulled.groupBy(col("id"))
         .agg(Hll.hllMerge(col("sk")).as("__dsk"))
-      val nxt = rounds.mark(cur.join(delta.hint("shuffle_hash"),
-          Seq("id"), "left")
-        .withColumn("__nsk", when(col("__dsk").isNull, col("sk"))
-          .otherwise(Hll.hllMerge2(col("sk"), col("__dsk"))))
-        .withColumn("__grew", col("__nsk") =!= col("sk"))
-        .withColumn("__nest", when(col("__grew"),
-          Hll.hllEstimate(col("__nsk"))).otherwise(col("est")))
-        .select(col("id"), col("__nsk").as("sk"), col("__nest").as("est"),
-          (col("harmonic") + when(col("__grew"),
-            greatest(col("__nest") - col("est"), lit(0.0)) /
-              lit(t.toDouble)).otherwise(lit(0.0))).as("harmonic"),
-          (col("sumd") + when(col("__grew"),
-            greatest(col("__nest") - col("est"), lit(0.0)) *
-              lit(t.toDouble)).otherwise(lit(0.0))).as("sumd"),
-          col("__grew")))
-      val nextChanged = nxt.filter(col("__grew")).select(col("id"), col("sk"))
-      val grewEmpty = nextChanged.isEmpty
-      if (traceRounds)
-        System.err.println(f"""{"hb_round":$t,"frontier":$frontierN,"sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-      if (grewEmpty) {
-        rounds.release(nxt); done = true
-      } else {
-        rounds.release(cur); cur = nxt; changed = nextChanged; t += 1
+      // one aggregate materializes the round and counts the grown
+      // balls (the next frontier); a round where nothing grew equals
+      // its input, so it replaces it all the same
+      val (nxt, (_, grew)) = rounds.replaceWith(cur,
+        cur.join(delta.hint("shuffle_hash"), Seq("id"), "left")
+          .withColumn("__nsk", when(col("__dsk").isNull, col("sk"))
+            .otherwise(Hll.hllMerge2(col("sk"), col("__dsk"))))
+          .withColumn("__grew", col("__nsk") =!= col("sk"))
+          .withColumn("__nest", when(col("__grew"),
+            Hll.hllEstimate(col("__nsk"))).otherwise(col("est")))
+          .select(col("id"), col("__nsk").as("sk"), col("__nest").as("est"),
+            (col("harmonic") + when(col("__grew"),
+              greatest(col("__nest") - col("est"), lit(0.0)) /
+                lit(t.toDouble)).otherwise(lit(0.0))).as("harmonic"),
+            (col("sumd") + when(col("__grew"),
+              greatest(col("__nest") - col("est"), lit(0.0)) *
+                lit(t.toDouble)).otherwise(lit(0.0))).as("sumd"),
+            col("__grew"))) { ck =>
+        val r = ck.agg(count(lit(1)), count(when(col("__grew"), 1))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      cur = nxt
+      if (grew == 0) done = true
+      else {
+        changed = cur.filter(col("__grew")).select(col("id"), col("sk"))
+        t += 1
         if (wantTrace) trace += nOf(cur)
       }
     }
@@ -1676,7 +1597,7 @@ object Graph {
   def sssp(edges: DataFrame, seeds: DataFrame, maxIter: Int = 50): DataFrame = {
     require(maxIter >= 0, "maxIter must be >= 0")
     val Array(cs, cd, cw) = edges.columns.take(3)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "sssp")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(cs).as("src"), col(cd).as("dst"),
         col(cw).cast("long").as("w"))
@@ -1691,35 +1612,23 @@ object Graph {
           .otherwise(col("w")).as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .repartition(col("src")).persist(lvl)
-    var dist = rounds.mark(seeds.select(col(seeds.columns.head).as("id"))
-      .distinct().withColumn("dist", lit(0L)))
-    var frontier = dist
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      // shuffle_hash: the bfs rationale — never re-sort the pinned
-      // edge layout for a frontier-sized probe
-      val cand = e.join(frontier.hint("shuffle_hash"),
-          e("src") === frontier("id"))
-        .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cand"))
-        .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-      val (improved, nImp) = rounds.markN(cand.join(dist, Seq("id"), "left")
-        .filter(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("id"), col("cand").as("dist")))
-      if (nImp == 0) { rounds.release(improved); converged = true }
-      else {
-        val merged = rounds.mark(
-          dist.join(improved.withColumnRenamed("dist", "nd"), Seq("id"),
-              "full_outer")
-            .select(col("id"), coalesce(col("nd"), col("dist")).as("dist")))
-        rounds.release(dist)
-        if (frontier ne dist) rounds.release(frontier)
-        dist = merged
-        frontier = improved
-        it += 1
-      }
+    val (dist, _) = rounds.fixpoint(
+        seeds.select(col(seeds.columns.head).as("id"))
+          .distinct().withColumn("dist", lit(0L)), maxIter) {
+      (dist, frontier, _) =>
+        // shuffle_hash: the bfs rationale — never re-sort the pinned
+        // edge layout for a frontier-sized probe
+        e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
+          .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cand"))
+          .groupBy(col("id")).agg(min(col("cand")).as("cand"))
+          .join(dist, Seq("id"), "left")
+          .filter(col("dist").isNull || col("cand") < col("dist"))
+          .select(col("id"), col("cand").as("dist"))
+    } { (dist, improved) =>
+      dist.join(improved.withColumnRenamed("dist", "nd"), Seq("id"),
+          "full_outer")
+        .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
     }
-    if (frontier ne dist) rounds.release(frontier)
     e.unpersist(false)
     dist
   }
@@ -1784,7 +1693,7 @@ object Graph {
       s"walksPerNode must be >= 1, got $walksPerNode")
     import org.apache.spark.sql.expressions.Window
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "randomWalks")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
     val w = Window.partitionBy(col("src"))
@@ -1798,24 +1707,42 @@ object Graph {
       col("adjr.rk") === pmod(shiftrightunsigned(
         Sampling.splitmix64(col("wh").bitwiseXOR(lit(t.toLong))), 32),
         col("adjr.deg"))
-    val res = walkCorpus(e, adj, walkLength, walksPerNode, seed,
-      rounds, pick)
+    val res = walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
+      rounds)(firstOrderStep(adj, pick))
     adj.unpersist(false)
     res
   }
 
-  /** The shared walk loop behind [[randomWalks]] and
-    * [[randomWalksWeighted]]: init (start, walk) × starts, then per
-    * step ONE src-keyed join of the walk-set against the pinned
-    * adjacency `adj` (aliased `adjr`), the face-specific `residual`
-    * predicate choosing exactly one neighbor row per live walk.
+  /** The walk set at step 0: (start, w, id = start, wh) for every node
+    * with an out-edge, `wh` the walk's private hash-stream key
+    * splitmix64(splitmix64(seed XOR start) XOR w).
     */
-  private def walkCorpus(e: DataFrame, adj: DataFrame, walkLength: Int,
-      walksPerNode: Int, seed: Long, rounds: Rounds,
-      residual: Int => Column): DataFrame = {
-    val wh = Sampling.splitmix64(
-      Sampling.splitmix64(lit(seed).bitwiseXOR(col("start")))
-        .bitwiseXOR(col("w")))
+  private def walkStarts(e: DataFrame, walksPerNode: Int,
+      seed: Long): DataFrame =
+    e.select(col("src").as("start")).distinct()
+      .select(col("start"), explode(sequence(lit(0L),
+        lit(walksPerNode - 1L))).as("w"))
+      .select(col("start"), col("w"), col("start").as("id"),
+        Sampling.splitmix64(
+          Sampling.splitmix64(lit(seed).bitwiseXOR(col("start")))
+            .bitwiseXOR(col("w"))).as("wh"))
+
+  /** One first-order step of [[randomWalks]]/[[randomWalksWeighted]]:
+    * ONE src-keyed join of the walk set against the pinned adjacency
+    * `adj` (aliased `adjr`), the face-specific `residual` predicate
+    * choosing exactly one neighbor row per live walk.
+    */
+  private def firstOrderStep(adj: DataFrame, residual: Int => Column)(
+      cur: DataFrame, t: Int): DataFrame =
+    cur.join(adj.as("adjr"), col("id") === col("adjr.src") && residual(t))
+      .select(col("start"), col("w"), col("adjr.dst").as("id"), col("wh"))
+
+  /** The shared walk loop behind every walk corpus: from the `init`
+    * walk set, `step(walkSet, t)` for t = 1..walkLength until no walk
+    * is left, then the union of all steps as (start, walk, step, id).
+    */
+  private def walkCorpus(init: DataFrame, walkLength: Int,
+      rounds: Rounds)(step: (DataFrame, Int) => DataFrame): DataFrame = {
     // ONE checkpoint per step: the per-step output rows are a pure
     // projection of that step's walk-set checkpoint, so a second
     // "outs" mark per step (a full second materialization job +
@@ -1823,20 +1750,11 @@ object Graph {
     // alive until the final union reads them, exactly the peak
     // storage the old outs copies already paid. Emptiness rides the
     // count the mark already runs (markN), not a per-step isEmpty job.
-    var (cur, curN) = rounds.markN(
-      e.select(col("src").as("start")).distinct()
-        .select(col("start"), explode(sequence(lit(0L),
-          lit(walksPerNode - 1L))).as("w"))
-        .select(col("start"), col("w"), col("start").as("id"), wh.as("wh")))
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    steps += cur
+    var (cur, curN) = rounds.markN(init)
+    val steps = scala.collection.mutable.ArrayBuffer(cur)
     var t = 1
     while (t <= walkLength && curN > 0) {
-      val (nxt, n) = rounds.markN(
-        cur.join(adj.as("adjr"),
-            col("id") === col("adjr.src") && residual(t))
-          .select(col("start"), col("w"), col("adjr.dst").as("id"),
-            col("wh")))
+      val (nxt, n) = rounds.markN(step(cur, t))
       steps += nxt
       cur = nxt
       curN = n
@@ -1885,7 +1803,7 @@ object Graph {
       s"walksPerNode must be >= 1, got $walksPerNode")
     import org.apache.spark.sql.expressions.Window
     val Array(cs, cd, cw) = edges.columns.take(3)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "randomWalksWeighted")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
     // Cumulative-interval sums in decimal(38,0), NOT raw LONG: long
@@ -1934,8 +1852,8 @@ object Graph {
         lit(4294967296L).cast(dec38))
       x >= col("adjr.lo").cast(dec38) && x < col("adjr.hi").cast(dec38)
     }
-    val res = walkCorpus(e.select(col("src"), col("dst")), adj,
-      walkLength, walksPerNode, seed, rounds, pick)
+    val res = walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
+      rounds)(firstOrderStep(adj, pick))
     adj.unpersist(false)
     res
   }
@@ -2042,7 +1960,7 @@ object Graph {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     require(unit >= 1L, s"unit must be >= 1, got $unit")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "betweenness")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
     val e = edges.select(col(cs).as("src"), col(cd).as("dst"))
@@ -2118,17 +2036,16 @@ object Graph {
       BigDecimal(Long.MaxValue)
     val zeroDelta = if (useLong) lit(0L) else lit(0L).cast(dec38)
     def sigmaOut(c: Column): Column = if (useLong) c.cast("long") else c
-    // BACKWARD: deepest layer's delta = 0, walk up accumulating;
-    // every delta frame stays checkpointed until the final union
-    // (frames at depth >= 1 ARE the betweenness contributions)
-    var succ = rounds.mark(layers.last
+    // BACKWARD: deepest layer's delta = 0, walk up accumulating; the
+    // delta frames at depth >= 1 ARE the betweenness contributions and
+    // stay checkpointed until the final union (the seeds' own depth-0
+    // frame contributes nothing, so it is never built)
+    val contribs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    if (layers.size > 1) contribs += rounds.mark(layers.last
       .select(col("s"), col("id"), sigmaOut(col("sigma")).as("sigma"))
       .withColumn("delta", zeroDelta))
-    val deltaFrames = scala.collection.mutable.ArrayBuffer(succ)
-    val contribs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (layers.size > 1) contribs += succ
-    var t = layers.size - 2
-    while (t >= 0) {
+    for (t <- layers.size - 2 to 1 by -1) {
+      val succ = contribs.last
       val termCol =
         if (useLong)
           expr(s"(CAST(sigma AS BIGINT) * (${unit}L + dw)) DIV sw")
@@ -2142,14 +2059,10 @@ object Graph {
         .groupBy(col("s"), col("src").as("id"))
         .agg((if (useLong) sum(termCol)
           else guard(sum(termCol).cast(dec38), "delta")).as("delta"))
-      val dt = rounds.mark(layers(t)
+      contribs += rounds.mark(layers(t)
         .join(terms, Seq("s", "id"), "left")
         .select(col("s"), col("id"), sigmaOut(col("sigma")).as("sigma"),
           coalesce(col("delta"), zeroDelta).as("delta")))
-      deltaFrames += dt
-      succ = dt
-      if (t >= 1) contribs += dt
-      t -= 1
     }
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -2167,7 +2080,7 @@ object Graph {
       .select(col("id"),
         coalesce(col("btw"), lit(0L).cast(dec38)).as("btw"))
     val res = rounds.mark(out)
-    deltaFrames.foreach(rounds.release)
+    contribs.foreach(rounds.release)
     layers.foreach(rounds.release)
     e.unpersist(false)
     res
@@ -2309,7 +2222,7 @@ object Graph {
       "bias weights must be >= 0")
     import org.apache.spark.sql.expressions.Window
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges)
+    val rounds = new Rounds(edges, "randomWalksBiased")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
     val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
@@ -2320,22 +2233,12 @@ object Graph {
     val em = adj.select(col("src").as("pv"), col("dst").as("emcd"),
       lit(1L).as("common"))
     adj.count()
-    val whc = Sampling.splitmix64(
-      Sampling.splitmix64(lit(seed).bitwiseXOR(col("start")))
-        .bitwiseXOR(col("w")))
-    // single checkpoint per step + markN emptiness — the walkCorpus
-    // posture (see [[randomWalks]]): per-step outputs are projections
-    // of the step checkpoints, which live until the final union
-    var (cur, curN) = rounds.markN(
-      e.select(col("src").as("start")).distinct()
-        .select(col("start"), explode(sequence(lit(0L),
-          lit(walksPerNode - 1L))).as("w"))
-        .select(col("start"), col("w"), col("start").as("id"),
-          lit(null).cast("long").as("prev"), whc.as("wh")))
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    steps += cur
-    var t = 1
-    while (t <= walkLength && curN > 0) {
+    // the walkCorpus loop (see [[randomWalks]]); step 0 carries no
+    // previous node
+    val init = walkStarts(e, walksPerNode, seed)
+      .select(col("start"), col("w"), col("id"),
+        lit(null).cast("long").as("prev"), col("wh"))
+    val res = walkCorpus(init, walkLength, rounds) { (cur, t) =>
       val cand = cur.join(adj.as("adjr"), col("id") === col("adjr.src"))
         .select(col("start"), col("w"), col("wh"), col("prev"),
           col("id").as("cv"), col("adjr.dst").as("cd"))
@@ -2363,7 +2266,7 @@ object Graph {
       // positive post-filter, so a null total ⇔ overflow, and the
       // prefix hi is bounded by it.
       val totRaw = sum(col("cw").cast(dec38)).over(win)
-      val (nxt, n) = rounds.markN(cand
+      cand
         .withColumn("tot", when(totRaw.isNull, raise_error(concat(
             lit("randomWalksBiased: per-step candidate weight total "),
             lit("overflowed decimal(38,0) at walk ("), col("start"),
@@ -2374,18 +2277,8 @@ object Graph {
         .withColumn("lo", col("hi") - col("cw").cast(dec38))
         .filter(x >= col("lo").cast(dec38) && x < col("hi").cast(dec38))
         .select(col("start"), col("w"), col("cd").as("id"),
-          col("cv").as("prev"), col("wh")))
-      steps += nxt
-      cur = nxt
-      curN = n
-      t += 1
+          col("cv").as("prev"), col("wh"))
     }
-    val res = rounds.mark(steps.zipWithIndex.map { case (df, i) =>
-        df.select(col("start"), col("w"), lit(i.toLong).as("step"),
-          col("id"))
-      }.reduce(_ unionByName _)
-      .select(col("start"), col("w").as("walk"), col("step"), col("id")))
-    steps.foreach(rounds.release)
     adj.unpersist(false)
     res
   }

@@ -1557,17 +1557,73 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponents uses reliable checkpoints when a dir is set") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+  test("Rounds operators: reliable checkpoints match local, superseded rounds freed") {
+    import graft.functions.{Events, Graph}
+    import org.apache.spark.sql.DataFrame
+    import scala.jdk.CollectionConverters._
+    // a triangle with a tail: every operator runs a few rounds
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val wg = g.withColumn("w", col("src") + col("dst"))
+    val seeds = Seq(1L).toDF("id")
+    val ev = Seq((1L, 1L, "a"), (1L, 2L, "b"), (1L, 3L, "c"), (2L, 1L, "a"),
+      (2L, 5L, "c"), (3L, 2L, "b")).toDF("user", "us", "type")
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "cc" -> (() => Dedup.connectedComponents(g)),
+      "sssp" -> (() => Graph.sssp(wg, seeds)),
+      "bfs" -> (() => Graph.bfsDistance(g, seeds, 5)),
+      "hits" -> (() => Graph.hits(g, 1)),
+      "kcore" -> (() => Graph.kcore(g, 2, 5)),
+      "ktruss" -> (() => Graph.ktruss(g, 3, 5)),
+      "scc" -> (() => Graph.stronglyConnectedComponents(g)),
+      "betweenness" -> (() => Graph.betweenness(g, seeds)),
+      "funnel" -> (() => Events.funnel(ev, "user", "us", "type",
+        Seq("a", "b", "c"))))
+    def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    // the checkpoint files a result's plan reads through
+    def readFiles(df: DataFrame): Set[String] =
+      df.queryExecution.logical.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
+      }.flatten.map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath).toSet
+    // the cases are independent: run them concurrently (each is a
+    // chain of small driver-bound jobs) to keep the spec short
+    def all[A](f: (() => DataFrame) => A): Seq[A] = {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      Await.result(Future.sequence(cases.map(c => Future(f(c._2)))),
+        scala.concurrent.duration.Duration(5, "min"))
+    }
+    val local = all(run => rowsOf(run()))
+    val dir = java.nio.file.Files.createTempDirectory("rounds-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
     try {
-      val got = ccOf(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // reliable checkpoint data actually landed on storage
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0)
+      val res = all(run => run())
+      val kept = java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-"))
+        .map(_.toFile.getCanonicalPath).toSet
+      for (((name, _), r) <- cases.zip(res))
+        assert(readFiles(r).nonEmpty, s"$name: result reads no reliable checkpoint")
+      val read = res.flatMap(readFiles).toSet
+      assert(read.subsetOf(kept))
+      assert((kept -- read).isEmpty,
+        s"round files left behind: ${(kept -- read).toSeq.sorted}")
+      for ((((name, _), r), l) <- cases.zip(res).zip(local))
+        assert(rowsOf(r) === l, s"$name: reliable result differs")
     } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("only Rounds.scala decides the checkpoint policy") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val calls = "localCheckpoint\\(|\\.checkpoint\\(|getCheckpointFile".r
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString)
+      .filterNot(f => f == "functions/Rounds.scala" || f.startsWith("tools/"))
+      .filter(f => calls.findFirstIn(new String(
+        java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")).isDefined)
+      .toSeq.sorted
+    assert(offenders.isEmpty, s"checkpoint calls outside Rounds: $offenders")
   }
 
   test("connectedComponents: empty pair set yields empty mapping") {

@@ -601,6 +601,37 @@ class GraphSpec extends SparkSpec {
     assert(truss(strip, 4, rounds = 0).count(_._3 == 2L) === 3)
   }
 
+  test("ktruss: each peel round counts its relations once, inside their marks") {
+    // the strip cascade at k=4 runs two peel rounds and a fixpoint
+    // test; each round's deleted/keep sizes come from the counts their
+    // checkpoints already run, so no extra count jobs re-scan them
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val strip = (0L to 4L).map(i => (i, i + 1)) ++
+      (0L to 3L).map(i => (i, i + 2))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val edges = strip.toDF("src", "dst")
+    spark.sparkContext.addSparkListener(l)
+    val n = try {
+      val got = Graph.ktruss(edges, k = 4, maxRounds = 20).count()
+      // listener bus is async: settle until no new jobs arrive
+      var last = -1
+      val deadline = System.currentTimeMillis() + 15000
+      while (System.currentTimeMillis() < deadline && jobs.get != last) {
+        last = jobs.get; Thread.sleep(500)
+      }
+      got
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(n === 0L)
+    // 54 jobs on this session (AQE map stages included); a count()
+    // re-run on a round's checkpoint costs 2 more jobs each
+    assert(jobs.get <= 54, s"ktruss ran ${jobs.get} jobs, expected <= 54")
+  }
+
   test("ktruss: messy edges canonicalize; truss sits inside the core") {
     val messy = Seq((2L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 1L),
       (3L, 4L), (4L, 1L), (4L, 3L))
