@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -9,55 +9,64 @@ import org.apache.spark.sql.SparkSession
   * codegen startup is not billed to the first query.
   */
 object Bench {
+  /** One gate's rep times in run order, and their median. */
+  final case class Timed(name: String, median: Double, reps: Seq[Double])
+
+  /** The measuring loop. Each query runs `reps` times and reports the
+    * median, so a one-off GC pause or compilation stall can't masquerade
+    * as a regression (single-run numbers bounced ±45% between rounds
+    * with no code change). Every rep is followed by the untimed
+    * [[Session.release]]; its GC seconds are summed into the third
+    * result. The per-rep GC is the measured best policy (r11 A/B on the
+    * 12 formerly-flagged queries, sf0.1/local[32]: 37.7 s total vs 46.3
+    * GC'ing once per query vs 49.3 without, and 0 unstable flags; the
+    * allocation-heavy graph gates ran 1.6-2.1× faster on the heap it
+    * keeps clean). A query that throws is listed in the second result
+    * and has no time: its short rep would otherwise read as a speedup.
+    */
+  def measure(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int): (Seq[Timed], Seq[String], Double) = {
+    var gcSecs = 0.0
+    val failed = Seq.newBuilder[String]
+    val timed = queries.flatMap { case (name, fn) =>
+      val times = Seq.newBuilder[Double]
+      var ok = true
+      var rep = 0
+      while (ok && rep < reps) {
+        rep += 1
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          ok = false
+        }
+        gcSecs += Session.release(spark)
+      }
+      if (!ok) { failed += name; None }
+      else {
+        val ts = times.result()
+        Some(Timed(name, ts.sorted.apply(ts.length / 2), ts))
+      }
+    }
+    (timed, failed.result(), gcSecs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopK.FallbackConf,
-        graft.functions.TopK.RequiredFallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
 
     // Warm up: JVM, codegen, parquet footers.
     SparkEntry.queries.get("q1_agg").foreach { q =>
       q(spark, sfDir).write.format("noop").mode("overwrite").save()
     }
 
-    // Each query runs `reps` times and reports the median, so a one-off
-    // GC pause or compilation stall can't masquerade as a regression
-    // (single-run numbers bounced ±45% between rounds with no code
-    // change). SPARK_GRAFT_REPS=1 keeps long large-SF runs affordable.
+    // SPARK_GRAFT_REPS=1 keeps long large-SF runs affordable.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // Optional comma-separated query filter for iterating on one gate.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // GC policy between measurements. The cache/RDD release above is
-    // non-negotiable (it is a CORRECTNESS condition on the timings);
-    // the explicit GC that drives ContextCleaner is a measured trade
-    // (r11 A/B on the 12 formerly-flagged queries, sf0.1/local[32]):
-    // per-rep ("rep") costs 4.5 cumulative untimed seconds over 36
-    // collections and is BOTH fastest (37.7 s total vs 46.3
-    // per-query vs 49.3 off) and stablest (0 unstable flags) — the
-    // allocation-heavy graph gates run 1.6-2.1× faster on the heap
-    // it keeps clean (clustering 7.8 s vs 16.6 s with GC off), so
-    // the r10 suspicion that the per-rep GC bled into timed reps is
-    // REFUTED. "query" GCs once per query, "off" leaves reclamation
-    // organic (r10: broadcast-heavy queries degraded 10-60× late in
-    // a 198-gate run). The JSON carries gc_policy + cumulative
-    // untimed-GC seconds so every record self-documents.
-    val gcPolicy = sys.env.getOrElse("SPARK_GRAFT_GC", "rep")
-    require(Set("rep", "query", "off")(gcPolicy),
-      s"SPARK_GRAFT_GC must be rep|query|off, got $gcPolicy")
-    var gcSecs = 0.0
-    def timedGc(): Unit = {
-      val g0 = System.nanoTime()
-      System.gc()
-      gcSecs += (System.nanoTime() - g0) / 1e9
-    }
 
     // Machine-load context: a polluted run (another JVM hogging cores)
     // is self-diagnosing when the JSON carries the host's loadavg
@@ -70,60 +79,28 @@ object Bench {
       catch { case _: Throwable => Seq.empty }
     val loadStart = loadavg
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Untimed: drop relations the query cached (Dedup pins shingle/
-        // signature relations for its intra-query self-joins). Without
-        // this, CacheManager plan-matching lets reps 2..n skip the work
-        // rep 1 cached (warm-cache medians), and ~15 pinned relations
-        // accumulate across the run, GC-taxing every later query
-        // (q_redistribute measured 1.76 s mid-run vs 0.57 s isolated).
-        spark.catalog.clearCache()
-        // ...and RDD-level blocks: the eagerly-checkpointed operators
-        // (graph/funnel Rounds lifecycle) hand their FINAL round's
-        // localCheckpoint blocks to the caller by contract — between
-        // bench queries nobody references them, and clearCache() only
-        // touches the SQL cache, so without this they accumulate
-        // across 198×reps executions until storage + GC pressure
-        // degrades every later query (measured: q_corr reps
-        // [29, 66, 316] s under the leak vs stable seconds clean).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // ...and (policy-gated) force a GC so ContextCleaner's weak
-        // references get processed: broadcasts and shuffle state are
-        // reclaimed only after their refs are collected, and on a
-        // large heap GC can go quiet for dozens of queries while that
-        // backlog bloats the block manager and MapOutputTracker
-        // (measured: the 198-query run under a pre-sized 48g heap
-        // degraded broadcast-heavy queries 10-60x late in the run).
-        if (gcPolicy == "rep") timedGc()
-        dt
-      }
-      if (gcPolicy == "query") timedGc()
-      (name, times.sorted.apply(times.length / 2), times)
-    }
+    val (results, failed, gcSecs) = measure(spark, sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (n, _) => only.forall(_.contains(n)) }, reps)
     val loadEnd = loadavg
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
+    val qs = results.map(r => "\"" + r.name + "\":" + r.median)
       .mkString("{", ",", "}")
     // Per-rep raw times in run order (unsorted): the evidence trail
     // behind each median.
-    val raw = results.map { case (k, _, ts) =>
-      "\"" + k + "\":[" + ts.map(t => f"$t%.4f").mkString(",") + "]"
+    val raw = results.map { r =>
+      "\"" + r.name + "\":[" + r.reps.map(t => f"$t%.4f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     // Any query whose rep spread (max/min) exceeds 3x was measured
     // under interference — its median is suspect.
     val unstable = results.collect {
-      case (k, _, ts) if ts.min > 0 && ts.max / ts.min > 3.0 => "\"" + k + "\""
+      case r if r.reps.min > 0 && r.reps.max / r.reps.min > 3.0 => "\"" + r.name + "\""
     }.mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val loadJson = (l: Seq[Double]) => l.map(v => f"$v%.2f").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"reps_raw":$raw,"unstable":$unstable,"gc_policy":"$gcPolicy","gc_secs":${f"$gcSecs%.2f"},"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"sf":"$sfDir"}"""
+    val total = results.map(_.median).sum
+    // gc_policy stays in the record (always "rep") so old and new
+    // records parse alike.
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"reps_raw":$raw,"unstable":$unstable,"failed":$failedJson,"gc_policy":"rep","gc_secs":${f"$gcSecs%.2f"},"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadEnd)},"sf":"$sfDir"}"""
     // Stop Spark BEFORE printing so the JSON is the final stdout line
     // (Spark logs go to stderr, but shutdown ordering makes this robust);
     // also persist to a file in case stdout is decorated by the launcher.
@@ -139,8 +116,8 @@ object Bench {
     // line-oriented bounded capture keeps as many whole records as it
     // has room for. The numbers are identical to the `queries` map in
     // the full record; nothing is timed differently.
-    results.foreach { case (k, v, _) =>
-      println(f"""{"metric":"query","name":"$k","sec":$v%.4f}""")
+    results.foreach { r =>
+      println(f"""{"metric":"query","name":"${r.name}","sec":${r.median}%.4f}""")
     }
     // Compact summary as the FINAL stdout line (<120 bytes): always
     // survives whole. build.sbt sets showSuccess/showTiming := false

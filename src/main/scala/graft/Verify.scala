@@ -1,27 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
-    // optional 3rd arg: comma-separated query names, for single-gate
-    // iteration (the dumped oracle json still carries every query;
-    // tools/check.py only compares dirs that exist)
+    // optional 3rd arg: comma-separated query names, for iterating on a
+    // few gates. The oracle json then carries only those gates, so
+    // tools/check.py compares exactly them (it reports every oracle
+    // entry without an output dir, a selected gate that threw included,
+    // as a FAIL).
     val keep: String => Boolean =
       only.headOption.map(_.split(',').toSet).map(s => s.contains(_: String))
         .getOrElse(_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.functions.TopK.FallbackConf,
-        graft.functions.TopK.RequiredFallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -29,16 +21,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Drop per-query cached relations (see Bench) so the queries'
-      // pinned caches don't accumulate memory pressure across the run —
-      // including RDD-level localCheckpoint blocks the eager round
-      // lifecycle hands to callers (clearCache only drops SQL cache).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // drive ContextCleaner (weak-ref-based) so broadcast/shuffle
-      // backlog from completed queries is reclaimed — see Bench
-      System.gc()
+      Session.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -52,7 +35,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -957,7 +957,8 @@ object Dedup {
     // is read by THREE independent consumers (the MinHash signature
     // build, the decontamination re-shingle, the final anti-join) —
     // without materialization each re-runs the whole scan (r16
-    // JobProbe: 21 task-sec, mostly the repeated scrub). Eager
+    // job probe, now tools/Probe: 21 task-sec, mostly the repeated scrub).
+    // Eager
     // checkpoints (the graph-family [[Rounds]] lifecycle) run the scan
     // ONCE; the kept checkpoint is released as soon as uniq
     // supersedes it, and uniq's blocks follow the result's lifetime
@@ -1083,7 +1084,8 @@ object Dedup {
     *
     * Block-count trade-off — MEASURED at three decades (50k docs /
     * round 4; 500k / round 6 sf10; 5,000,000 / round 7 sf100 with
-    * per-m candidate counts from `tools/SimhashProbe`):
+    * per-m candidate counts from `tools/SimhashProbe`, probe removed;
+    * source at `9a1e704`):
     *
     *   - 50k docs: m=8 4.8 s < m=9 5.4 s < m=10 (~3× worse)
     *   - 500k docs: m=8 sub-linear (2.2×/decade), still the winner
@@ -1188,7 +1190,8 @@ object Dedup {
     * pairs — the row the quadratic metric previously skipped); the
     * gap is asymptotic in document LENGTH, not corpus size — at
     * 800/3200-char docs the band wins 1.6×/60× per pair
-    * (tools/LevProbe), which is the regime real web documents live
+    * (tools/LevProbe, probe removed; source at `9a1e704`), which is the
+    * regime real web documents live
     * in. Below the bound the banded distance IS the full metric
     * (spec-pinned), so swapping the default changes no kept row.
     *

@@ -22,12 +22,14 @@ import graft.functions.Bloom
   * the build side carries a selective FILTER PREDICATE in the same
   * plan, Spark 4's `runtime.bloomFilter` injection already builds and
   * pushes the filter below the probe exchange, and a hand prefilter
-  * only adds cost (tools/RfProbe, SCALE.md "a refuted hypothesis" —
+  * only adds cost (tools/RfProbe, probe removed; source at `9a1e704`;
+  * SCALE.md "a refuted hypothesis" —
   * don't use this operator there). Injection never fires when the
   * build side's selectivity is NOT a predicate the optimizer can see:
   * an aggregated/distinct build, a loaded allowlist relation, a
   * persisted/checkpointed branch, or a filter built in ANOTHER JOB.
-  * tools/BloomProbe measures exactly that shape at stock defaults
+  * tools/BloomProbe (probe removed; source at `9a1e704`) measured exactly
+  * that shape at stock defaults
   * (runtime filters ON): the plain join's probe exchange is uncut,
   * this operator cuts it 6×. The sketch is the mergeable [[Bloom]]
   * column, so one filter (or an OR-merge of per-shard filters) can
@@ -61,7 +63,8 @@ object BloomJoin {
     * — but its generated filter re-extracts the sketch bytes from the
     * joined row per probe row, a filter-sized memcpy per row that
     * measured 12× slower than the plain join it was supposed to beat
-    * (tools/BloomProbe caught it). Build sides past ~100M keys should
+    * (tools/BloomProbe caught it; probe removed; source at `9a1e704`).
+    * Build sides past ~100M keys should
     * raise `fpp` or pass a capped `expectedKeys`.
     */
   def reduceByBloom(probe: DataFrame, build: DataFrame, keys: Seq[String],

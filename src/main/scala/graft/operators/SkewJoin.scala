@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Salted equi-join for hot-key fact⋈dim joins — the join-side skew
-  * fix for the case AQE cannot handle (MEASURED, tools/SkewProbe at
+  * fix for the case AQE cannot handle (MEASURED, tools/SkewProbe, probe
+  * removed; source at `9a1e704`, at
   * 100M fact rows with one key owning 40%): a skewed join FEEDING A
   * SAME-KEY AGGREGATION defeats `OptimizeSkewedJoin` — splitting the
   * hot partition would violate the aggregation's required

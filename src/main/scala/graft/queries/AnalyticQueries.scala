@@ -305,7 +305,8 @@ object AnalyticQueries {
 
     // salted equi-join: the hot-key fix for join→same-key-agg
     // pipelines, where AQE skew-join declines to split (measured,
-    // tools/SkewProbe: 2.1× at 100M rows/40% hot key). Salting is
+    // tools/SkewProbe, probe removed; source at `9a1e704`: 2.1× at 100M
+    // rows/40% hot key). Salting is
     // invisible in the OUTPUT — the oracle is the plain join — so the
     // gate pins row-identity of the rewrite, integer-exact
     "q_skew_join" -> { (s, dir) =>

@@ -36,19 +36,9 @@ object Run {
     }
     // under spark-submit the master comes from the submit command; when
     // launched directly (dev), default to all local cores
-    val spark = SparkSession.builder()
-      .appName(s"graft:$clsName")
-      .master(sys.env.getOrElse("GRAFT_MASTER",
-        sys.props.getOrElse("spark.master", "local[*]")))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the ANN rankers' map-side top-k must stay hash-based past
-      // Spark's 128-keys/task default (TopK.ensureHashAggCapacity
-      // also raises it lazily, but the session default documents it)
-      .config(graft.functions.TopK.FallbackConf,
-        graft.functions.TopK.RequiredFallbackThreshold.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.start(
+      sys.env.getOrElse("GRAFT_MASTER", sys.props.getOrElse("spark.master", "local[*]")),
+      "spark.app.name" -> s"graft:$clsName")
     val flow = Class.forName(clsName).getDeclaredConstructor().newInstance().asInstanceOf[GraftFlow]
     val result = flow.build(spark, args)
     // Dataflow API server, enabled exactly like the reference runner

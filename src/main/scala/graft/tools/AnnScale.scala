@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.Similarity
 
 /** Measures the ANN scale knobs at a given SF dir: the gate-pinned
@@ -16,12 +15,8 @@ object AnnScale {
     // brute-force truth is quadratic in the corpus — prohibitive at
     // sf10 when only the PQ load point is needed)
     val pqOnly = args.length > 1 && args(1) == "pq"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(32)
     println("ANNPID " + ProcessHandle.current().pid())
-    spark.sparkContext.setLogLevel("WARN")
     val emb = graft.Tables.load(spark, dir, "embeddings")
     println(s"corpus ${emb.count()} vectors @ $dir")
     def t(name: String)(f: => org.apache.spark.sql.DataFrame): Unit = {

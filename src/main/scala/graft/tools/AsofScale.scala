@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{AsofJoin, RangeJoin}
@@ -21,13 +21,7 @@ object AsofScale {
     // the BNLJ comparison is O(|L|*|R|) — separately skippable at SFs
     // where it would run for hours
     val rangeNaive = naive && sys.env.getOrElse("SPARK_GRAFT_RANGE_NAIVE", "1") == "1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
 
     val ev = Tables.load(spark, sfDir, "events")
     val clicks = ev.filter(col("event_type") === "click")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, concat, lit}
 import graft.functions.Dedup
 
@@ -19,14 +19,7 @@ import graft.functions.Dedup
 object CapScale {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/repo/data/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(32))
 
     val docs = graft.Tables.load(spark, dir, "documents")
     val n = docs.count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale/stress harness for Dedup.connectedComponents: build a
@@ -22,14 +21,9 @@ object CcScale {
   def main(args: Array[String]): Unit = {
     val nEdges = if (args.length > 0) args(0).toLong else 1000000L
     val shape = if (args.length > 1) args(1) else "random"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus(32)
+    val spark = graft.Session.local(cpus, "spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
 
     val edges = shape match {
       case "chain" =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.connectors.Testing
 import graft.streaming.StreamingDedup
@@ -27,31 +26,24 @@ object DedupStreamBench {
     val batchSize = if (args.length > 1) args(1).toInt else 500
     val cap = if (args.length > 2) args(2).toInt else 128
     val mode = if (args.length > 3) args(3) else "corpus"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    val spark = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val cpus = graft.Session.cpus(32)
+    val spark = graft.Session.local(cpus, sys.env.get("SPARK_GRAFT_LOCAL_DIR")
+      .map("spark.local.dir" -> _).toSeq ++ Seq(
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+      "spark.sql.streaming.stateStore.providerClass" ->
         sys.env.getOrElse("SPARK_GRAFT_STREAM_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       // changelog checkpointing: commit uploads the batch's delta, not
       // a full RocksDB snapshot — the production setting for any
       // high-frequency trigger (pairs with the ListState append path:
       // an arrival is one merge record in the changelog)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "true"))
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "true"),
       // per-put row counting forces a RocksDB read-before-write on every
       // ListState append; the operator never reads the row count
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_TRACKROWS", "false"))
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
+        sys.env.getOrElse("SPARK_GRAFT_STREAM_TRACKROWS", "false"),
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"): _*)
     import spark.implicits._
 
     val docs =
@@ -65,7 +57,7 @@ object DedupStreamBench {
     val threshold = if (mode == "hot") 1.01 else 0.5
 
     val src = Testing.testingSource[(Long, String)](spark,
-      numPartitions = Some(cpus.toInt))
+      numPartitions = Some(cpus))
     // mode `assets`: the dhash signature operator instead of minhash —
     // same harness, same corpus bytes as blobs
     val out =

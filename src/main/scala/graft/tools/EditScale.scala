@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{CacheScope, Dedup}
@@ -21,13 +20,7 @@ object EditScale {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runFull = sys.env.getOrElse("SPARK_GRAFT_EDIT_FULL", "1") == "1"
     val maxEdit = sys.env.getOrElse("SPARK_GRAFT_MAX_EDIT", "32").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
 
     val docs = Tables.load(spark, sfDir, "documents")
     val scope = new CacheScope

@@ -1,20 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract smoke: run `SparkEntry.entry` (flagship query,
   * pinned to sf0.001 inside entry itself) and print the row count —
   * the driver checks rows > 0.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val n = graft.SparkEntry.entry(spark).count()
     println(s"""{"entry_rows":$n}""")
     require(n > 0, "entry() returned no rows")

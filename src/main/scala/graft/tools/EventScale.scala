@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale harness for the Events family: synthetic event log (N
@@ -30,13 +29,7 @@ object EventScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val mode = if (args.length > 1) args(1) else "base"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
 
     val users = math.max(n / 200L, 1L)
     val spanUs = 30L * 86400L * 1000000L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale harness for Graph.pageRank: synthetic graph (the CcScale
@@ -23,14 +22,9 @@ object GraphScale {
     val nEdges = if (args.length > 0) args(0).toLong else 1000000L
     val iters = if (args.length > 1) args(1).toInt else 3
     val shape = if (args.length > 2) args(2) else "random"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus(32)
+    val spark = graft.Session.local(cpus, "spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString))
     // Reliable round checkpoints (the cluster-recommended mode): the
     // local-block path lost evicted blocks once under 8g-heap GC
     // pressure at the third decade — checkpoint files don't evict.

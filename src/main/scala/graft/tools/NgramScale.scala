@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, concat, lit}
 
 /** Reproduce the ngramJaccardPairs capped-space recall measurement at
@@ -19,14 +18,7 @@ object NgramScale {
     val n = if (args.length > 1) args(1).toInt else 3
     val th = if (args.length > 2) args(2).toDouble else 0.5
     val caps = if (args.length > 3) args.drop(3).map(_.toInt).toSeq else Seq(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
     val docs = graft.Tables.load(spark, dir, "documents")
     val tail = "terms of service apply to every document in this corpus"
     val tailed = docs.select(col("doc_id"),

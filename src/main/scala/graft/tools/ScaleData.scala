@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic data scaler: replicates the driver's sf0.1 tables
@@ -51,16 +51,9 @@ object ScaleData {
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): read it as a raw long and write it
-      // back as INT64, which Tables.loadEvents's `ts div 1000` also accepts.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is TIMESTAMP(NANOS): read it as a raw long and write it
+    // back as INT64, which Tables.loadEvents's `ts div 1000` also accepts.
+    val spark = graft.Session.local(32, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     // df is by-name: with SPARK_GRAFT_SCALE_TABLES restricting output,

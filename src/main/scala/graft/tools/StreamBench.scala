@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.connectors.Testing
 
@@ -12,35 +11,28 @@ import graft.connectors.Testing
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")) {
-      builder
-        .config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
+    val rocksDb =
+      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")) Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+      else Nil
     // Emission-deferral (default ON, SPARK_GRAFT_NODATA=1 restores
     // Spark's default): without no-data micro-batches each addBatch
     // cycle runs ONE state commit round instead of two (the second being
     // the watermark-advance emission batch). Closed windows then emit
     // with the next data batch — same rows, later trigger. Measured:
     // 36.0 s → 19.5 s on the unique-ts 1M-item run.
-    if (!sys.env.get("SPARK_GRAFT_NODATA").contains("1"))
-      builder.config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val noData =
+      if (sys.env.get("SPARK_GRAFT_NODATA").contains("1")) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     // State shuffle parallelism (default 4): stream state stores =
     // shuffle partitions; each store pays a per-micro-batch commit, so
     // oversized parallelism is pure overhead at this group count
     // (measured: 8 → 4 partitions saves ~7%, 2 another ~4%; at real
     // cluster group counts size this to data, not to the default 200).
-    builder.config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(8), rocksDb ++ noData :+
+      ("spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4")): _*)
     import spark.implicits._
 
     // Async progress tracking (SPARK_GRAFT_ASYNC=1): offset/commit-log

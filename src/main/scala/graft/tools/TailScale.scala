@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Load point for the super-linear-tail gates at any SF dir (built for
   * the sf10 decade: the brief grades 100×; sf1 evidence stops at 10×).
   * Runs named `SparkEntry.queries` entries against the dir with a noop
@@ -21,24 +19,18 @@ object TailScale {
         "q_dedup_simhash", "q_dedup_winnow", "q_dedup_winnow_skew",
         "q_dedup_ngram", "q_dedup_ngram_skew", "q_dedup_exact",
         "ann_ivf_auto", "ann_lsh_auto", "ann_pairs_auto")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TypedImperativeAggregate maps (TopKByAgg rank stage) fall back
-      // to SORT-based aggregation after 128 distinct keys by default —
-      // which re-materializes every ANN candidate row into the very
-      // sort the aggregate exists to avoid. Since round 9 the rankers
-      // raise the threshold THEMSELVES (TopK.ensureHashAggCapacity);
-      // SPARK_GRAFT_DEFAULT_CONF=1 leaves the session at Spark
-      // defaults to prove exactly that on the third-decade run.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        if (sys.env.get("SPARK_GRAFT_DEFAULT_CONF").contains("1")) "128"
-        else "4000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // TypedImperativeAggregate maps (TopKByAgg rank stage) fall back
+    // to SORT-based aggregation after 128 distinct keys by default —
+    // which re-materializes every ANN candidate row into the very
+    // sort the aggregate exists to avoid. Since round 9 the rankers
+    // raise the threshold THEMSELVES (TopK.ensureHashAggCapacity);
+    // SPARK_GRAFT_DEFAULT_CONF=1 puts the session back at Spark's
+    // default to prove exactly that on the third-decade run.
+    val defaultConf =
+      if (sys.env.get("SPARK_GRAFT_DEFAULT_CONF").contains("1"))
+        Seq(graft.functions.TopK.FallbackConf -> "128")
+      else Nil
+    val spark = graft.Session.local(graft.Session.cpus(32), defaultConf: _*)
     // ann_* pseudo-gates run the production auto-sized ANN variants
     // (the gates pin tiny cells for oracle tractability; the auto
     // paths are what must hold at this decade)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Similarity
 
@@ -18,11 +17,7 @@ object TuneScale {
     val sampleMod = if (args.length > 1) args(1).toLong else 1000L
     val target = if (args.length > 2) args(2).toDouble else 0.95
     val k = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val n = emb.count()
     val nlist = math.max(16, math.sqrt(n.toDouble).toInt)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.connectors.Testing
 import graft.streaming.{StreamingOps, TransformWithStateOps}
 
@@ -18,19 +17,13 @@ object TwsBench {
   def main(args: Array[String]): Unit = {
     val items = if (args.length > 0) args(0).toLong else 1000000L
     val keys = if (args.length > 1) args(1).toInt else 10000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.Session.cpus(32)
+    val spark = graft.Session.local(cpus,
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     import spark.implicits._
 
     val perBatch = (items / 10).toInt
@@ -55,7 +48,7 @@ object TwsBench {
     }
 
     if (sys.env.get("TWSBENCH_DEBUG").contains("1")) {
-      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus.toInt))
+      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus))
       val logic = new TransformWithStateOps.GraftStatefulLogic[Long, Long, Long, Long] {
         def onBatch(key: Long, vs: Seq[Long], s: Option[Long]): (Option[Long], Seq[Long]) = {
           val total = s.getOrElse(0L) + vs.sum
@@ -83,7 +76,7 @@ object TwsBench {
 
     // ---- keyed running sum ----
     val sumTws = {
-      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus.toInt))
+      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus))
       val logic = new TransformWithStateOps.GraftStatefulLogic[Long, Long, Long, Long] {
         def onBatch(key: Long, vs: Seq[Long], s: Option[Long]): (Option[Long], Seq[Long]) = {
           val total = s.getOrElse(0L) + vs.sum
@@ -93,7 +86,7 @@ object TwsBench {
       feedAndTime(TransformWithStateOps.statefulTws(src.toDS(), logic), src, "sum-tws")
     }
     val sumFmgws = {
-      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus.toInt))
+      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus))
       val out = StreamingOps.statefulStream[Long, Long, Long, Long](src.toDS(), None)(
         (_: Long, vs: Seq[Long], s: Option[Long]) => {
           val total = s.getOrElse(0L) + vs.sum
@@ -106,12 +99,12 @@ object TwsBench {
 
     // ---- bounded collect (maxSize 10, long timeout so size flushes) ----
     val colTws = {
-      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus.toInt))
+      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus))
       feedAndTime(TransformWithStateOps.collectTws(src.toDS(), maxSize = 10,
         timeoutMs = 3600000L), src, "col-tws")
     }
     val colFmgws = {
-      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus.toInt))
+      val src = Testing.testingSource[(Long, Long)](spark, Some(cpus))
       feedAndTime(StreamingOps.collectStream(src.toDS(), maxSize = 10,
         timeoutMillis = 3600000L), src, "col-fmgws")
     }

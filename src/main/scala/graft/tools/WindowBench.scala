@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Runner for the benchmark_windowing example port
   * (examples/benchmark_windowing.py): push `n` second-spaced events
   * through key_on → 1-minute tumbling collect_window → flatten and
@@ -21,14 +19,7 @@ object WindowBench {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val keys = if (args.length > 1) args(1).toInt else 2
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
     val secs = (1 to reps).map { _ =>
       val t0 = System.nanoTime()
       val rows = graft.examples.Examples.windowingBenchFlat(spark, n, keys).count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Reproduce the winnowPairs scale comparison at any SF dir (the
@@ -19,14 +18,7 @@ object WinnowScale {
     val w = if (args.length > 2) args(2).toInt else 4
     val ov = if (args.length > 3) args(3).toDouble else 0.5
     val caps = if (args.length > 4) args.drop(4).map(_.toInt).toSeq else Seq(1000, 100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32))
     val docs = graft.Tables.load(spark, dir, "documents")
     var truth: Option[Set[(Long, Long)]] = None
     for (cap <- caps) {

@@ -45,6 +45,10 @@ print(f"calibration constant (q_input drift): {cal:.3f}x "
 print(f"unstable flags: old {len(uo)} new {len(un)}; "
       f"gc: old {old.get('gc_policy','rep?')}/{old.get('gc_secs','?')}s "
       f"new {new.get('gc_policy','rep?')}/{new.get('gc_secs','?')}s")
+# gates that threw carry no time, so they are outside the shared set
+for tag, rec in (('old', old), ('new', new)):
+    if rec.get('failed'):
+        print(f"FAILED in {tag}: {' '.join(rec['failed'])}")
 print(f"\nqueries over {thr}x CALIBRATED (cal / raw / old -> new):")
 for c, r, q, a, b, flag in rows:
     if c > thr:
