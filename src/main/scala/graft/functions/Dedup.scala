@@ -740,6 +740,18 @@ object Dedup {
       .agg(count(lit(1)).as("n_grams"), sum(col("__hit")).as("n_seen"))
   }
 
+  /** The [[connectedComponents]] convergence signature of a (u, v)
+    * edge set: (edge count, order-insensitive hash sum), folded exactly
+    * (BigInt) by a round's mark in its own job. A signature tie between
+    * two *different* consecutive edge sets needs a 64-bit hash-sum
+    * collision (P ≈ 2⁻⁶⁴ per round) — and the alternating algorithm
+    * never revisits a state, so a stable signature means a stable set.
+    */
+  private[graft] val ccSignature: DataFrame => (Long, BigInt) =
+    Rounds.fold(xxhash64(col("u"), col("v")))((0L, BigInt(0)))(
+      (acc, r) => (acc._1 + 1, acc._2 + r.getLong(0)))(
+      (x, y) => (x._1 + y._1, x._2 + y._2))
+
   /** Connected components over a near-dup pair list — the clustering
     * stage a dedup pipeline needs after pair generation: pairs →
     * duplicate clusters → one canonical keeper per cluster. Pair-local
@@ -761,8 +773,9 @@ object Dedup {
     *
     * Per round the plan is checkpointed: it truncates lineage
     * (iterated self-joins otherwise nest the logical plan
-    * exponentially) and materializes the edge set for the convergence
-    * check. When the session has a checkpoint dir
+    * exponentially) and materializes the edge set, and the same job
+    * folds the round's convergence signature (`ccSignature`) — no
+    * aggregate job of its own. When the session has a checkpoint dir
     * (`spark.sparkContext.setCheckpointDir`), rounds use RELIABLE
     * checkpoints — an executor loss mid-contraction recovers from
     * storage; otherwise local checkpoint blocks (which die with their
@@ -806,20 +819,9 @@ object Dedup {
         .select(col("n").as("u"), col("m").as("v"))
     }
 
-    // convergence signature: (edge count, order-insensitive hash sum).
-    // A signature tie between two *different* consecutive edge sets
-    // needs a 64-bit hash-sum collision (P ≈ 2⁻⁶⁴ per round) — and the
-    // alternating algorithm never revisits a state, so a stable
-    // signature means a stable set.
-    def sig(e: DataFrame): (Long, BigDecimal) = {
-      // decimal sum: Long would overflow (ANSI) once edge counts × 2⁶³
-      val r = e.agg(count(lit(1)), sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
-    }
-
     // Each round is a [[Rounds]] checkpoint materialized by its own
-    // signature aggregate (one Spark job per round), and the
-    // superseded round is released once the next is materialized —
+    // signature fold, and the superseded round is released once the
+    // next is materialized —
     // only the final star edge set stays, because the returned
     // DataFrame reads through it (its storage follows the result's
     // lifetime: ContextCleaner reclaims local blocks when the RDD is
@@ -827,12 +829,12 @@ object Dedup {
     // .cleanCheckpoints or session teardown).
     val rounds = new Rounds(pairs, "connectedComponents")
     var (cur, curSig) = rounds.markWith(
-      canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))(sig)
+      canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))(ccSignature)
     var converged = curSig._1 == 0L
     var round = 0
     while (!converged && round < maxIter) {
       val (next, nextSig) = rounds.replaceWith(cur,
-        canon(smallStar(canon(largeStar(cur)))))(sig)
+        canon(smallStar(canon(largeStar(cur)))))(ccSignature)
       converged = nextSig == curSig
       cur = next
       curSig = nextSig

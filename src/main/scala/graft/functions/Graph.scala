@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over plain edge relations — the web-graph
@@ -354,9 +354,10 @@ object Graph {
     * edges collapse; a structurally-zero total (possible only on a
     * degenerate normalized-out graph) yields all-zero scores rather
     * than a division error. Per iteration: two edge⋈score joins and
-    * two partial-aggregable decimal sums (the 1-row normalizers
-    * broadcast); rounds run the same checkpoint lifecycle as
-    * [[pageRank]].
+    * two partial-aggregable decimal sums, each checkpointed raw by a
+    * [[Rounds]] mark whose one job also folds the exact total; the
+    * normalization is a lazy projection over that checkpoint with the
+    * total as a literal, so no aggregate or broadcast job prices it.
     */
   def hits(edges: DataFrame, iterations: Int,
       unit: Long = 1000000000000L): DataFrame = {
@@ -369,48 +370,53 @@ object Graph {
       .persist(lvl)
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().persist(lvl)
-    // sum-normalize a raw score relation to Σ ≈ unit (exact floor);
-    // an all-zero total yields zeros, never a division error
-    def normalized(raw: DataFrame, c: String): DataFrame = {
-      val total = raw.agg(
-        coalesce(sum(col(c)), dec(lit(0))).cast("decimal(38,0)").as("tot"))
-      raw.crossJoin(broadcast(total))
-        .select(col("id"),
-          when(col("tot") === dec(lit(0)), dec(lit(0)))
-            .otherwise(idiv(col(c) * dec(lit(unit)), col("tot"))).as(c))
+    // sum-normalize a raw score relation to Σ ≈ unit (exact floor):
+    // the round's mark folds the exact total in its own job, and the
+    // normalization is a lazy projection over the checkpoint with the
+    // total as a literal; an all-zero total yields zeros, never a
+    // division error. `prev` (None: the uniform start) is released
+    // once the round is marked.
+    def normalized(prev: Option[DataFrame], raw: DataFrame,
+        c: String): DataFrame = {
+      val total = Rounds.fold(col(c))(BigInt(0))((t, r: Row) =>
+        if (r.isNullAt(0)) t else t + BigInt(r.getDecimal(0).toBigInteger))(
+        _ + _)
+      val (ck, tot) = prev.fold(rounds.markWith(raw)(total))(
+        rounds.replaceWith(_, raw)(total))
+      ck.select(col("id"), (if (tot == 0) dec(lit(0))
+        else idiv(col(c) * dec(lit(unit)),
+          dec(lit(new java.math.BigDecimal(tot.bigInteger))))).as(c))
     }
-    var h = rounds.mark(nodes.select(col("id"), dec(lit(unit)).as("hub")))
-    var a = rounds.mark(nodes.select(col("id"), dec(lit(0)).as("auth")))
+    val h0 = nodes.select(col("id"), dec(lit(unit)).as("hub"))
+    var h = Option.empty[DataFrame]
+    var a = Option.empty[DataFrame]
     for (_ <- 0 until iterations) {
-      // normalized() references its input twice (total + scaling):
-      // persist the raw relation across the round's materialization
-      // so the edge join runs once, not twice
       // shuffle_hash on the node-sized score side: sort-merge would
       // sort the edge relation every round; hash-building the score
       // side leaves the edge side streaming (guide §3.1). Pinning
       // eSrc/eDst layouts was MEASURED SLOWER here (hits runs 2
       // iterations; two extra cache builds never amortize)
-      val aRaw = e.join(h.hint("shuffle_hash"), e("src") === h("id"))
+      val hub = h.getOrElse(h0)
+      a = Some(normalized(a, e.join(hub.hint("shuffle_hash"),
+          e("src") === hub("id"))
         .groupBy(e("dst").as("id"))
-        .agg(sum(col("hub")).cast("decimal(38,0)").as("auth"))
-        .persist(lvl)
-      a = rounds.replace(a, normalized(aRaw, "auth"))
-      aRaw.unpersist(false)
-      val hRaw = e.join(a.hint("shuffle_hash"), e("dst") === a("id"))
+        .agg(sum(col("hub")).cast("decimal(38,0)").as("auth")), "auth"))
+      val auth = a.get
+      h = Some(normalized(h, e.join(auth.hint("shuffle_hash"),
+          e("dst") === auth("id"))
         .groupBy(e("src").as("id"))
-        .agg(sum(col("auth")).cast("decimal(38,0)").as("hub"))
-        .persist(lvl)
-      h = rounds.replace(h, normalized(hRaw, "hub"))
-      hRaw.unpersist(false)
+        .agg(sum(col("auth")).cast("decimal(38,0)").as("hub")), "hub"))
     }
-    val out = nodes.join(h, Seq("id"), "left").join(a, Seq("id"), "left")
+    val out = nodes.join(h.getOrElse(h0), Seq("id"), "left")
+      .join(a.getOrElse(nodes.select(col("id"), dec(lit(0)).as("auth"))),
+        Seq("id"), "left")
       .select(col("id"),
         coalesce(col("hub"), dec(lit(0))).as("hub"),
         coalesce(col("auth"), dec(lit(0))).as("auth"))
     // the final join must not out-live the released static relations:
     // materialize it as its own checkpoint, then drop everything else
     val res = rounds.mark(out)
-    rounds.release(h); rounds.release(a)
+    (h ++ a).foreach(rounds.release)
     e.unpersist(false); nodes.unpersist(false)
     res
   }
@@ -474,17 +480,20 @@ object Graph {
     *
     * Per round: one src-keyed join frontier⋈edges + a distinct + one
     * anti-join against the discovered set, no windows; rounds run the
-    * shared checkpoint lifecycle and the loop EXITS EARLY when a
-    * frontier comes back empty (the count is free: the round
+    * shared [[Rounds.fixpoint]] lifecycle and the loop EXITS EARLY when
+    * a frontier comes back empty (the count is free: the round
     * checkpoint already materializes), so `maxDepth` is a cap, not a
-    * cost. The edge relation is hash-partitioned on `src` ONCE and
-    * persisted — checkpointed frontiers carry no size stats, so the
-    * optimizer won't broadcast them, and without the pinned layout
-    * every round RE-EXCHANGES the full edge set (measured: the 100M-
-    * edge depth-3 run dropped 42.8 s → 32.5 s locally when the
-    * per-round edge shuffle disappeared — and only frontier-sized
-    * relations moving per round is the property that matters on a
-    * cluster, where the exchange is network, not memcpy).
+    * cost. The discovered set is the union of the checkpointed
+    * frontiers (disjoint, so compaction only re-marks the union); a
+    * round marks its frontier and nothing else. The edge relation is
+    * hash-partitioned on `src` ONCE and persisted — checkpointed
+    * frontiers carry no size stats, so the optimizer won't broadcast
+    * them, and without the pinned layout every round RE-EXCHANGES the
+    * full edge set (measured: the 100M-edge depth-3 run dropped
+    * 42.8 s → 32.5 s locally when the per-round edge shuffle
+    * disappeared — and only frontier-sized relations moving per round
+    * is the property that matters on a cluster, where the exchange is
+    * network, not memcpy).
     */
   def bfsDistance(edges: DataFrame, seeds: DataFrame,
       maxDepth: Int): DataFrame = {
@@ -505,7 +514,7 @@ object Graph {
           .select(e("dst").as("id")).distinct()
           .join(dist.hint("shuffle_hash"), Seq("id"), "left_anti")
           .withColumn("dist", lit(depth.toLong))
-    }(_ unionByName _)
+    }(identity)
     e.unpersist(false)
     dist
   }
@@ -1031,7 +1040,8 @@ object Graph {
     * implementation keeps the two faces bit-identical. Runs the same
     * eager per-round checkpoint lifecycle as the other fixpoints in
     * this object (reliable checkpoints when the session has a
-    * checkpoint dir — set one in production).
+    * checkpoint dir — set one in production); each round's
+    * convergence signature is folded by its mark's own job.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
     Dedup.connectedComponents(edges, maxIter)
@@ -1071,12 +1081,16 @@ object Graph {
     *     frontier-pruned min propagation along REVERSE edges (only
     *     nodes whose color improved last round can improve an
     *     in-neighbor's — the [[sssp]] loop with min-of-label for
-    *     min-of-dist), fixpoint with early exit.
+    *     min-of-dist), fixpoint with early exit. The color relation
+    *     is the [[Rounds.fixpoint]] delta union (last per-id `min`
+    *     compaction plus the improvement rounds since), so a round
+    *     marks only its improvements.
     *  2. FLOOD: seed every root r with c(r) = r and flood FORWARD
     *     along edges whose endpoints BOTH carry color r
-    *     (frontier-pruned, fixpoint). A flooded node v satisfies
-    *     r →* v (the flood path) and v →* r (c(v) = r means the min
-    *     v reaches is r), so flooded(r) is EXACTLY the SCC of r;
+    *     (frontier-pruned, fixpoint; the flooded set is the union
+    *     of the disjoint checkpointed frontiers). A flooded node v
+    *     satisfies r →* v (the flood path) and v →* r (c(v) = r means
+    *     the min v reaches is r), so flooded(r) is EXACTLY the SCC of r;
     *     conversely every SCC whose members' minimum reachable id is
     *     their own minimum is flooded completely this round.
     *  3. PEEL: emit flooded nodes as (v, r), drop every edge
@@ -1262,13 +1276,13 @@ object Graph {
           cProp.rel.join(from.select(col("id").as("dst"),
               col("c").as("fc")), Seq("dst"))
             .groupBy(col("src").as("id")).agg(min(col("fc")).as("cand"))
-            .join(color, Seq("id"))
-            .filter(col("cand") < col("c"))
+            // the sssp improvement test (and its shuffle_hash reason)
+            .join(color.select(col("id").as("pid"), col("c").as("pc"))
+                .hint("shuffle_hash"),
+              col("id") === col("pid") && col("pc") <= col("cand"),
+              "left_anti")
             .select(col("id"), col("cand").as("c"))
-      } { (color, improved) =>
-        color.join(improved.withColumnRenamed("c", "nc"), Seq("id"), "left")
-          .select(col("id"), coalesce(col("nc"), col("c")).as("c"))
-      }
+      }(_.groupBy(col("id")).agg(min(col("c")).as("c")))
       require(cDone, s"color propagation did not converge within " +
         s"$maxPropRounds rounds — raise maxPropRounds (the graph's " +
         "min-label diameter exceeds the wall-time guard)")
@@ -1293,7 +1307,7 @@ object Graph {
             .filter(col("fc") === col("vc"))
             .select(col("id"), col("vc").as("c"))
             .join(flood, Seq("id"), "left_anti")
-      }(_ unionByName _)
+      }(identity)
       require(fDone, s"SCC flood did not converge within " +
         s"$maxPropRounds rounds — raise maxPropRounds (a partially " +
         "flooded SCC must never be peeled)")
@@ -1582,17 +1596,20 @@ object Graph {
     * frontier (nodes whose dist improved last round — NOT the full
     * dist table) joins the src-partitioned edge relation, a dst-keyed
     * MIN collapses candidates (partial-aggregable, map-side
-    * combined), and a left join against the running dist keeps only
-    * strict improvements; the loop EXITS EARLY when a round improves
-    * nothing (the count is free: the round checkpoint already
-    * materializes). Rounds ≤ the edge count of the longest shortest
-    * path — `maxIter` is a cap, not a cost. The edge relation is
-    * hash-partitioned on `src` ONCE and persisted (the [[bfsDistance]]
-    * lesson: checkpointed frontiers carry no size stats, so without
-    * the pinned layout every round re-exchanges the full edge set —
-    * only frontier-sized relations should move per round on a
-    * cluster). Exact BIGINT arithmetic end-to-end: distances are
-    * bit-stable under any partitioning.
+    * combined), and an anti-join against the running dist keeps only
+    * strict improvements (no row of the id is as short); the loop
+    * EXITS EARLY when a round improves nothing (the count is free: the
+    * round checkpoint already materializes). The running dist is the
+    * [[Rounds.fixpoint]] delta union — the last per-id `min`
+    * compaction plus the improvement rounds since — so a round marks
+    * its improvements and nothing else. Rounds ≤ the edge count of
+    * the longest shortest path — `maxIter` is a cap, not a cost. The
+    * edge relation is hash-partitioned on `src` ONCE and persisted
+    * (the [[bfsDistance]] lesson: checkpointed frontiers carry no size
+    * stats, so without the pinned layout every round re-exchanges the
+    * full edge set — only frontier-sized relations should move per
+    * round on a cluster). Exact BIGINT arithmetic end-to-end:
+    * distances are bit-stable under any partitioning.
     */
   def sssp(edges: DataFrame, seeds: DataFrame, maxIter: Int = 50): DataFrame = {
     require(maxIter >= 0, "maxIter must be >= 0")
@@ -1621,14 +1638,18 @@ object Graph {
         e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
           .select(e("dst").as("id"), (frontier("dist") + e("w")).as("cand"))
           .groupBy(col("id")).agg(min(col("cand")).as("cand"))
-          .join(dist, Seq("id"), "left")
-          .filter(col("dist").isNull || col("cand") < col("dist"))
+          // strict improvements only: no state row of the id is as
+          // short (the state may hold several rows per id). Plain
+          // renames, not `.as` aliases: with aliases, constraint
+          // inference over the state's union failed (Spark 4.1).
+          // shuffle_hash on the state: AQE would otherwise broadcast
+          // the already-shuffled small state, one more job per round
+          .join(dist.select(col("id").as("pid"), col("dist").as("pd"))
+              .hint("shuffle_hash"),
+            col("id") === col("pid") && col("pd") <= col("cand"),
+            "left_anti")
           .select(col("id"), col("cand").as("dist"))
-    } { (dist, improved) =>
-      dist.join(improved.withColumnRenamed("dist", "nd"), Seq("id"),
-          "full_outer")
-        .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
-    }
+    }(_.groupBy(col("id")).agg(min(col("dist")).as("dist")))
     e.unpersist(false)
     dist
   }
@@ -1939,7 +1960,8 @@ object Graph {
     *    the (s, v, σ) frontier joins the src-pinned edge relation,
     *    a (s, dst) grouped SUM accumulates σ (partial-aggregable),
     *    a left-anti against the visited set keeps first-discovery
-    *    depths only; per-depth layers checkpoint ([[Rounds]]).
+    *    depths only; per-depth layers checkpoint ([[Rounds]]), each
+    *    mark's one job also folding the layer's row count and max σ.
     *  - BACKWARD (one round per depth, deepest first): layer t joins
     *    the same pinned edges, meets layer t+1's (σ, δ) on (s, w),
     *    floors the per-edge term, and a (s, v) grouped SUM folds it;
@@ -1966,7 +1988,7 @@ object Graph {
     val e = edges.select(col(cs).as("src"), col(cd).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).persist(lvl)
-    val eN = e.count()
+    val eN = Rounds.rows(e)
     // decimal(38,0) overflow surfaces as NULL under non-ANSI Spark;
     // sigma/delta are never organically null, so a null HERE is a
     // path-count explosion (hub-dense graph at depth) — raise, never
@@ -1979,6 +2001,9 @@ object Graph {
     // FORWARD: per-depth layers (s, id, sigma)
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val layerCounts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // the largest σ over the non-seed layers (seeds carry σ = 1),
+    // folded by each layer's own mark for the backward phase's choice
+    var maxSigma = BigDecimal(1)
     val (seedLayer, nSeeds) = rounds.markN(
       seeds.select(col(seeds.columns.head).as("s"))
         .distinct()
@@ -2000,11 +2025,12 @@ object Graph {
         .join(layers(depth).withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("s"), col("dst").as("id"))
         .agg(guard(sum(col("sigma")).cast(dec38), "sigma").as("sigma"))
-      val (fresh, nFresh) = rounds.markN(
+      val (fresh, (nFresh, freshMax)) = markLayer(rounds,
         cand.join(vis.select(col("s"), col("id")), Seq("s", "id"),
           "left_anti"))
       if (nFresh == 0) { rounds.release(fresh); exhausted = true }
       else {
+        maxSigma = maxSigma.max(freshMax)
         vis = vis.unionByName(fresh)
         layers += fresh
         layerCounts += nFresh
@@ -2013,8 +2039,8 @@ object Graph {
     }
     // LONG fast path for the backward phase (the pageRank LongExact
     // precedent, provable here only AFTER the forward phase): every
-    // per-edge term is σ_v·(unit + δ_w) with σ_v ≤ maxσ (one cheap
-    // aggregate over the checkpointed layers) and δ_w ≤ unit·D, where
+    // per-edge term is σ_v·(unit + δ_w) with σ_v ≤ maxσ (folded by the
+    // forward marks) and δ_w ≤ unit·D, where
     // D = Σ_{t≥1} n_t (the non-seed layer rows) upper-bounds any
     // seed's deeper-target count — Brandes' δ_s(v) = Σ_t σ_st(v)/σ_st
     // is at most the number of deeper targets, the unit-scaled
@@ -2025,13 +2051,6 @@ object Graph {
     // is the floor); otherwise the decimal(38,0) path with its
     // loud-overflow guards runs as before.
     val deeperPairs = layerCounts.drop(1).sum
-    val maxSigma: BigDecimal =
-      if (layers.size <= 1) BigDecimal(1)
-      else {
-        val r = layers.map(_.select(col("sigma"))).reduce(_ unionByName _)
-          .agg(max(col("sigma"))).head()
-        if (r.isNullAt(0)) BigDecimal(1) else BigDecimal(r.getDecimal(0))
-      }
     val useLong = maxSigma * BigDecimal(unit) * BigDecimal(1L + deeperPairs) <=
       BigDecimal(Long.MaxValue)
     val zeroDelta = if (useLong) lit(0L) else lit(0L).cast(dec38)
@@ -2039,11 +2058,12 @@ object Graph {
     // BACKWARD: deepest layer's delta = 0, walk up accumulating; the
     // delta frames at depth >= 1 ARE the betweenness contributions and
     // stay checkpointed until the final union (the seeds' own depth-0
-    // frame contributes nothing, so it is never built)
+    // frame contributes nothing, so it is never built). The deepest
+    // frame is a lazy projection of its checkpointed layer, not a mark.
     val contribs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (layers.size > 1) contribs += rounds.mark(layers.last
+    if (layers.size > 1) contribs += layers.last
       .select(col("s"), col("id"), sigmaOut(col("sigma")).as("sigma"))
-      .withColumn("delta", zeroDelta))
+      .withColumn("delta", zeroDelta)
     for (t <- layers.size - 2 to 1 by -1) {
       val succ = contribs.last
       val termCol =
@@ -2080,11 +2100,22 @@ object Graph {
       .select(col("id"),
         coalesce(col("btw"), lit(0L).cast(dec38)).as("btw"))
     val res = rounds.mark(out)
-    contribs.foreach(rounds.release)
+    // the deepest frame reads its layer's checkpoint: layers free it
+    contribs.drop(1).foreach(rounds.release)
     layers.foreach(rounds.release)
     e.unpersist(false)
     res
   }
+
+  /** Checkpoint a [[betweenness]] forward layer (s, id, sigma); the
+    * mark's one job folds its row count and its largest σ (1 when the
+    * layer is empty: the seeds' own σ).
+    */
+  private[graft] def markLayer(rounds: Rounds,
+      layer: DataFrame): (DataFrame, (Long, BigDecimal)) =
+    rounds.markFold(layer, col("sigma"))((0L, BigDecimal(1)))(
+      (acc, r) => (acc._1 + 1, acc._2.max(BigDecimal(r.getDecimal(0)))))(
+      (x, y) => (x._1 + y._1, x._2.max(y._2)))
 
   /** Weighted Newman modularity report — [[modularity]] over a
     * (src, dst, weight) relation (Newman 2004, weighted networks):

@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+
+import scala.reflect.ClassTag
 
 /** The round lifecycle of the iterative operators (the graph
   * fixpoints, the funnel's per-step reached relations, the dedup
@@ -15,24 +17,39 @@ import org.apache.spark.sql.DataFrame
   * (observed once at 126M nodes on an 8 GB heap under GC-pressure
   * eviction).
   *
+  * A round costs ONE Spark job beyond its own query's shuffle stages.
+  * The round's query runs as the `localCheckpoint`/`checkpoint` SQL
+  * action (so query listeners and `Probe` see its plan); the job that
+  * materializes the checkpoint is the caller's action on it, and that
+  * action reads the checkpoint's RDD directly: [[markN]] counts it
+  * with one RDD job, [[markFold]] folds its rows in one RDD job. A
+  * `Dataset.count()` or DataFrame aggregate there would add an
+  * exchange, so a second job, for a figure the same scan can return.
+  *
   * Three entry points:
   *  - [[markWith]] checkpoints a round by running a caller-supplied
   *    action on it — the action IS the round's materializing job, so
   *    a loop reads its emptiness or convergence test from the action's
-  *    result (a row count in [[markN]], a signature or several counts
-  *    in one aggregate) instead of launching a second job on the
+  *    result (a row count in [[markN]], a signature, total or maximum
+  *    in [[markFold]]) instead of launching a second job on the
   *    checkpoint.
   *  - [[replaceWith]] marks the next round and only then releases the
   *    superseded one the next round's plan was derived from.
   *  - [[fixpoint]] runs a frontier-pruned fixpoint: it marks the
   *    initial state, derives each round's delta from the state and the
-  *    last delta, exits at the first empty delta (through the mark's
-  *    own count) or at the round cap, folds each delta into the state,
-  *    and releases every superseded state and frontier.
+  *    last delta, and exits at the first empty delta (through the
+  *    mark's own count) or at the round cap. Its state is the last
+  *    COMPACTED checkpoint plus a lazy union of the checkpointed deltas
+  *    since, so a round marks only its delta. The union is compacted
+  *    (one more mark) when the deltas since the last compaction hold
+  *    more rows than it does — the marks have counted both — and once
+  *    at exit; superseded states and frontiers are released.
   *
   * Each [[replaceWith]] or [[fixpoint]] round logs one DEBUG line to
   * the `graft.Rounds` logger: operator, round, the round's rows (or
-  * action result) and the wall milliseconds since the previous round.
+  * action result) and the wall milliseconds since the previous round;
+  * a [[fixpoint]] round adds the deltas its state holds and whether
+  * it compacted.
   */
 private[graft] final class Rounds(anchor: DataFrame, op: String) {
   private val sc = anchor.sparkSession.sparkContext
@@ -64,10 +81,15 @@ private[graft] final class Rounds(anchor: DataFrame, op: String) {
       (ck, action(ck))
     }
 
-  /** [[markWith]] with the row count as the action. */
-  def markN(r: DataFrame): (DataFrame, Long) = markWith(r)(_.count())
+  /** [[markWith]] with the row count, one RDD job, as the action. */
+  def markN(r: DataFrame): (DataFrame, Long) = markWith(r)(Rounds.rows)
 
   def mark(r: DataFrame): DataFrame = markN(r)._1
+
+  /** [[markWith]] with [[Rounds.fold]] of `cols` as the action. */
+  def markFold[A: ClassTag](r: DataFrame, cols: Column*)(zero: A)(
+      seq: (A, Row) => A)(comb: (A, A) => A): (DataFrame, A) =
+    markWith(r)(Rounds.fold(cols: _*)(zero)(seq)(comb))
 
   /** Mark `next` (derived from `prev`), then release `prev`. */
   def replaceWith[A](prev: DataFrame, next: DataFrame)(
@@ -79,40 +101,63 @@ private[graft] final class Rounds(anchor: DataFrame, op: String) {
   }
 
   def replaceN(prev: DataFrame, next: DataFrame): (DataFrame, Long) =
-    replaceWith(prev, next)(_.count())
+    replaceWith(prev, next)(Rounds.rows)
 
   def replace(prev: DataFrame, next: DataFrame): DataFrame =
     replaceN(prev, next)._1
 
   /** Frontier fixpoint from `init`: round t (1-based) checkpoints
     * `delta(state, frontier, t)`; an empty delta ends the loop,
-    * otherwise `merge(state, delta)` becomes the next state and the
-    * delta the next frontier (the first frontier is the initial state
-    * itself). At most `maxRounds` deltas. Returns the final state and
-    * whether an empty delta was reached.
+    * otherwise the delta joins the state's union and becomes the next
+    * frontier (the first frontier is the initial state itself). At
+    * most `maxRounds` deltas. `compact` folds the union back to one
+    * row set — per-key `min` for a relaxation, `identity` for a
+    * discovered set whose deltas are disjoint — and must be idempotent
+    * over any split of the union, since compaction points depend on
+    * row counts. `delta` reads a state that may hold several rows per
+    * key. Returns the final compacted state and whether an empty delta
+    * was reached.
     */
   def fixpoint(init: DataFrame, maxRounds: Int)(
       delta: (DataFrame, DataFrame, Int) => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): (DataFrame, Boolean) = {
-    var state = mark(init)
-    var frontier = state
+      compact: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    var (base, nBase) = markN(init)
+    val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var nPieces = 0L
+    var frontier = base
+    // the frontier after a compaction is no longer part of the state,
+    // but the next round still reads it: released once superseded
+    var loose = false
+    def state = pieces.foldLeft(base)(_ unionByName _)
+    def compactState(): Unit = {
+      val (c, n) = markN(compact(state))
+      release(base)
+      pieces.foreach(p => if (p ne frontier) release(p))
+      loose = true
+      base = c; nBase = n
+      pieces.clear(); nPieces = 0L
+    }
     var r = 0
     var converged = false
     while (r < maxRounds && !converged) {
       val (d, n) = markN(delta(state, frontier, r + 1))
-      logRound(n)
-      if (n == 0) { release(d); converged = true }
-      else {
-        val next = mark(merge(state, d))
-        release(state)
-        if (frontier ne state) release(frontier)
-        state = next
+      if (loose) { release(frontier); loose = false }
+      if (n == 0) {
+        release(d); converged = true
+        logRound(n, s", pieces ${pieces.size}, compacted false")
+      } else {
+        pieces += d; nPieces += n
         frontier = d
+        val held = pieces.size
+        val compacted = nPieces > nBase
+        if (compacted) compactState()
+        logRound(n, s", pieces $held, compacted $compacted")
         r += 1
       }
     }
-    if (frontier ne state) release(frontier)
-    (state, converged)
+    if (pieces.nonEmpty) compactState()
+    if (loose) release(frontier)
+    (base, converged)
   }
 
   def release(m: DataFrame): Unit =
@@ -124,16 +169,37 @@ private[graft] final class Rounds(anchor: DataFrame, op: String) {
       else rdd.unpersist(false)
     }
 
-  private def logRound(result: Any): Unit = {
+  private def logRound(result: Any, extra: String = ""): Unit = {
     round += 1
     val now = System.nanoTime()
     if (Rounds.log.isDebugEnabled)
       Rounds.log.debug(s"$op round $round: rows $result, " +
-        s"${(now - tick) / 1000000} ms")
+        s"${(now - tick) / 1000000} ms$extra")
     tick = now
   }
 }
 
-private object Rounds {
+private[graft] object Rounds {
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Rounds")
+
+  /** Row count of `df` in one RDD job: no aggregate exchange, and no
+    * SQL action, so query listeners do not see it.
+    */
+  def rows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** An action folding the rows of `cols` over a relation in one RDD
+    * job: `seq` per row within a partition, `comb` across partitions
+    * (`zero` starts each), so it must not depend on row order. Like
+    * [[rows]] it runs no SQL action (`Dataset.rdd` would be one).
+    */
+  def fold[A: ClassTag](cols: Column*)(zero: A)(seq: (A, Row) => A)(
+      comb: (A, A) => A): DataFrame => A = { df =>
+    val p = df.select(cols: _*)
+    val schema = p.schema
+    p.queryExecution.toRdd.mapPartitions { it =>
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)
+      Iterator.single(it.foldLeft(zero)((a, r) => seq(a, toRow(r).asInstanceOf[Row])))
+    }.collect().foldLeft(zero)(comb)
+  }
 }

@@ -18,7 +18,10 @@ import scala.jdk.CollectionConverters._
   *    formatted plan and the executed plan of every action it ran, in
   *    order, from a [[QueryExecutionListener]]. The eager round-lifecycle
   *    operators show only their final checkpoint scan in the gate plan;
-  *    their per-round marks, persists and scans are the actions.
+  *    their per-round marks (`localCheckpoint`/`checkpoint`) and persists
+  *    are the actions. The count or fold a mark runs over its checkpoint
+  *    is one RDD job, not a SQL action: it shows in the job line, with
+  *    no plan of its own.
   *
   * args: sfDir gate [gate...]; env SPARK_GRAFT_CPUS like Bench.
   */

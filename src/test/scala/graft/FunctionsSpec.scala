@@ -1565,12 +1565,23 @@ class FunctionsSpec extends SparkSpec {
     val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     val wg = g.withColumn("w", col("src") + col("dst"))
     val seeds = Seq(1L).toDF("id")
+    // a light chain beside heavy shortcuts (GraphSpec's relaxation
+    // fixture) and a plain chain, both from node 0
+    val relax = ((0L until 12L).map(i => (i, i + 1, 1L)) ++
+      (for (j <- 0L until 12L; i <- j + 2 to 12L) yield (j, i, 2 * (i - j))))
+      .toDF("src", "dst", "w")
+    val chain = (0L until 16L).map(i => (i, i + 1)).toDF("src", "dst")
+    val seeds0 = Seq(0L).toDF("id")
     val ev = Seq((1L, 1L, "a"), (1L, 2L, "b"), (1L, 3L, "c"), (2L, 1L, "a"),
       (2L, 5L, "c"), (3L, 2L, "b")).toDF("user", "us", "type")
     val cases: Seq[(String, () => DataFrame)] = Seq(
       "cc" -> (() => Dedup.connectedComponents(g)),
       "sssp" -> (() => Graph.sssp(wg, seeds)),
       "bfs" -> (() => Graph.bfsDistance(g, seeds, 5)),
+      // many improving rounds and a long chain: the fixpoint state
+      // compacts mid-loop, freeing the deltas it folded
+      "sssp-relax" -> (() => Graph.sssp(relax, seeds0)),
+      "bfs-chain" -> (() => Graph.bfsDistance(chain, seeds0, 30)),
       "hits" -> (() => Graph.hits(g, 1)),
       "kcore" -> (() => Graph.kcore(g, 2, 5)),
       "ktruss" -> (() => Graph.ktruss(g, 3, 5)),
@@ -1610,6 +1621,43 @@ class FunctionsSpec extends SparkSpec {
       for ((((name, _), r), l) <- cases.zip(res).zip(local))
         assert(rowsOf(r) === l, s"$name: reliable result differs")
     } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("Rounds folds equal the aggregates they replace, empty relations included") {
+    import graft.functions.{Graph, Rounds}
+    val rounds = new Rounds(spark.range(1).toDF(), "spec")
+    // connectedComponents signature: count + exact sum of xxhash64
+    val pairs = Seq((5L, 1L), (9L, 2L), (9L, 5L), (Long.MaxValue, 3L),
+      (-7L, Long.MinValue)).toDF("u", "v")
+    for (e <- Seq(pairs, pairs.limit(0))) {
+      val r = e.agg(count(lit(1)),
+        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
+      val want = (r.getLong(0),
+        if (r.isNullAt(1)) BigInt(0) else BigInt(r.getDecimal(1).toBigInteger))
+      val (ck, got) = rounds.markWith(e)(Dedup.ccSignature)
+      assert(got === want)
+      rounds.release(ck)
+    }
+    assert(rounds.markWith(pairs.limit(0))(Dedup.ccSignature)._2 === ((0L, BigInt(0))))
+    // betweenness forward layer: rows + max σ, σ = 1 on an empty layer
+    val layer = Seq((1L, 2L, "123456789012345678901234567890"), (1L, 3L, "7"),
+        (2L, 3L, "1")).toDF("s", "id", "sigma")
+      .withColumn("sigma", col("sigma").cast("decimal(38,0)"))
+    for (l <- Seq(layer, layer.limit(0))) {
+      val r = l.agg(count(lit(1)), max(col("sigma"))).head()
+      val want = (r.getLong(0),
+        if (r.isNullAt(1)) BigDecimal(1) else BigDecimal(r.getDecimal(1)))
+      val (ck, got) = Graph.markLayer(rounds, l)
+      assert(got === want)
+      rounds.release(ck)
+    }
+    // a betweenness run whose forward phase finds no layer (the seed
+    // has no out-edge): maxσ stays 1 and every score is 0
+    val noLayer = Graph.betweenness(Seq((2L, 1L), (3L, 1L)).toDF("src", "dst"),
+        Seq(1L).toDF("id"))
+      .collect().map(r => r.getLong(0) -> BigDecimal(r.getDecimal(1))).toMap
+    assert(noLayer === Map(1L -> BigDecimal(0), 2L -> BigDecimal(0),
+      3L -> BigDecimal(0)))
   }
 
   test("only Rounds.scala decides the checkpoint policy") {

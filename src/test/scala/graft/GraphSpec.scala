@@ -129,6 +129,43 @@ class GraphSpec extends SparkSpec {
     assert(r2 === r)
   }
 
+  test("hits: folded totals normalize exactly, an all-zero total included") {
+    // exact reference in plain Scala: sum-normalize to unit by floor, an
+    // all-zero total yields zeros; nodes without a score row read 0
+    def ref(edges: Seq[(Long, Long)], iters: Int,
+        unit: Long): Map[Long, (BigDecimal, BigDecimal)] = {
+      val e = edges.distinct
+      val nodes = e.flatMap(x => Seq(x._1, x._2)).distinct
+      def norm(raw: Map[Long, BigInt]): Map[Long, BigInt] = {
+        val tot = raw.values.sum
+        raw.map { case (k, v) => k -> (if (tot == 0) BigInt(0) else v * unit / tot) }
+      }
+      var h = nodes.map(_ -> BigInt(unit)).toMap
+      var a = Map.empty[Long, BigInt]
+      for (_ <- 0 until iters) {
+        a = norm(e.filter(x => h.contains(x._1))
+          .groupMapReduce(_._2)(x => h(x._1))(_ + _))
+        h = norm(e.filter(x => a.contains(x._2))
+          .groupMapReduce(_._1)(x => a(x._2))(_ + _))
+      }
+      nodes.map(v => v -> ((BigDecimal(h.getOrElse(v, BigInt(0))),
+        BigDecimal(a.getOrElse(v, BigInt(0)))))).toMap
+    }
+    def hitsOf(edges: Seq[(Long, Long)], iters: Int, unit: Long) =
+      Graph.hits(edges.toDF("src", "dst"), iters, unit).collect()
+        .map(x => x.getLong(0) ->
+          ((BigDecimal(x.getDecimal(1)), BigDecimal(x.getDecimal(2))))).toMap
+    val rnd = new scala.util.Random(11)
+    val g = Seq.fill(40)((rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
+    assert(hitsOf(g, 3, 1000000000000L) === ref(g, 3, 1000000000000L))
+    // unit = 1 floors both authorities of 1→3, 2→3, 3→4 to 0, so the
+    // hub round's total is zero: every score comes out 0
+    val small = Seq((1L, 3L), (2L, 3L), (3L, 4L))
+    val z = hitsOf(small, 2, 1L)
+    assert(z === ref(small, 2, 1L))
+    assert(z.values.toSet === Set((BigDecimal(0), BigDecimal(0))))
+  }
+
   test("labelPropagation: majority adoption, min-label ties, keep-own, direction") {
     // 1→3, 2→3, 4→3: node 3's in-labels {1,2,4} all count 1 → tie
     // breaks to MIN label 1; nodes 1,2,4 have no in-edges → keep own
@@ -280,6 +317,56 @@ class GraphSpec extends SparkSpec {
     // one round of relaxation only reaches 2
     assert(sssp(e, Seq(1L), maxIter = 1) === Set((1L, 0L), (2L, 3L)))
     assert(sssp(e, Seq(1L), maxIter = 0) === Set((1L, 0L)))
+  }
+
+  private def dijkstra(edges: Seq[(Long, Long, Long)],
+      seed: Long): Set[(Long, Long)] = {
+    val dist = scala.collection.mutable.Map(seed -> 0L)
+    val done = scala.collection.mutable.Set.empty[Long]
+    while (dist.keySet.exists(!done(_))) {
+      val (u, du) = dist.filter(x => !done(x._1)).minBy(_._2)
+      done += u
+      for ((a, b, w) <- edges if a == u && dist.get(b).forall(du + w < _))
+        dist(b) = du + w
+    }
+    dist.toSet
+  }
+
+  // a light chain 0→1→…→n beside heavy shortcuts j→i (i ≥ j+2) of
+  // weight 2(i−j): round 1 reaches every node through its shortcut
+  // from 0, and round t improves every node past t by one more — so
+  // the improvement deltas outgrow the compacted state every few rounds
+  private val relaxChain: Seq[(Long, Long, Long)] =
+    (0L until 12L).map(i => (i, i + 1, 1L)) ++
+      (for (j <- 0L until 12L; i <- j + 2 to 12L) yield (j, i, 2 * (i - j)))
+
+  test("sssp: many improving rounds compact the delta union; matches Dijkstra") {
+    val (got, lines) = Observe.rounds(sssp(relaxChain, Seq(0L)))
+    assert(got === dijkstra(relaxChain, 0L))
+    assert(got === (0L to 12L).map(i => (i, i)).toSet)
+    // compaction ran inside the loop, not only at exit, and each line
+    // reports the deltas held and whether the round compacted
+    val mine = lines.filter(_.startsWith("sssp round "))
+    assert(mine.count(_.endsWith("compacted true")) >= 2, mine)
+    assert(mine.forall(_.matches(
+      "sssp round \\d+: rows \\d+, \\d+ ms, pieces \\d+, compacted (true|false)")),
+      mine)
+    // the cap exits mid-relaxation: the exit compaction folds the
+    // deltas held since the last mid-loop one (Bellman–Ford prefix)
+    val capped = Graph.sssp(relaxChain.toDF("src", "dst", "w"),
+        Seq(0L).toDF("id"), 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(capped === (0L to 12L).map(i =>
+      i -> (if (i <= 4) i else 2 * i - 3)).toMap)
+  }
+
+  test("bfsDistance: a long chain discovers one node per round through compactions") {
+    val chain = (0L until 24L).map(i => (i, i + 1))
+    val (got, lines) = Observe.rounds(bfs(chain, Seq(0L), 40))
+    assert(got === (0L to 24L).map(i => (i, i)).toSet)
+    assert(lines.exists(l =>
+      l.startsWith("bfsDistance round ") && l.endsWith("compacted true")), lines)
+    assert(bfs(chain, Seq(0L), 9) === (0L to 9L).map(i => (i, i)).toSet)
   }
 
   test("sssp: zero-weight edges and direction") {
@@ -605,31 +692,41 @@ class GraphSpec extends SparkSpec {
     // the strip cascade at k=4 runs two peel rounds and a fixpoint
     // test; each round's deleted/keep sizes come from the counts their
     // checkpoints already run, so no extra count jobs re-scan them
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val strip = (0L to 4L).map(i => (i, i + 1)) ++
       (0L to 3L).map(i => (i, i + 2))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val edges = strip.toDF("src", "dst")
-    spark.sparkContext.addSparkListener(l)
-    val n = try {
-      val got = Graph.ktruss(edges, k = 4, maxRounds = 20).count()
-      // listener bus is async: settle until no new jobs arrive
-      var last = -1
-      val deadline = System.currentTimeMillis() + 15000
-      while (System.currentTimeMillis() < deadline && jobs.get != last) {
-        last = jobs.get; Thread.sleep(500)
-      }
-      got
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (n, jobs) = Observe.jobs(spark) {
+      Graph.ktruss(edges, k = 4, maxRounds = 20).count()
+    }
     assert(n === 0L)
-    // 54 jobs on this session (AQE map stages included); a count()
+    // 45 jobs on this session (AQE map stages included); a count()
     // re-run on a round's checkpoint costs 2 more jobs each
-    assert(jobs.get <= 54, s"ktruss ran ${jobs.get} jobs, expected <= 54")
+    assert(jobs <= 45, s"ktruss ran $jobs jobs, expected <= 45")
+  }
+
+  test("Rounds gates: one job per round in sssp, hits, betweenness and cc") {
+    // a triangle with a tail, several rounds each. Every mark counts or
+    // folds its checkpoint in one RDD job, and fixpoint marks only its
+    // delta: a round that gets back a Dataset.count() on its checkpoint
+    // (2 jobs) or a per-round merge mark breaks its bound. Counts on
+    // this session, AQE map stages included: sssp 34, hits 28,
+    // betweenness 62 or 64 (AQE stage timing varies it), cc 26 (60,
+    // 51, 78 and 30 with Dataset counts in the marks, merge marks in
+    // fixpoint and aggregate statistics)
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val gd = g.toDF("src", "dst")
+    val wg = g.map { case (a, b) => (a, b, a + b) }.toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("id")
+    val cases: Seq[(String, () => Long, Int)] = Seq(
+      ("sssp", () => Graph.sssp(wg, seeds).count(), 34),
+      ("hits", () => Graph.hits(gd, 2).count(), 28),
+      ("betweenness", () => Graph.betweenness(gd, seeds).count(), 64),
+      ("cc", () => Graph.connectedComponents(gd).count(), 26))
+    for ((name, run, bound) <- cases) {
+      val (n, jobs) = Observe.jobs(spark)(run())
+      assert(n === 6L, name)
+      assert(jobs <= bound, s"$name ran $jobs jobs, expected <= $bound")
+    }
   }
 
   test("ktruss: messy edges canonicalize; truss sits inside the core") {
