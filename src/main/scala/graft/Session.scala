@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * the spec suite, [[Bench]], [[Verify]], the `graft.tools` harnesses and
   * [[graft.run.Run]] all plan under the same confs.
   *
-  * The list: AQE on, UTC session time zone, UI off, and the TopK
+  * The list: AQE on, UTC session time zone, UI off, parquet
+  * TIMESTAMP(NANOS) read as long nanos (normalized by [[Tables.load]]),
+  * and the TopK
   * hash-aggregate capacity ([[graft.functions.TopK.FallbackConf]] at
   * [[graft.functions.TopK.RequiredFallbackThreshold]]; the rankers raise
   * it lazily too, the session default documents it), with log level
@@ -19,6 +21,7 @@ object Session {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     graft.functions.TopK.FallbackConf ->
       graft.functions.TopK.RequiredFallbackThreshold.toString)
 
@@ -42,7 +45,8 @@ object Session {
   /** The between-gates release: drop the SQL cache (Dedup pins shingle/
     * signature relations for its self-joins), unpersist every RDD (the
     * eager round operators hand their final round's checkpoint blocks
-    * to the caller, and `clearCache` does not touch them), then GC so
+    * to the caller, and `clearCache` does not touch them; local
+    * checkpoints are freed without `RDD.unpersist`'s lineage WARN), then GC so
     * ContextCleaner's weak references reclaim broadcasts and shuffle
     * state. Without it, reps 2..n of a gate hit rep 1's caches and the
     * leftovers of one gate tax every later one (measured in Bench: q_corr
@@ -51,7 +55,8 @@ object Session {
     * Returns the seconds the GC took. */
   def release(spark: SparkSession): Double = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(org.apache.spark.rdd.GraftBlocks.unpersist(_, blocking = true))
     val t0 = System.nanoTime()
     System.gc()
     (System.nanoTime() - t0) / 1e9

@@ -23,12 +23,12 @@ object Tables {
     * Spark-written scale-ups (BIGINT nanos, since Spark cannot write the
     * nanos logical type back). All three normalize to the same
     * session-UTC microsecond TimestampType column, keeping oracle
-    * parity and one downstream schema.
+    * parity and one downstream schema. The nanos read needs
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[Session]] sets.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -25,12 +25,24 @@ import scala.collection.mutable.ArrayBuffer
   *     caller composing them repeatedly in one session should pass an
   *     explicit scope and close it after its own action completes, as
   *     the pipelines and tools/WinnowScale do.
+  *   - [[Rounds]] keeps its pins in a private scope: an operator
+  *     running under [[Rounds.run]] never holds a scope itself, and the
+  *     call closes the scope on every exit path, errors included.
   */
 final class CacheScope {
   private val pinned = ArrayBuffer.empty[Dataset[_]]
 
   /** Register an already-pinned relation for later release. */
   def track[T](ds: Dataset[T]): Dataset[T] = synchronized { pinned += ds; ds }
+
+  /** Unpersist `ds` now (non-blocking) if it is tracked here (by
+    * reference); false if it is not.
+    */
+  def release(ds: Dataset[_]): Boolean = synchronized {
+    val i = pinned.indexWhere(_ eq ds)
+    if (i >= 0) pinned.remove(i).unpersist(false)
+    i >= 0
+  }
 
   /** Unpersist every tracked relation (non-blocking) and forget them.
     * Idempotent; the scope is reusable after close.

@@ -465,10 +465,9 @@ object Dedup {
   def curate(df: DataFrame, idCol: Column, text: Column,
       stopwords: Seq[String], minQuality: Double,
       n: Int, numHashes: Int, bands: Int, threshold: Double,
-      maxBucketSize: Int = -1): DataFrame = {
+      maxBucketSize: Int = -1): DataFrame = Rounds.run(df, "curate") { rounds =>
     // kept is read twice (signature build + final anti-join): one
     // eager checkpoint runs the quality scan once (see [[curateFull]])
-    val rounds = new Rounds(df, "curate")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -821,31 +820,29 @@ object Dedup {
 
     // Each round is a [[Rounds]] checkpoint materialized by its own
     // signature fold, and the superseded round is released once the
-    // next is materialized —
-    // only the final star edge set stays, because the returned
-    // DataFrame reads through it (its storage follows the result's
-    // lifetime: ContextCleaner reclaims local blocks when the RDD is
-    // GC'd; reliable files need spark.cleaner.referenceTracking
-    // .cleanCheckpoints or session teardown).
-    val rounds = new Rounds(pairs, "connectedComponents")
-    var (cur, curSig) = rounds.markWith(
-      canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))(ccSignature)
-    var converged = curSig._1 == 0L
-    var round = 0
-    while (!converged && round < maxIter) {
-      val (next, nextSig) = rounds.replaceWith(cur,
-        canon(smallStar(canon(largeStar(cur)))))(ccSignature)
-      converged = nextSig == curSig
-      cur = next
-      curSig = nextSig
-      round += 1
+    // next is materialized — only the final star edge set outlives
+    // the call, because the returned DataFrame reads through it (see
+    // [[Rounds]] for its lifetime).
+    Rounds.run(pairs, "connectedComponents") { rounds =>
+      var (cur, curSig) = rounds.markWith(
+        canon(pairs.select(col(ci).as("u"), col(cj).as("v"))))(ccSignature)
+      var converged = curSig._1 == 0L
+      var round = 0
+      while (!converged && round < maxIter) {
+        val (next, nextSig) = rounds.replaceWith(cur,
+          canon(smallStar(canon(largeStar(cur)))))(ccSignature)
+        converged = nextSig == curSig
+        cur = next
+        curSig = nextSig
+        round += 1
+      }
+      require(converged, s"connectedComponents: no convergence in $maxIter rounds")
+      // converged edges are stars (member, component-min); minima map to
+      // themselves
+      cur.select(col("u").as("id"), col("v").as("rep"))
+        .union(cur.select(col("v").as("id"), col("v").as("rep")))
+        .distinct()
     }
-    require(converged, s"connectedComponents: no convergence in $maxIter rounds")
-    // converged edges are stars (member, component-min); minima map to
-    // themselves
-    cur.select(col("u").as("id"), col("v").as("rep"))
-      .union(cur.select(col("v").as("id"), col("v").as("rep")))
-      .distinct()
   }
 
   /** [[curate]] with the transitively-closed keeper rule: near-dup
@@ -859,10 +856,9 @@ object Dedup {
   def curateClustered(df: DataFrame, idCol: Column, text: Column,
       stopwords: Seq[String], minQuality: Double,
       n: Int, numHashes: Int, bands: Int, threshold: Double,
-      maxBucketSize: Int = -1): DataFrame = {
+      maxBucketSize: Int = -1): DataFrame = Rounds.run(df, "curateClustered") { rounds =>
     // kept read twice (signature build + final anti-join): checkpoint
     // the quality scan once (see [[curateFull]])
-    val rounds = new Rounds(df, "curateClustered")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -918,11 +914,11 @@ object Dedup {
   def curateClusteredBest(df: DataFrame, idCol: Column, text: Column,
       stopwords: Seq[String], minQuality: Double,
       n: Int, numHashes: Int, bands: Int, threshold: Double,
-      maxBucketSize: Int = -1): DataFrame = {
+      maxBucketSize: Int = -1): DataFrame =
+      Rounds.run(df, "curateClusteredBest") { rounds =>
     // kept read THREE times here (signature build, the keeper scores,
     // the final anti-join): checkpoint the quality scan once (see
     // [[curateFull]])
-    val rounds = new Rounds(df, "curateClusteredBest")
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
@@ -953,7 +949,7 @@ object Dedup {
       stopwords: Seq[String], minQuality: Double,
       n: Int, numHashes: Int, bands: Int, threshold: Double,
       decontamN: Int, decontamMinShared: Int,
-      maxBucketSize: Int = -1): DataFrame = {
+      maxBucketSize: Int = -1): DataFrame = Rounds.run(df, "curateFull") { rounds =>
     // The scrub+score scan (PII regex + quality over every document)
     // is the pipeline's most expensive per-row expression, and `uniq`
     // is read by THREE independent consumers (the MinHash signature
@@ -965,7 +961,6 @@ object Dedup {
     // ONCE; the kept checkpoint is released as soon as uniq
     // supersedes it, and uniq's blocks follow the result's lifetime
     // (the documented final-round contract).
-    val rounds = new Rounds(df, "curateFull")
     val kept = rounds.mark(
       df.select(idCol.as("id"), Text.redactPii(text).as("text"))
         .withColumn("quality", Text.qualityScore(col("text"), stopwords))

@@ -84,20 +84,21 @@ object Events {
     val first = ev.filter(col("et") === steps.head)
       .groupBy(col("user")).agg(min(col("us")).as("t1"))
     if (steps.size == 1) return first
-    val rounds = new Rounds(ev, "funnel")
-    (2 to steps.size).foldLeft(rounds.mark(first)) { (prev, k) =>
-      val prevT = s"t${k - 1}"
-      val carry =
-        if (prevT == "t1") prev.select(col("user"), col("t1"))
-        else prev.select(col("user"), col("t1"), col(prevT))
-      val within = maxSpanUs.map(sp => col("us") <= col("t1") + lit(sp))
-        .getOrElse(lit(true))
-      val nxt = ev.filter(col("et") === steps(k - 1))
-        .select(col("user"), col("us"))
-        .join(carry, Seq("user"))
-        .filter(col("us") > col(prevT) && within)
-        .groupBy(col("user")).agg(min(col("us")).as(s"t$k"))
-      rounds.replace(prev, prev.join(nxt, Seq("user"), "left"))
+    Rounds.run(ev, "funnel") { rounds =>
+      (2 to steps.size).foldLeft(rounds.mark(first)) { (prev, k) =>
+        val prevT = s"t${k - 1}"
+        val carry =
+          if (prevT == "t1") prev.select(col("user"), col("t1"))
+          else prev.select(col("user"), col("t1"), col(prevT))
+        val within = maxSpanUs.map(sp => col("us") <= col("t1") + lit(sp))
+          .getOrElse(lit(true))
+        val nxt = ev.filter(col("et") === steps(k - 1))
+          .select(col("user"), col("us"))
+          .join(carry, Seq("user"))
+          .filter(col("us") > col(prevT) && within)
+          .groupBy(col("user")).agg(min(col("us")).as(s"t$k"))
+        rounds.replace(prev, prev.join(nxt, Seq("user"), "left"))
+      }
     }
   }
 

@@ -62,47 +62,10 @@ object Graph {
     * (executor-loss-safe on a real cluster); otherwise local blocks.
     */
   def pageRank(edges: DataFrame, iterations: Int,
-      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille in [0,1000], got $dampingPermille")
-    require(unit > 0, "unit must be positive")
-    val Array(cs, cd) = edges.columns.take(2)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // e0 feeds the node derivation, the out-degree aggregate, AND the
-    // pinned loop relation; nodes0 feeds the N aggregate and the
-    // teleport vector — without the persists the canonicalized edge
-    // subtree re-computes ~4x during the build (measured: the build
-    // was 5 s of the sf0.1 gate's 7 s wall; guide §1.2 "don't compute
-    // things twice")
-    val e0 = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .persist(lvl)
-    val nodes0 = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct().persist(lvl)
-    // N and the constant per-node base term: a 1-row relation,
-    // broadcast into the update — never a driver-side collect
-    def consts(nodes: DataFrame) = nodes.agg(dec(count(lit(1))).as("n"))
-      .select(col("n"),
-        idiv(idiv(dec(lit(unit)) * dec(lit(1000 - dampingPermille)),
-          dec(lit(1000))), col("n")).as("base"),
-        idiv(dec(lit(unit)), col("n")).as("r0"))
-    def rank0(nodes: DataFrame) = nodes.crossJoin(broadcast(consts(nodes)))
-      .select(col("id"), col("r0").as("rank"))
-    if (iterations == 0) {
-      // degenerate path: hand back the lazy plan without holding the
-      // caches (they would outlive the call — the result re-derives)
-      e0.unpersist(false); nodes0.unpersist(false)
-      return rank0(nodes0)
-    }
-    // per-node base/init: the uniform teleport vector, carried as
-    // columns so the loop is shared with the seed-personalized form
-    val based = nodes0.crossJoin(broadcast(consts(nodes0)))
-      .select(col("id"), col("base"), col("r0"))
-    val res = propagate(e0, based, iterations, dampingPermille,
-      longExact = unit <= LongExactUnitBound)
-    e0.unpersist(false); nodes0.unpersist(false)
-    res
-  }
+      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame =
+    powerIteration("pageRank", edges, iterations, dampingPermille, unit,
+        longExact = unit <= LongExactUnitBound)(simpleDirected)(
+      uniformTeleport(_, dampingPermille, unit))
 
   /** Edge-weighted PageRank: a node's rank splits across its
     * out-edges PROPORTIONALLY TO EDGE WEIGHT (w_uv / Σ_u w) instead
@@ -122,37 +85,15 @@ object Graph {
     * default unit, far past any real multiplicity.
     */
   def pageRankWeighted(edges: DataFrame, iterations: Int,
-      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille in [0,1000], got $dampingPermille")
-    require(unit > 0, "unit must be positive")
-    val Array(cs, cd, cw) = edges.columns.take(3)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // persisted for the same multi-consumer reason as [[pageRank]]
-    val e0 = edges.select(col(cs).as("src"), col(cd).as("dst"),
-        col(cw).cast("long").as("w"))
-      .filter(col("w") > 0)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .persist(lvl)
-    val nodes0 = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct().persist(lvl)
-    def consts(nodes: DataFrame) = nodes.agg(dec(count(lit(1))).as("n"))
-      .select(col("n"),
-        idiv(idiv(dec(lit(unit)) * dec(lit(1000 - dampingPermille)),
-          dec(lit(1000))), col("n")).as("base"),
-        idiv(dec(lit(unit)), col("n")).as("r0"))
-    val based = nodes0.crossJoin(broadcast(consts(nodes0)))
-      .select(col("id"), col("base"), col("r0"))
-    if (iterations == 0) {
-      e0.unpersist(false); nodes0.unpersist(false)
-      based.select(col("id"), col("r0").as("rank"))
-    } else {
-      val res = propagate(e0, based, iterations, dampingPermille)
-      e0.unpersist(false); nodes0.unpersist(false)
-      res
-    }
-  }
+      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame =
+    powerIteration("pageRankWeighted", edges, iterations, dampingPermille,
+        unit, longExact = false) { edges =>
+      val Array(cs, cd, cw) = edges.columns.take(3)
+      edges.select(col(cs).as("src"), col(cd).as("dst"),
+          col(cw).cast("long").as("w"))
+        .filter(col("w") > 0)
+        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+    }(uniformTeleport(_, dampingPermille, unit))
 
   /** Seed-personalized PageRank — TrustRank (Gyöngyi et al.,
     * VLDB'04): teleport mass restricted to `seeds` (first column =
@@ -168,58 +109,75 @@ object Graph {
     * empty effective seed set yields all-zero ranks.
     */
   def trustRank(edges: DataFrame, seeds: DataFrame, iterations: Int,
-      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame = {
+      dampingPermille: Int = 850, unit: Long = 1000000000000L): DataFrame =
+    powerIteration("trustRank", edges, iterations, dampingPermille, unit,
+        longExact = unit <= LongExactUnitBound)(simpleDirected) { nodes0 =>
+      val seedIds = seeds.select(col(seeds.columns.head).as("id")).distinct()
+      val flagged = nodes0.join(seedIds.withColumn("s", lit(1)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("s"), lit(0)).as("s"))
+      val n = flagged.agg(dec(sum(col("s"))).as("sn"))
+        .select(col("sn"),
+          when(col("sn") === dec(lit(0)), dec(lit(0)))
+            .otherwise(idiv(idiv(dec(lit(unit)) * dec(lit(1000 - dampingPermille)),
+              dec(lit(1000))), col("sn"))).as("sbase"),
+          when(col("sn") === dec(lit(0)), dec(lit(0)))
+            .otherwise(idiv(dec(lit(unit)), col("sn"))).as("sr0"))
+      flagged.crossJoin(broadcast(n))
+        .select(col("id"),
+          when(col("s") === 1, col("sbase")).otherwise(dec(lit(0))).as("base"),
+          when(col("s") === 1, col("sr0")).otherwise(dec(lit(0))).as("r0"))
+    }
+
+  /** The first two columns of `edges` as a duplicate-free (src, dst)
+    * relation. */
+  private def simpleDirected(edges: DataFrame): DataFrame = {
+    val Array(cs, cd) = edges.columns.take(2)
+    edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
+  }
+
+  /** The uniform teleport terms (id, base, r0): N and the constant
+    * per-node base term come from a 1-row relation broadcast into the
+    * update — never a driver-side collect.
+    */
+  private def uniformTeleport(nodes: DataFrame, dampingPermille: Int,
+      unit: Long): DataFrame = {
+    val consts = nodes.agg(dec(count(lit(1))).as("n"))
+      .select(col("n"),
+        idiv(idiv(dec(lit(unit)) * dec(lit(1000 - dampingPermille)),
+          dec(lit(1000))), col("n")).as("base"),
+        idiv(dec(lit(unit)), col("n")).as("r0"))
+    nodes.crossJoin(broadcast(consts)).select(col("id"), col("base"), col("r0"))
+  }
+
+  /** The front end [[pageRank]], [[pageRankWeighted]] and [[trustRank]]
+    * share: `prep` turns the caller's edges into the loop's
+    * (src, dst[, w]) relation and `teleport` the node set into the
+    * per-node (id, base, r0) teleport terms; zero iterations return
+    * r0 as a lazy plan. The edge relation and the node set are pinned:
+    * the edges feed the node derivation, the out-degree aggregate AND
+    * the loop relation, the nodes the N aggregate and the teleport
+    * vector — unpinned, the canonicalized edge subtree re-computes ~4x
+    * during the build (measured: the build was 5 s of the sf0.1 gate's
+    * 7 s wall; guide §1.2 "don't compute things twice").
+    */
+  private def powerIteration(op: String, edges: DataFrame, iterations: Int,
+      dampingPermille: Int, unit: Long, longExact: Boolean)(
+      prep: DataFrame => DataFrame)(
+      teleport: DataFrame => DataFrame): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(dampingPermille >= 0 && dampingPermille <= 1000,
       s"dampingPermille in [0,1000], got $dampingPermille")
     require(unit > 0, "unit must be positive")
-    val Array(cs, cd) = edges.columns.take(2)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // persisted for the same multi-consumer reason as [[pageRank]]
-    val e0 = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .persist(lvl)
-    val nodes0 = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct().persist(lvl)
-    val seedIds = seeds.select(col(seeds.columns.head).as("id")).distinct()
-    val flagged = nodes0.join(seedIds.withColumn("s", lit(1)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("s"), lit(0)).as("s"))
-    val n = flagged.agg(dec(sum(col("s"))).as("sn"))
-      .select(col("sn"),
-        when(col("sn") === dec(lit(0)), dec(lit(0)))
-          .otherwise(idiv(idiv(dec(lit(unit)) * dec(lit(1000 - dampingPermille)),
-            dec(lit(1000))), col("sn"))).as("sbase"),
-        when(col("sn") === dec(lit(0)), dec(lit(0)))
-          .otherwise(idiv(dec(lit(unit)), col("sn"))).as("sr0"))
-    val based = flagged.crossJoin(broadcast(n))
-      .select(col("id"),
-        when(col("s") === 1, col("sbase")).otherwise(dec(lit(0))).as("base"),
-        when(col("s") === 1, col("sr0")).otherwise(dec(lit(0))).as("r0"))
-    if (iterations == 0) {
-      e0.unpersist(false); nodes0.unpersist(false)
-      based.select(col("id"), col("r0").as("rank"))
-    } else {
-      val res = propagate(e0, based, iterations, dampingPermille,
-        longExact = unit <= LongExactUnitBound)
-      e0.unpersist(false); nodes0.unpersist(false)
-      res
+    Rounds.run(edges, op) { rounds =>
+      val e0 = rounds.pin(prep(edges))
+      val nodes0 = rounds.pin(e0.select(col("src").as("id"))
+        .union(e0.select(col("dst").as("id"))).distinct())
+      val based = teleport(nodes0)
+      if (iterations == 0) based.select(col("id"), col("r0").as("rank"))
+      else propagate(rounds, e0, based, iterations, dampingPermille, longExact)
     }
   }
 
-  /** The shared power-iteration loop: `based` is (id, base, r0) — the
-    * per-node teleport terms. Like [[Dedup.connectedComponents]] this
-    * RUNS actions: each round materializes into a checkpoint and the
-    * superseded round's blocks are released — a pure lazy plan
-    * re-derives every previous round per reference, making join work
-    * QUADRATIC in iterations (measured: the lazy form spent 3× the
-    * per-round cost at 3 rounds). Static edge/node/degree relations
-    * persist for the loop and release on return (the final round's
-    * checkpoint carries the result). With a session checkpoint dir
-    * set, rounds use reliable checkpoints — set one in production:
-    * checkpoint FILES survive executor loss and cache eviction, while
-    * the fallback local blocks are a truncated lineage whose loss is
-    * unrecoverable (observed once at 126M nodes on an 8 GB heap under
-    * GC-pressure eviction).
-    */
   /** Largest `unit` for which the UNIFORM power iteration is run in
     * native LONG arithmetic instead of decimal(38,0): every loop value
     * is non-negative and bounded by the total teleport mass (floors
@@ -267,10 +225,17 @@ object Graph {
     if (buildRows <= cap * p) df.hint("shuffle_hash") else df
   }
 
-  private def propagate(e0: DataFrame, based0: DataFrame, iterations: Int,
-      dampingPermille: Int, longExact: Boolean = false): DataFrame = {
-    val rounds = new Rounds(e0, "pageRank")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  /** The shared power-iteration loop: `based` is (id, base, r0) — the
+    * per-node teleport terms. Each round materializes into a
+    * checkpoint and the superseded round's is released — a pure lazy
+    * plan re-derives every previous round per reference, making join
+    * work QUADRATIC in iterations (measured: the lazy form spent 3×
+    * the per-round cost at 3 rounds). The static edge/node/degree
+    * relations are pinned for the loop; the final round's checkpoint
+    * carries the result.
+    */
+  private def propagate(rounds: Rounds, e0: DataFrame, based0: DataFrame,
+      iterations: Int, dampingPermille: Int, longExact: Boolean): DataFrame = {
     // weighted flavor: when the edge relation carries a `w` column,
     // a node's mass splits w_uv/Σ_u w instead of 1/outdeg — for
     // constant w the floor divisions cancel exactly
@@ -292,17 +257,14 @@ object Graph {
     // and weight sums are ≤ the decimal od by construction there.
     val outdeg = e0.groupBy(col("src")).agg(
       (if (longExact) sum(wc).cast("long") else dec(sum(wc))).as("od"))
-    val e = e0.join(outdeg, Seq("src"))
-      .repartition(col("src")).persist(lvl)
+    val e = rounds.pin(e0.join(outdeg, Seq("src")).repartition(col("src")))
     e.count()
-    val based = (if (longExact)
+    val based = rounds.pin((if (longExact)
         based0.select(col("id"), col("base").cast("long").as("base"),
           col("r0").cast("long").as("r0"))
       else based0)
-      .repartition(col("id")).persist(lvl)
-    var cur = rounds.mark(based.select(col("id"),
-      (if (longExact && iterations == 0) col("r0").cast("decimal(38,0)")
-       else col("r0")).as("rank")))
+      .repartition(col("id")))
+    var cur = rounds.mark(based.select(col("id"), col("r0").as("rank")))
     for (it <- 0 until iterations) {
       val rank = cur
       // non-negative long division IS the floor, so `DIV` on the long
@@ -338,7 +300,6 @@ object Graph {
         based.join(contrib.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"), rankExpr.as("rank")))
     }
-    e.unpersist(false); based.unpersist(false)
     cur
   }
 
@@ -360,16 +321,12 @@ object Graph {
     * total as a literal, so no aggregate or broadcast job prices it.
     */
   def hits(edges: DataFrame, iterations: Int,
-      unit: Long = 1000000000000L): DataFrame = {
+      unit: Long = 1000000000000L): DataFrame = Rounds.run(edges, "hits") { rounds =>
     require(iterations >= 0, "iterations must be >= 0")
     require(unit > 0, "unit must be positive")
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "hits")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .persist(lvl)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist(lvl)
+    val e = rounds.pin(simpleDirected(edges))
+    val nodes = rounds.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     // sum-normalize a raw score relation to Σ ≈ unit (exact floor):
     // the round's mark folds the exact total in its own job, and the
     // normalization is a lazy projection over the checkpoint with the
@@ -413,12 +370,9 @@ object Graph {
       .select(col("id"),
         coalesce(col("hub"), dec(lit(0))).as("hub"),
         coalesce(col("auth"), dec(lit(0))).as("auth"))
-    // the final join must not out-live the released static relations:
-    // materialize it as its own checkpoint, then drop everything else
-    val res = rounds.mark(out)
-    (h ++ a).foreach(rounds.release)
-    e.unpersist(false); nodes.unpersist(false)
-    res
+    // the final join must not out-live the static relations: its own
+    // checkpoint is all the result reads
+    rounds.mark(out)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — community
@@ -439,18 +393,15 @@ object Graph {
     * one dst-keyed max — two hash exchanges, both partial-aggregable;
     * rounds run the shared checkpoint lifecycle.
     */
-  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
+  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame =
+      Rounds.run(edges, "labelPropagation") { rounds =>
     require(iterations >= 0, "iterations must be >= 0")
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "labelPropagation")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // pinned on src: every round joins the label relation on src, so
     // with the stationary layout only the node-sized label relation
     // exchanges per round (guide §2.4; the bfs/sssp precedent)
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .repartition(col("src")).persist(lvl)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist(lvl)
+    val e = rounds.pin(simpleDirected(edges).repartition(col("src")))
+    val nodes = rounds.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     var lab = rounds.mark(nodes.select(col("id"), col("id").as("label")))
     for (_ <- 0 until iterations) {
       val best = e.join(lab.hint("shuffle_hash"), e("src") === lab("id"))
@@ -465,7 +416,6 @@ object Graph {
           .select(col("id"),
             coalesce(col("adopted"), col("label")).as("label")))
     }
-    e.unpersist(false); nodes.unpersist(false)
     lab
   }
 
@@ -496,13 +446,9 @@ object Graph {
     * network, not memcpy).
     */
   def bfsDistance(edges: DataFrame, seeds: DataFrame,
-      maxDepth: Int): DataFrame = {
+      maxDepth: Int): DataFrame = Rounds.run(edges, "bfsDistance") { rounds =>
     require(maxDepth >= 0, "maxDepth must be >= 0")
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "bfsDistance")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .repartition(col("src")).persist(lvl)
+    val e = rounds.pin(simpleDirected(edges).repartition(col("src")))
     val (dist, _) = rounds.fixpoint(
         seeds.select(col(seeds.columns.head).as("id"))
           .distinct().withColumn("dist", lit(0L)), maxDepth) {
@@ -515,7 +461,6 @@ object Graph {
           .join(dist.hint("shuffle_hash"), Seq("id"), "left_anti")
           .withColumn("dist", lit(depth.toLong))
     }(identity)
-    e.unpersist(false)
     dist
   }
 
@@ -545,14 +490,9 @@ object Graph {
     * Output: (id, triangles) for EVERY node, zero-filled. Exact
     * BIGINT counts — nothing sampled, nothing probabilistic.
     */
-  def triangles(edges: DataFrame): DataFrame = {
-    val rounds = new Rounds(edges, "triangles")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = canonicalUndirected(edges).persist(lvl)
-    val deg = undirectedDegrees(e).persist(lvl)
-    val res = trianglesCanonical(e, deg, rounds)
-    e.unpersist(false); deg.unpersist(false)
-    res
+  def triangles(edges: DataFrame): DataFrame = Rounds.run(edges, "triangles") { rounds =>
+    val e = rounds.pin(canonicalUndirected(edges))
+    trianglesCanonical(rounds, e, rounds.pin(undirectedDegrees(e)))
   }
 
   /** Canonical simple-graph edge set from the first two columns of
@@ -579,16 +519,29 @@ object Graph {
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
 
   /** Triangle core over a PRE-canonicalized edge set `e` (a, b) and
-    * its PRE-aggregated degree relation `deg` (id, deg) — both
-    * persisted by the caller. Lets [[clusteringCoefficient]] reuse
-    * its own canonicalization + degree aggregate instead of paying
-    * them twice (two redundant full edge-set exchanges at the
-    * 100M-edge decade). Returns the checkpointed zero-filled
-    * (id, triangles) relation; the caller owns it.
+    * its PRE-aggregated degree relation `deg` (id, deg) — both pinned
+    * by the caller. Lets [[clusteringCoefficient]] reuse its own
+    * canonicalization + degree aggregate instead of paying them twice
+    * (two redundant full edge-set exchanges at the 100M-edge decade).
+    * Returns the checkpointed zero-filled (id, triangles) relation.
     */
-  private def trianglesCanonical(e: DataFrame, deg: DataFrame,
-      rounds: Rounds): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  private def trianglesCanonical(rounds: Rounds, e: DataFrame,
+      deg: DataFrame): DataFrame =
+    closedWedges(rounds, e, deg) { tri =>
+      val cnt = tri.select(explode(array(col("n0"), col("x"), col("y"))).as("id"))
+        .groupBy(col("id")).agg(count(lit(1)).as("triangles"))
+      rounds.mark(deg.select(col("id")).join(cnt, Seq("id"), "left")
+        .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles")))
+    }
+
+  /** Every triangle of a canonical edge set `e` (a, b), given its degree
+    * relation `deg` (id, deg), exactly once as (n0, x, y): the
+    * degree-ordered orientation (wedge work ≤ m^1.5, see [[triangles]])
+    * is pinned, `close` derives and marks its relation from the
+    * triangles, and the orientation is released once that mark exists.
+    */
+  private def closedWedges(rounds: Rounds, e: DataFrame, deg: DataFrame)(
+      close: DataFrame => DataFrame): DataFrame = {
     // rank = (degree, id): a total order, so orientation is acyclic;
     // rv carries the HEAD's rank key so the wedge join can order the
     // two out-neighbors without re-joining degrees
@@ -596,12 +549,11 @@ object Graph {
       .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
     val lowFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = wd.select(
+    val oriented = rounds.pin(wd.select(
         when(lowFirst, col("a")).otherwise(col("b")).as("u"),
         when(lowFirst, col("b")).otherwise(col("a")).as("v"),
         when(lowFirst, struct(col("db").as("d"), col("b").as("i")))
-          .otherwise(struct(col("da").as("d"), col("a").as("i"))).as("rv"))
-      .persist(lvl)
+          .otherwise(struct(col("da").as("d"), col("a").as("i"))).as("rv")))
     // the count both materializes the pinned orientation ONCE for its
     // three readers and sizes the hint gate below
     val eN = oriented.count()
@@ -615,18 +567,11 @@ object Graph {
       .join(hashHintIfBounded(oriented.as("e2"), eN),
         col("e1.u") === col("e2.u") && col("e1.rv") < col("e2.rv"))
       .select(col("e1.u").as("n0"), col("e1.v").as("x"), col("e2.v").as("y"))
-    val tri = wedges.join(
+    val res = close(wedges.join(
       hashHintIfBounded(
         oriented.select(col("u").as("x"), col("v").as("y")), eN),
-      Seq("x", "y"))
-    val cnt = tri.select(explode(array(col("n0"), col("x"), col("y"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("triangles"))
-    val out = deg.select(col("id")).join(cnt, Seq("id"), "left")
-      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-    // materialize before releasing the pinned orientation blocks
-    // (caller owns the returned checkpoint, as in [[hits]])
-    val res = rounds.mark(out)
-    oriented.unpersist(false)
+      Seq("x", "y")))
+    rounds.release(oriented)
     res
   }
 
@@ -647,22 +592,19 @@ object Graph {
     * `unit` as BIGINT.
     */
   def clusteringCoefficient(edges: DataFrame,
-      unit: Long = 1000000L): DataFrame = {
+      unit: Long = 1000000L): DataFrame =
+      Rounds.run(edges, "clusteringCoefficient") { rounds =>
     require(unit > 0, "unit must be positive")
-    val rounds = new Rounds(edges, "clusteringCoefficient")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = canonicalUndirected(edges).persist(lvl)
-    val deg = undirectedDegrees(e).persist(lvl)
-    val tri = trianglesCanonical(e, deg, rounds)
+    val e = rounds.pin(canonicalUndirected(edges))
+    val deg = rounds.pin(undirectedDegrees(e))
+    val tri = trianglesCanonical(rounds, e, deg)
     val out = tri.join(deg, Seq("id"))
       .select(col("id"), col("deg"), col("triangles"),
         when(col("deg") < 2, lit(0L)).otherwise(
           idiv(dec(lit(unit)) * dec(lit(2L)) * dec(col("triangles")),
             dec(col("deg")) * dec(col("deg") - lit(1L))).cast("long"))
           .as("cc"))
-    val res = rounds.replace(tri, out)
-    e.unpersist(false); deg.unpersist(false)
-    res
+    rounds.replace(tri, out)
   }
 
   /** k-core peeling over the UNDIRECTED simple graph induced by
@@ -692,10 +634,10 @@ object Graph {
     * relation already computed for the peel (one extra count on a
     * node-sized aggregate, no new scan of the edge set).
     */
-  def kcore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+  def kcore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame =
+      Rounds.run(edges, "kcore") { rounds =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val rounds = new Rounds(edges, "kcore")
     val (e, _) = peel(rounds.mark(canonicalUndirected(edges)), k, maxRounds,
       rounds)
     rounds.replace(e, undirectedDegrees(e).select(col("id"), col("deg")))
@@ -709,12 +651,11 @@ object Graph {
     */
   private def peel(e0: DataFrame, k: Int, maxRounds: Int,
       rounds: Rounds): (DataFrame, Boolean) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var e = e0
     var r = 0
     var fix = false
     while (r < maxRounds && !fix) {
-      val deg = undirectedDegrees(e).persist(lvl)
+      val deg = rounds.pin(undirectedDegrees(e))
       val keep = deg.filter(col("deg") >= k).select(col("id"))
       // one aggregate answers the fixpoint test (total == survivors)
       // that two separate count() jobs used to: the agg job also
@@ -729,7 +670,7 @@ object Graph {
             .select(col("a"), col("b")))
         r += 1
       }
-      deg.unpersist(false)
+      rounds.release(deg)
     }
     (e, fix)
   }
@@ -792,7 +733,8 @@ object Graph {
     * documented deterministic contract the gate oracle unrolls).
     */
   def coreness(edges: DataFrame, maxK: Int, maxRoundsPerK: Int,
-      requireConverged: Boolean = false): DataFrame = {
+      requireConverged: Boolean = false): DataFrame =
+      Rounds.run(edges, "coreness") { rounds =>
     require(maxK >= 0,
       s"maxK must be >= 1, or 0 for auto-degeneracy mode, got $maxK")
     require(maxRoundsPerK >= 0, "maxRoundsPerK must be >= 0")
@@ -803,7 +745,6 @@ object Graph {
       "coreness: auto-degeneracy mode (maxK = 0) requires " +
         "maxRoundsPerK >= 1 — a zero-round peel never empties the " +
         "graph, so the unbounded k-loop would never terminate")
-    val rounds = new Rounds(edges, "coreness")
     var e = rounds.mark(canonicalUndirected(edges))
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // every node in the edge set has degree ≥ 1: the 1-core layer
@@ -821,7 +762,7 @@ object Graph {
         cappedKs += k
       val (layer, nLayer) = rounds.markN(undirectedDegrees(e)
         .select(col("id"), lit(k.toLong).as("coreness")))
-      if (nLayer == 0) { rounds.release(layer); empty = true }
+      if (nLayer == 0) empty = true
       else { layers += layer; k += 1 }
     }
     if (cappedKs.nonEmpty) {
@@ -839,60 +780,36 @@ object Graph {
       if (requireConverged) throw new IllegalStateException(msg)
       log.warn(msg)
     }
-    val res = rounds.mark(layers.reduce(_ unionByName _)
+    rounds.mark(layers.reduce(_ unionByName _)
       .groupBy(col("id")).agg(max(col("coreness")).as("coreness")))
-    layers.foreach(rounds.release)
-    rounds.release(e)
-    res
   }
 
   /** Per-edge triangle support over a PRE-canonicalized edge set
-    * (a, b) — the edge-level analogue of [[trianglesCanonical]],
-    * same degree-ordered orientation (wedge work ≤ m^1.5): each
-    * triangle (n0, x, y) credits its THREE canonical edges, one
-    * grouped count, zero-filled onto the edge set. `markAs` checkpoints
-    * the (a, b, support) relation while the oriented edge set is still
-    * pinned; the caller owns the checkpoint.
+    * (a, b) — the edge-level analogue of [[trianglesCanonical]] over
+    * the same [[closedWedges]]: each triangle (n0, x, y) credits its
+    * THREE canonical edges, one grouped count, zero-filled onto the
+    * edge set. `markAs` checkpoints the (a, b, support) relation while
+    * the oriented edge set is still pinned; the caller owns the
+    * checkpoint.
     */
-  private def edgeSupport(e: DataFrame)(
+  private def edgeSupport(rounds: Rounds, e: DataFrame)(
       markAs: DataFrame => DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val deg = undirectedDegrees(e).persist(lvl)
-    val wd = e.join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
-    val lowFirst = col("da") < col("db") ||
-      (col("da") === col("db") && col("a") < col("b"))
-    val oriented = wd.select(
-        when(lowFirst, col("a")).otherwise(col("b")).as("u"),
-        when(lowFirst, col("b")).otherwise(col("a")).as("v"),
-        when(lowFirst, struct(col("db").as("d"), col("b").as("i")))
-          .otherwise(struct(col("da").as("d"), col("a").as("i"))).as("rv"))
-      .persist(lvl)
-    // shuffle_hash hints, size-gated: the trianglesCanonical rationale
-    // (never sort the wedge relation; build the edge-sized side)
-    val eN = oriented.count()
-    val wedges = oriented.as("e1")
-      .join(hashHintIfBounded(oriented.as("e2"), eN),
-        col("e1.u") === col("e2.u") && col("e1.rv") < col("e2.rv"))
-      .select(col("e1.u").as("n0"), col("e1.v").as("x"), col("e2.v").as("y"))
-    val tri = wedges.join(
-      hashHintIfBounded(
-        oriented.select(col("u").as("x"), col("v").as("y")), eN),
-      Seq("x", "y"))
-    val hits = tri.select(explode(array(
-        struct(least(col("n0"), col("x")).as("a"),
-          greatest(col("n0"), col("x")).as("b")),
-        struct(least(col("n0"), col("y")).as("a"),
-          greatest(col("n0"), col("y")).as("b")),
-        struct(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b")))).as("ed"))
-      .groupBy(col("ed.a").as("a"), col("ed.b").as("b"))
-      .agg(count(lit(1)).as("support"))
-    val out = e.join(hits, Seq("a", "b"), "left")
-      .select(col("a"), col("b"),
-        coalesce(col("support"), lit(0L)).as("support"))
-    val res = markAs(out)
-    deg.unpersist(false); oriented.unpersist(false)
+    val deg = rounds.pin(undirectedDegrees(e))
+    val res = closedWedges(rounds, e, deg) { tri =>
+      val hits = tri.select(explode(array(
+          struct(least(col("n0"), col("x")).as("a"),
+            greatest(col("n0"), col("x")).as("b")),
+          struct(least(col("n0"), col("y")).as("a"),
+            greatest(col("n0"), col("y")).as("b")),
+          struct(least(col("x"), col("y")).as("a"),
+            greatest(col("x"), col("y")).as("b")))).as("ed"))
+        .groupBy(col("ed.a").as("a"), col("ed.b").as("b"))
+        .agg(count(lit(1)).as("support"))
+      markAs(e.join(hits, Seq("a", "b"), "left")
+        .select(col("a"), col("b"),
+          coalesce(col("support"), lit(0L)).as("support")))
+    }
+    rounds.release(deg)
     res
   }
 
@@ -946,18 +863,18 @@ object Graph {
     * relation.
     */
   def ktruss(edges: DataFrame, k: Int, maxRounds: Int,
-      requireConverged: Boolean = false): DataFrame = {
+      requireConverged: Boolean = false): DataFrame =
+      Rounds.run(edges, "ktruss") { rounds =>
     require(k >= 2, s"k must be >= 2, got $k")
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val rounds = new Rounds(edges, "ktruss")
     val e0 = rounds.mark(canonicalUndirected(edges))
-    var supp = edgeSupport(e0)(rounds.replace(e0, _))
+    var supp = edgeSupport(rounds, e0)(rounds.replace(e0, _))
     var r = 0
     var fixpoint = false
     while (r < maxRounds && !fixpoint) {
       val (deleted, delCnt) = rounds.markN(
         supp.filter(col("support") < k - 2).select(col("a"), col("b")))
-      if (delCnt == 0) { rounds.release(deleted); fixpoint = true }
+      if (delCnt == 0) fixpoint = true
       else {
         val (keep, keepCnt) = rounds.markN(
           supp.filter(col("support") >= k - 2))
@@ -973,7 +890,7 @@ object Graph {
         supp = if (delCnt > keepCnt) {
           // a projection over keep's checkpoint — edgeSupport's
           // scans all read the stored relation, no extra mark
-          edgeSupport(keep.select(col("a"), col("b")))(
+          edgeSupport(rounds, keep.select(col("a"), col("b")))(
             rounds.replace(supp, _))
         } else {
           // triangles of the PRE-deletion graph containing a deleted
@@ -1156,18 +1073,15 @@ object Graph {
     * setting on exit.
     */
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 20,
-      maxPropRounds: Int = 100): DataFrame = {
+      maxPropRounds: Int = 100): DataFrame =
+      Rounds.run(edges, "stronglyConnectedComponents") { rounds =>
     require(maxOuter >= 1, "maxOuter must be >= 1")
     require(maxPropRounds >= 1, "maxPropRounds must be >= 1")
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "stronglyConnectedComponents")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // every emptiness/size probe below rides the count the mark
     // already runs (markN) — a separate .count()/.isEmpty costs one
     // extra Spark job per probe, round-multiplied (measured: 136 jobs
     // for 17 s of task time on the sf0.1 gate — job-overhead-bound)
-    var (e, eN) = rounds.markN(
-      edges.select(col(cs).as("src"), col(cd).as("dst")).distinct())
+    var (e, eN) = rounds.markN(simpleDirected(edges))
     val spark = edges.sparkSession
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val loopParts = math.max(
@@ -1207,9 +1121,8 @@ object Graph {
             .agg(max(col("o")).as("o"), max(col("i")).as("i"))
             .filter(col("o") === 0 || col("i") === 0)
             .select(col("id"), col("id").as("c")))
-        if (nTrim == 0) {
-          rounds.release(trimmed); tDone = true
-        } else {
+        if (nTrim == 0) tDone = true
+        else {
           // anti-join on the TRIMMED side (not semi on keep): the
           // cascade is the small side, so AQE broadcasts it and the
           // edge relation streams map-side on thin cascades
@@ -1231,8 +1144,8 @@ object Graph {
       // pin both join layouts once per outer round (materialized
       // lazily inside their first consuming round — a separate
       // count() job would add no work, only a job)
-      val eSrc = e.repartition(col("src")).persist(lvl)
-      val eDst = e.repartition(col("dst")).persist(lvl)
+      val eSrc = rounds.pin(e.repartition(col("src")))
+      val eDst = rounds.pin(e.repartition(col("dst")))
       val eCnt = math.max(eN, 1L)
       // squared-relation lifecycle: compose prop with itself, dedup,
       // pin on the loop's probe side; adopted only under the size cap
@@ -1243,10 +1156,10 @@ object Graph {
         val comp = p.as("a").join(p.as("b"),
             col("a.dst") === col("b.src"))
           .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        val sq = p.select(col("src"), col("dst")).unionByName(comp)
+        val sq = rounds.pin(p.select(col("src"), col("dst")).unionByName(comp)
           .filter(col("src") =!= col("dst")).distinct()
-          .repartition(col(pin)).persist(lvl)
-        if (sq.count() > sqCap) { sq.unpersist(false); None }
+          .repartition(col(pin)))
+        if (sq.count() > sqCap) { rounds.release(sq); None }
         else Some(sq)
       }
       val squareAfter = 6
@@ -1254,21 +1167,20 @@ object Graph {
       // running after `squareAfter` rounds it squares (while the cap
       // allows), and the round after a squaring propagates from the
       // full state — shortcuts can improve nodes a pruned frontier no
-      // longer covers
-      class Prop(var rel: DataFrame, pin: String, var owned: Boolean) {
+      // longer covers. The relation a squaring supersedes is released.
+      class Prop(var rel: DataFrame, pin: String) {
         private var canSquare = true
         def source(state: DataFrame, frontier: DataFrame, t: Int): DataFrame =
           if (!canSquare || t <= squareAfter) frontier
           else squareOf(rel, pin) match {
-            case Some(sq) => close(); rel = sq; owned = true; state
+            case Some(sq) => rounds.release(rel); rel = sq; state
             case None => canSquare = false; frontier
           }
-        def close(): Unit = if (owned) rel.unpersist(false)
       }
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
       // 1. COLOR — frontier-pruned min-reachable-id fixpoint
-      val cProp = new Prop(eDst, "dst", owned = false)
+      val cProp = new Prop(eDst, "dst")
       val (color, cDone) = rounds.fixpoint(
           nodes.select(col("id"), col("id").as("c")), maxPropRounds) {
         (color, frontier, t) =>
@@ -1291,11 +1203,11 @@ object Graph {
       // (re-pinned on src) and can square further on its own: flood
       // distance can exceed the min-label diameter
       val fProp =
-        if (cProp.owned) {
-          val s = cProp.rel.repartition(col("src")).persist(lvl)
+        if (cProp.rel ne eDst) {
+          val s = rounds.pin(cProp.rel.repartition(col("src")))
           s.count()
-          new Prop(s, "src", owned = true)
-        } else new Prop(eSrc, "src", owned = false)
+          new Prop(s, "src")
+        } else new Prop(eSrc, "src")
       val (flood, fDone) = rounds.fixpoint(
           color.filter(col("id") === col("c")), maxPropRounds) {
         (flood, frontier, t) =>
@@ -1321,9 +1233,7 @@ object Graph {
             "left_anti")
           .select(col("src"), col("dst")))
       layers += flood
-      rounds.release(color)
-      eSrc.unpersist(false); eDst.unpersist(false)
-      cProp.close(); fProp.close()
+      Seq(color, eSrc, eDst, cProp.rel, fProp.rel).foreach(rounds.release)
       e = nextE
       eN = nE2
       emptied = eN == 0
@@ -1343,12 +1253,8 @@ object Graph {
     val missing = nodes0
       .join(emitted.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("c"))
-    val res = rounds.mark(emitted.unionByName(missing)
+    rounds.mark(emitted.unionByName(missing)
       .select(col("id"), col("c").as("rep")))
-    layers.foreach(rounds.release)
-    rounds.release(nodes0)
-    rounds.release(e)
-    res
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
@@ -1393,8 +1299,8 @@ object Graph {
     */
   def harmonicCentrality(edges: DataFrame, maxRadius: Int,
       p: Int = 12): DataFrame =
-    hyperBall(edges, maxRadius, p)
-      .select(col("id"), col("harmonic"), col("est").as("reachable"))
+    Rounds.run(edges, "hyperBall")(hyperBallTrace(_, edges, maxRadius, p)._1
+      .select(col("id"), col("harmonic"), col("est").as("reachable")))
 
   /** Lin's closeness centrality from the same HyperBall sweep —
     * closeness that is WELL-DEFINED on disconnected graphs (raw
@@ -1409,11 +1315,11 @@ object Graph {
     */
   def linCentrality(edges: DataFrame, maxRadius: Int,
       p: Int = 12): DataFrame =
-    hyperBall(edges, maxRadius, p)
+    Rounds.run(edges, "hyperBall")(hyperBallTrace(_, edges, maxRadius, p)._1
       .select(col("id"), col("est").as("reachable"),
         col("sumd").as("sum_dist"),
         when(col("sumd") > 0.0, col("est") * col("est") / col("sumd"))
-          .otherwise(lit(1.0)).as("lin"))
+          .otherwise(lit(1.0)).as("lin")))
 
   /** The radius-`r` incoming-reachability sketch per node — the
     * HyperBall counters themselves as a servable relation: (id, sk)
@@ -1429,18 +1335,18 @@ object Graph {
     */
   def reachabilitySketches(edges: DataFrame, radius: Int,
       p: Int = 12): DataFrame =
-    hyperBall(edges, radius, p).select(col("id"), col("sk"))
+    Rounds.run(edges, "hyperBall")(hyperBallTrace(_, edges, radius, p)._1
+      .select(col("id"), col("sk")))
 
   /** HyperANF effective diameter (Boldi, Rosa & Vigna, WWW'11) from
     * the same sweep: the smallest radius t (linearly interpolated
     * between rounds) at which the neighborhood function
     * N(t) = Σ_v |B_t(v)| reaches `quantile` of its final value — the
     * "90% of connected pairs are within t hops" statistic crawl and
-    * social-graph reports lead with. N(t) is read per round as ONE
-    * 1-row decimal-cast aggregate over the already-checkpointed ball
-    * relation (deterministic: per-row estimates round into
+    * social-graph reports lead with. N(t) is folded by each round's
+    * own checkpoint job (deterministic: per-row estimates round into
     * decimal(38,6) before the order-insensitive exact sum), so the
-    * trace costs one tiny job per round on top of the sweep. If
+    * trace costs no job of its own. If
     * `maxRadius` caps the sweep before the balls stop growing, the
     * quantile reads against the SWEPT horizon — raise the cap until
     * the early exit fires for the true diameter.
@@ -1449,7 +1355,8 @@ object Graph {
       p: Int = 12, quantile: Double = 0.9): Double = {
     require(quantile > 0.0 && quantile <= 1.0,
       s"quantile in (0, 1], got $quantile")
-    val (_, trace) = hyperBallTrace(edges, maxRadius, p)
+    val trace = Rounds.run(edges, "hyperBall")(
+      hyperBallTrace(_, edges, maxRadius, p)._2)
     // running max: raw HLL estimates are not strictly monotone across
     // the linear-counting/bias-correction switch, and the N(t)
     // interpolation assumes a non-decreasing trace
@@ -1465,13 +1372,6 @@ object Graph {
       }
     }
   }
-
-  private def hyperBall(edges: DataFrame, maxRadius: Int,
-      p: Int): DataFrame =
-    // trace off: the per-round N(t) read is one full ball-table pass
-    // (the sk payload is 2^p bytes/row) that only effectiveDiameter
-    // consumes — harmonic/lin/reachability callers skip it
-    hyperBallTrace(edges, maxRadius, p, wantTrace = false)._1
 
   /** FRONTIER-PRUNED sweep (the [[sssp]] insight applied to sketch
     * propagation): a node's ball can only grow this round if some
@@ -1489,34 +1389,36 @@ object Graph {
     * prev-join, and the pull each exchanged it before); late rounds,
     * where few balls grow, now cost frontier-proportional work
     * instead of full re-exchanges (GraphScale hyperball decades
-    * record the per-round decay).
+    * record the per-round decay). Returns the final ball table and
+    * the trace N(0), N(1), … of [[effectiveDiameter]].
     */
-  private def hyperBallTrace(edges: DataFrame, maxRadius: Int,
-      p: Int, wantTrace: Boolean = true):
-      (DataFrame, Vector[java.math.BigDecimal]) = {
+  private def hyperBallTrace(rounds: Rounds, edges: DataFrame,
+      maxRadius: Int, p: Int): (DataFrame, Vector[java.math.BigDecimal]) = {
     require(maxRadius >= 1, "maxRadius must be >= 1")
-    val rounds = new Rounds(edges, "hyperBall")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val Array(cs, cd) = edges.columns.take(2)
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-      .repartition(col("src")).persist(lvl)
+    val e = rounds.pin(simpleDirected(edges).repartition(col("src")))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
+    // N(t) = Σ est, each estimate rounded into decimal(38,6) inside the
+    // fold's projection and summed exactly, is folded by every mark's
+    // own job (a round's fold also counts the balls that grew)
+    val est6 = col("est").cast("decimal(38,6)")
+    val zero = java.math.BigDecimal.ZERO.setScale(6)
+    def plus(n: java.math.BigDecimal, r: Row, i: Int) =
+      if (r.isNullAt(i)) n else n.add(r.getDecimal(i))
     // splitmix64 node hashes — the q_hll gates' oracle-renderable
     // hash family (xxhash64 has no DuckDB rendering)
-    var cur = rounds.mark(nodes.groupBy(col("id"))
+    val (ball0, n0) = rounds.markFold(nodes.groupBy(col("id"))
       .agg(Hll.hllSketch(Sampling.splitmix64(col("id")), p).as("sk"))
       .select(col("id"), col("sk"), Hll.hllEstimate(col("sk")).as("est"),
-        lit(0.0).as("harmonic"), lit(0.0).as("sumd")))
+        lit(0.0).as("harmonic"), lit(0.0).as("sumd")), est6)(zero)(
+      plus(_, _, 0))(_ add _)
+    var cur = ball0
     // round-0 frontier: every ball was just created
     var changed = cur.select(col("id"), col("sk"))
-    def nOf(df: DataFrame): java.math.BigDecimal =
-      // coalesce: sum over zero rows is null (empty edge relation)
-      df.agg(coalesce(sum(col("est").cast("decimal(38,6)")),
-          lit(0).cast("decimal(38,6)")).cast("decimal(38,6)"))
-        .head().getDecimal(0)
-    val trace = Vector.newBuilder[java.math.BigDecimal]
-    if (wantTrace) trace += nOf(cur)
+    val trace = Vector.newBuilder[java.math.BigDecimal] += n0
+    val grewAndN = Rounds.fold(col("__grew"), est6)((0L, zero))(
+      (a, r: Row) => (a._1 + (if (r.getBoolean(0)) 1L else 0L), plus(a._2, r, 1)))(
+      (x, y) => (x._1 + y._1, x._2.add(y._2)))
     var t = 1
     var done = false
     while (t <= maxRadius && !done) {
@@ -1528,10 +1430,10 @@ object Graph {
         .select(col("dst").as("id"), col("sk"))
       val delta = pulled.groupBy(col("id"))
         .agg(Hll.hllMerge(col("sk")).as("__dsk"))
-      // one aggregate materializes the round and counts the grown
-      // balls (the next frontier); a round where nothing grew equals
-      // its input, so it replaces it all the same
-      val (nxt, (_, grew)) = rounds.replaceWith(cur,
+      // the mark's one job counts the grown balls (the next frontier)
+      // and sums N(t); a round where nothing grew equals its input, so
+      // it replaces it all the same
+      val (nxt, (grew, n)) = rounds.replaceWith(cur,
         cur.join(delta.hint("shuffle_hash"), Seq("id"), "left")
           .withColumn("__nsk", when(col("__dsk").isNull, col("sk"))
             .otherwise(Hll.hllMerge2(col("sk"), col("__dsk"))))
@@ -1545,19 +1447,15 @@ object Graph {
             (col("sumd") + when(col("__grew"),
               greatest(col("__nest") - col("est"), lit(0.0)) *
                 lit(t.toDouble)).otherwise(lit(0.0))).as("sumd"),
-            col("__grew"))) { ck =>
-        val r = ck.agg(count(lit(1)), count(when(col("__grew"), 1))).head()
-        (r.getLong(0), r.getLong(1))
-      }
+            col("__grew")))(grewAndN)
       cur = nxt
       if (grew == 0) done = true
       else {
         changed = cur.filter(col("__grew")).select(col("id"), col("sk"))
         t += 1
-        if (wantTrace) trace += nOf(cur)
+        trace += n
       }
     }
-    e.unpersist(false)
     (cur, trace.result())
   }
 
@@ -1611,12 +1509,11 @@ object Graph {
     * round on a cluster). Exact BIGINT arithmetic end-to-end:
     * distances are bit-stable under any partitioning.
     */
-  def sssp(edges: DataFrame, seeds: DataFrame, maxIter: Int = 50): DataFrame = {
+  def sssp(edges: DataFrame, seeds: DataFrame, maxIter: Int = 50): DataFrame =
+      Rounds.run(edges, "sssp") { rounds =>
     require(maxIter >= 0, "maxIter must be >= 0")
     val Array(cs, cd, cw) = edges.columns.take(3)
-    val rounds = new Rounds(edges, "sssp")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst"),
+    val e = rounds.pin(edges.select(col(cs).as("src"), col(cd).as("dst"),
         col(cw).cast("long").as("w"))
       .select(col("src"), col("dst"),
         when(col("w").isNull || col("w") < 0, raise_error(concat(
@@ -1628,7 +1525,7 @@ object Graph {
             .cast("long"))
           .otherwise(col("w")).as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src")).persist(lvl)
+      .repartition(col("src")))
     val (dist, _) = rounds.fixpoint(
         seeds.select(col(seeds.columns.head).as("id"))
           .distinct().withColumn("dist", lit(0L)), maxIter) {
@@ -1650,7 +1547,6 @@ object Graph {
             "left_anti")
           .select(col("id"), col("cand").as("dist"))
     }(_.groupBy(col("id")).agg(min(col("dist")).as("dist")))
-    e.unpersist(false)
     dist
   }
 
@@ -1708,30 +1604,25 @@ object Graph {
     * than ever sitting in one task's memory.
     */
   def randomWalks(edges: DataFrame, walkLength: Int, walksPerNode: Int,
-      seed: Long): DataFrame = {
+      seed: Long): DataFrame = Rounds.run(edges, "randomWalks") { rounds =>
     require(walkLength >= 1, s"walkLength must be >= 1, got $walkLength")
     require(walksPerNode >= 1,
       s"walksPerNode must be >= 1, got $walksPerNode")
     import org.apache.spark.sql.expressions.Window
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "randomWalks")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
+    val e = simpleDirected(edges)
     val w = Window.partitionBy(col("src"))
-    val adj = e.select(col("src"), col("dst"),
+    val adj = rounds.pin(e.select(col("src"), col("dst"),
         (row_number().over(w.orderBy(col("dst"))) - 1)
           .cast("long").as("rk"),
         count(lit(1)).over(w).as("deg"))
-      .repartition(col("src")).persist(lvl)
+      .repartition(col("src")))
     adj.count()
     def pick(t: Int): Column =
       col("adjr.rk") === pmod(shiftrightunsigned(
         Sampling.splitmix64(col("wh").bitwiseXOR(lit(t.toLong))), 32),
         col("adjr.deg"))
-    val res = walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
+    walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
       rounds)(firstOrderStep(adj, pick))
-    adj.unpersist(false)
-    res
   }
 
   /** The walk set at step 0: (start, w, id = start, wh) for every node
@@ -1769,8 +1660,9 @@ object Graph {
     // "outs" mark per step (a full second materialization job +
     // walk-set-sized copy) is redundant — the step checkpoints stay
     // alive until the final union reads them, exactly the peak
-    // storage the old outs copies already paid. Emptiness rides the
-    // count the mark already runs (markN), not a per-step isEmpty job.
+    // storage the old outs copies already paid (they are freed with
+    // the call). Emptiness rides the count the mark already runs
+    // (markN), not a per-step isEmpty job.
     var (cur, curN) = rounds.markN(init)
     val steps = scala.collection.mutable.ArrayBuffer(cur)
     var t = 1
@@ -1781,13 +1673,11 @@ object Graph {
       curN = n
       t += 1
     }
-    val res = rounds.mark(steps.zipWithIndex.map { case (df, i) =>
+    rounds.mark(steps.zipWithIndex.map { case (df, i) =>
         df.select(col("start"), col("w"), lit(i.toLong).as("step"),
           col("id"))
       }.reduce(_ unionByName _)
       .select(col("start"), col("w").as("walk"), col("step"), col("id")))
-    steps.foreach(rounds.release)
-    res
   }
 
   /** Weight-proportional random-walk corpus over a (src, dst, weight)
@@ -1818,14 +1708,13 @@ object Graph {
     * rows.
     */
   def randomWalksWeighted(edges: DataFrame, walkLength: Int,
-      walksPerNode: Int, seed: Long): DataFrame = {
+      walksPerNode: Int, seed: Long): DataFrame =
+      Rounds.run(edges, "randomWalksWeighted") { rounds =>
     require(walkLength >= 1, s"walkLength must be >= 1, got $walkLength")
     require(walksPerNode >= 1,
       s"walksPerNode must be >= 1, got $walksPerNode")
     import org.apache.spark.sql.expressions.Window
     val Array(cs, cd, cw) = edges.columns.take(3)
-    val rounds = new Rounds(edges, "randomWalksWeighted")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
     // Cumulative-interval sums in decimal(38,0), NOT raw LONG: long
     // window sums of caller-supplied weights wrap silently under
@@ -1855,7 +1744,7 @@ object Graph {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
     val totRaw = sum(col("ew")).over(w)
-    val adj = e.select(col("src"), col("dst"),
+    val adj = rounds.pin(e.select(col("src"), col("dst"),
         (sum(col("ew")).over(wo) - col("ew")).as("lo"),
         sum(col("ew")).over(wo).as("hi"),
         when(totRaw.isNull, raise_error(concat(
@@ -1864,7 +1753,7 @@ object Graph {
             lit(" — the cumulative-interval pick is undefined; "),
             lit("rescale the weights")))
           .cast("decimal(38,0)")).otherwise(totRaw).as("tot"))
-      .repartition(col("src")).persist(lvl)
+      .repartition(col("src")))
     adj.count()
     def pick(t: Int): Column = {
       val u32 = shiftrightunsigned(
@@ -1873,10 +1762,8 @@ object Graph {
         lit(4294967296L).cast(dec38))
       x >= col("adjr.lo").cast(dec38) && x < col("adjr.hi").cast(dec38)
     }
-    val res = walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
+    walkCorpus(walkStarts(e, walksPerNode, seed), walkLength,
       rounds)(firstOrderStep(adj, pick))
-    adj.unpersist(false)
-    res
   }
 
   /** Newman modularity report for a community assignment — the
@@ -1978,16 +1865,15 @@ object Graph {
     * every per-round exchange is frontier/layer-sized.
     */
   def betweenness(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 12,
-      unit: Long = 1000000000000L): DataFrame = {
+      unit: Long = 1000000000000L): DataFrame =
+      Rounds.run(edges, "betweenness") { rounds =>
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     require(unit >= 1L, s"unit must be >= 1, got $unit")
     val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "betweenness")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst"))
+    val e = rounds.pin(edges.select(col(cs).as("src"), col(cd).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .repartition(col("src")).persist(lvl)
+      .repartition(col("src")))
     val eN = Rounds.rows(e)
     // decimal(38,0) overflow surfaces as NULL under non-ANSI Spark;
     // sigma/delta are never organically null, so a null HERE is a
@@ -2028,7 +1914,7 @@ object Graph {
       val (fresh, (nFresh, freshMax)) = markLayer(rounds,
         cand.join(vis.select(col("s"), col("id")), Seq("s", "id"),
           "left_anti"))
-      if (nFresh == 0) { rounds.release(fresh); exhausted = true }
+      if (nFresh == 0) exhausted = true
       else {
         maxSigma = maxSigma.max(freshMax)
         vis = vis.unionByName(fresh)
@@ -2099,12 +1985,7 @@ object Graph {
     val out = nodes.join(btw, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("btw"), lit(0L).cast(dec38)).as("btw"))
-    val res = rounds.mark(out)
-    // the deepest frame reads its layer's checkpoint: layers free it
-    contribs.drop(1).foreach(rounds.release)
-    layers.foreach(rounds.release)
-    e.unpersist(false)
-    res
+    rounds.mark(out)
   }
 
   /** Checkpoint a [[betweenness]] forward layer (s, id, sigma); the
@@ -2245,19 +2126,17 @@ object Graph {
     */
   def randomWalksBiased(edges: DataFrame, walkLength: Int,
       walksPerNode: Int, seed: Long, returnW: Long = 1000L,
-      commonW: Long = 1000L, exploreW: Long = 1000L): DataFrame = {
+      commonW: Long = 1000L, exploreW: Long = 1000L): DataFrame =
+      Rounds.run(edges, "randomWalksBiased") { rounds =>
     require(walkLength >= 1, s"walkLength must be >= 1, got $walkLength")
     require(walksPerNode >= 1,
       s"walksPerNode must be >= 1, got $walksPerNode")
     require(returnW >= 0 && commonW >= 0 && exploreW >= 0,
       "bias weights must be >= 0")
     import org.apache.spark.sql.expressions.Window
-    val Array(cs, cd) = edges.columns.take(2)
-    val rounds = new Rounds(edges, "randomWalksBiased")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dec38 = "decimal(38,0)"
-    val e = edges.select(col(cs).as("src"), col(cd).as("dst")).distinct()
-    val adj = e.repartition(col("src")).persist(lvl)
+    val e = simpleDirected(edges)
+    val adj = rounds.pin(e.repartition(col("src")))
     // the membership side is a PROJECTION of the already-pinned
     // adjacency — same cache, same src partitioning (the subset rule
     // covers the (pv, emcd) join clustering), no second persist
@@ -2269,7 +2148,7 @@ object Graph {
     val init = walkStarts(e, walksPerNode, seed)
       .select(col("start"), col("w"), col("id"),
         lit(null).cast("long").as("prev"), col("wh"))
-    val res = walkCorpus(init, walkLength, rounds) { (cur, t) =>
+    walkCorpus(init, walkLength, rounds) { (cur, t) =>
       val cand = cur.join(adj.as("adjr"), col("id") === col("adjr.src"))
         .select(col("start"), col("w"), col("wh"), col("prev"),
           col("id").as("cv"), col("adjr.dst").as("cd"))
@@ -2310,8 +2189,6 @@ object Graph {
         .select(col("start"), col("w"), col("cd").as("id"),
           col("cv").as("prev"), col("wh"))
     }
-    adj.unpersist(false)
-    res
   }
 
   /** Skip-gram training pairs from a walk corpus — the consumer stage

@@ -1,21 +1,41 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 
 import scala.reflect.ClassTag
 
 /** The round lifecycle of the iterative operators (the graph
   * fixpoints, the funnel's per-step reached relations, the dedup
   * contraction) — the one place that knows how a round is
-  * materialized and how its storage is freed. A lazy plan that
-  * references the previous round re-derives every earlier round per
-  * reference (join work quadratic in rounds), so each round is an
+  * materialized and how an operator's storage is freed. A lazy plan
+  * that references the previous round re-derives every earlier round
+  * per reference (join work quadratic in rounds), so each round is an
   * EAGER checkpoint. With a session checkpoint dir set, rounds use
   * reliable checkpoints — set one in production: checkpoint FILES
   * survive executor loss and cache eviction, while the fallback local
   * blocks are a truncated lineage whose loss is unrecoverable
   * (observed once at 126M nodes on an 8 GB heap under GC-pressure
   * eviction).
+  *
+  * An operator gets its `Rounds` from [[Rounds.run]], which owns
+  * everything the call stores:
+  *  - a PIN ([[pin]]) persists a relation the rounds re-read (an edge
+  *    layout, a degree table) at MEMORY_AND_DISK through an internal
+  *    [[CacheScope]]. No pin outlives the call.
+  *  - a MARK is a round's checkpoint ([[markWith]] and the entry
+  *    points below). A mark the returned DataFrame reads (a
+  *    `LogicalRDD` in its logical plan) outlives the call and follows
+  *    the result's lifetime: ContextCleaner reclaims local blocks once
+  *    the result is garbage, reliable files stay until the checkpoint
+  *    dir is cleaned. Every other mark is freed when the call returns.
+  *  - [[release]] frees a pin or a mark (or a projection of one) early,
+  *    to bound the storage a loop holds at once.
+  * If the body throws — an operator rejecting its input, a convergence
+  * guard — every pin and every mark is freed and the exception is
+  * rethrown, so an error leaves nothing in the caller's session.
   *
   * A round costs ONE Spark job beyond its own query's shuffle stages.
   * The round's query runs as the `localCheckpoint`/`checkpoint` SQL
@@ -51,35 +71,39 @@ import scala.reflect.ClassTag
   * a [[fixpoint]] round adds the deltas its state holds and whether
   * it compacted.
   */
-private[graft] final class Rounds(anchor: DataFrame, op: String) {
+private[graft] final class Rounds private (anchor: DataFrame, op: String) {
   private val sc = anchor.sparkSession.sparkContext
   private val reliable = sc.getCheckpointDir.isDefined
-  private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  private val pins = new CacheScope
+  // the marks not yet released, by checkpoint RDD id
+  private val marks = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
   private var round = 0
   private var tick = System.nanoTime()
 
-  private def checkpointRddOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
+  /** Persist `df` until the call returns (or [[release]]). */
+  def pin(df: DataFrame): DataFrame =
+    pins.track(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Checkpoint `r`, materialized by `action` run on the checkpoint.
-    * Reliable mode persists the round first: the checkpoint-file write
+    * Reliable mode pins the round first: the checkpoint-file write
     * job that follows the action re-reads the cached blocks instead of
-    * recomputing the round, and the cache is dropped once the files
-    * are written.
+    * recomputing the round, and the pin is dropped once the files are
+    * written.
     */
   def markWith[A](r: DataFrame)(action: DataFrame => A): (DataFrame, A) =
     if (reliable) {
-      val p = r.persist(lvl)
-      val ck = p.checkpoint(false)
-      val a = action(ck)
-      p.unpersist(false)
-      (ck, a)
+      val p = pin(r)
+      try { val ck = track(p.checkpoint(false)); (ck, action(ck)) }
+      finally release(p)
     } else {
-      val ck = r.localCheckpoint(false)
+      val ck = track(r.localCheckpoint(false))
       (ck, action(ck))
     }
+
+  private def track(ck: DataFrame): DataFrame = {
+    Rounds.markOf(ck).foreach(rdd => marks(rdd.id) = rdd)
+    ck
+  }
 
   /** [[markWith]] with the row count, one RDD job, as the action. */
   def markN(r: DataFrame): (DataFrame, Long) = markWith(r)(Rounds.rows)
@@ -160,14 +184,28 @@ private[graft] final class Rounds(anchor: DataFrame, op: String) {
     (base, converged)
   }
 
+  /** Free a pin, or a mark of this call (or a projection of one), now.
+    * Anything else, and anything already freed, is left alone.
+    */
   def release(m: DataFrame): Unit =
-    checkpointRddOf(m).foreach { rdd =>
-      if (reliable) rdd.getCheckpointFile.foreach { f =>
-        val path = new org.apache.hadoop.fs.Path(f)
-        path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-      }
-      else rdd.unpersist(false)
+    if (!pins.release(m))
+      Rounds.markOf(m).flatMap(rdd => marks.remove(rdd.id)).foreach(free)
+
+  // local blocks go through GraftBlocks: `RDD.unpersist` on a locally
+  // checkpointed RDD logs a lineage-truncation WARN per call
+  private def free(rdd: RDD[_]): Unit =
+    if (reliable) rdd.getCheckpointFile.foreach { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
     }
+    else org.apache.spark.rdd.GraftBlocks.unpersist(rdd)
+
+  /** Free every pin and every mark whose RDD id is not in `keep`. */
+  private def close(keep: Set[Int]): Unit = {
+    pins.close()
+    marks.valuesIterator.filterNot(rdd => keep(rdd.id)).foreach(free)
+    marks.clear()
+  }
 
   private def logRound(result: Any, extra: String = ""): Unit = {
     round += 1
@@ -181,6 +219,35 @@ private[graft] final class Rounds(anchor: DataFrame, op: String) {
 
 private[graft] object Rounds {
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Rounds")
+
+  /** Run `body` with a fresh `Rounds` for operator `op` (`anchor`
+    * supplies the session) and free what it stored: on return every
+    * pin and every mark the result does not read, on a throw all of
+    * them before the exception propagates. A result that is not a
+    * DataFrame reads no mark.
+    */
+  def run[A](anchor: DataFrame, op: String)(body: Rounds => A): A = {
+    val rounds = new Rounds(anchor, op)
+    val out = try body(rounds) catch {
+      case t: Throwable => rounds.close(Set.empty); throw t
+    }
+    rounds.close(out match {
+      case df: Dataset[_] =>
+        df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      case _ => Set.empty
+    })
+    out
+  }
+
+  /** The checkpoint RDD of a mark, or of a projection of one. */
+  private def markOf(df: DataFrame): Option[RDD[_]] = {
+    def go(p: LogicalPlan): Option[RDD[_]] = p match {
+      case lr: LogicalRDD => Some(lr.rdd)
+      case Project(_, child) => go(child)
+      case _ => None
+    }
+    go(df.queryExecution.logical)
+  }
 
   /** Row count of `df` in one RDD job: no aggregate exchange, and no
     * SQL action, so query listeners do not see it.

@@ -51,9 +51,10 @@ object ScaleData {
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    // events.ts is TIMESTAMP(NANOS): read it as a raw long and write it
-    // back as INT64, which Tables.loadEvents's `ts div 1000` also accepts.
-    val spark = graft.Session.local(32, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    // events.ts may be TIMESTAMP(NANOS): the house session reads it as a
+    // raw long, written back as INT64, which Tables.loadEvents's
+    // `ts div 1000` also accepts.
+    val spark = graft.Session.local(32)
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     // df is by-name: with SPARK_GRAFT_SCALE_TABLES restricting output,

@@ -1590,11 +1590,12 @@ class FunctionsSpec extends SparkSpec {
       "funnel" -> (() => Events.funnel(ev, "user", "us", "type",
         Seq("a", "b", "c"))))
     def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
-    // the checkpoint files a result's plan reads through
-    def readFiles(df: DataFrame): Set[String] =
-      df.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
-      }.flatten.map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath).toSet
+    // the checkpoints a result's plan reads through
+    def readRdds(df: DataFrame) = df.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    def readFiles(df: DataFrame): Set[String] = readRdds(df).flatMap(_.getCheckpointFile)
+      .map(f => new java.io.File(new java.net.URI(f)).getCanonicalPath).toSet
     // the cases are independent: run them concurrently (each is a
     // chain of small driver-bound jobs) to keep the spec short
     def all[A](f: (() => DataFrame) => A): Seq[A] = {
@@ -1603,7 +1604,18 @@ class FunctionsSpec extends SparkSpec {
       Await.result(Future.sequence(cases.map(c => Future(f(c._2)))),
         scala.concurrent.duration.Duration(5, "min"))
     }
-    val local = all(run => rowsOf(run()))
+    // local checkpoints, one case at a time (Spark's CacheManager
+    // re-caches the cached plans that contain an unpersisted one, which
+    // races with other threads' unpersists): no pin stays cached, and
+    // the only blocks left are the checkpoints the results read
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val localRes = cases.map(_._2())
+    assert(spark.sharedState.cacheManager.isEmpty, "pinned relations left cached")
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val localRead = localRes.flatMap(readRdds).map(_.id).toSet
+    assert(added === localRead, s"local rounds left behind: ${(added -- localRead).toSeq.sorted}")
+    val local = localRes.map(rowsOf)
     val dir = java.nio.file.Files.createTempDirectory("rounds-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
@@ -1623,33 +1635,94 @@ class FunctionsSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
+  test("Rounds operators that throw free every pin and mark") {
+    import graft.functions.Graph
+    import scala.jdk.CollectionConverters._
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    // each fails mid-operator: sssp inside its first relaxation round
+    // (the weight guard), SCC at its color guard with the edge layouts
+    // pinned, coreness at its convergence check with every layer marked
+    // (a 1->2->3->4 chain from a range, not a local Seq: the optimizer
+    // folds the guard over local rows, so it would fail at planning)
+    val neg = spark.range(1, 4).select(col("id").as("src"),
+      (col("id") + 1).as("dst"), when(col("id") === 2, -1L).otherwise(2L).as("w"))
+    val cycle = (0L until 64L).map(i => (i, (i + 1) % 64)).toDF("src", "dst")
+    val path = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val cases: Seq[(String, String, () => Any)] = Seq(
+      ("sssp", "negative- or null-weight edge 2->3",
+        () => Graph.sssp(neg, Seq(1L).toDF("id"))),
+      ("scc", "maxPropRounds",
+        () => Graph.stronglyConnectedComponents(cycle, maxPropRounds = 1)),
+      ("coreness", "maxRoundsPerK",
+        () => Graph.coreness(path, maxK = 2, maxRoundsPerK = 1,
+          requireConverged = true)))
+    def check(mode: String): Unit = {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      for ((name, msg, run) <- cases) {
+        val e = intercept[Exception](run())
+        assert(msgs(e).exists(_.contains(msg)), s"$mode $name: ${msgs(e)}")
+        assert(spark.sharedState.cacheManager.isEmpty,
+          s"$mode $name: pinned relations left cached")
+        val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(added.isEmpty, s"$mode $name: persistent RDDs left: $added")
+      }
+    }
+    check("local")
+    val dir = java.nio.file.Files.createTempDirectory("rounds-err")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      check("reliable")
+      val left = java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("rdd-"))
+        .map(_.getFileName.toString).toSeq
+      assert(left.isEmpty, s"round files left behind: $left")
+    } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("Rounds frees superseded local rounds without Spark's lineage WARN") {
+    import graft.functions.Graph
+    // a 24-hop chain: every bfs round releases a local checkpoint
+    val chain = (0L until 24L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (n, lines) = Observe.log("org.apache.spark",
+        org.apache.logging.log4j.Level.WARN) {
+      Graph.bfsDistance(chain, Seq(0L).toDF("id"), 40).count()
+    }
+    assert(n === 25L)
+    val warned = lines.filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, s"${warned.size} lineage WARNs, e.g. ${warned.headOption}")
+  }
+
   test("Rounds folds equal the aggregates they replace, empty relations included") {
     import graft.functions.{Graph, Rounds}
-    val rounds = new Rounds(spark.range(1).toDF(), "spec")
-    // connectedComponents signature: count + exact sum of xxhash64
-    val pairs = Seq((5L, 1L), (9L, 2L), (9L, 5L), (Long.MaxValue, 3L),
-      (-7L, Long.MinValue)).toDF("u", "v")
-    for (e <- Seq(pairs, pairs.limit(0))) {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      val want = (r.getLong(0),
-        if (r.isNullAt(1)) BigInt(0) else BigInt(r.getDecimal(1).toBigInteger))
-      val (ck, got) = rounds.markWith(e)(Dedup.ccSignature)
-      assert(got === want)
-      rounds.release(ck)
-    }
-    assert(rounds.markWith(pairs.limit(0))(Dedup.ccSignature)._2 === ((0L, BigInt(0))))
-    // betweenness forward layer: rows + max σ, σ = 1 on an empty layer
-    val layer = Seq((1L, 2L, "123456789012345678901234567890"), (1L, 3L, "7"),
-        (2L, 3L, "1")).toDF("s", "id", "sigma")
-      .withColumn("sigma", col("sigma").cast("decimal(38,0)"))
-    for (l <- Seq(layer, layer.limit(0))) {
-      val r = l.agg(count(lit(1)), max(col("sigma"))).head()
-      val want = (r.getLong(0),
-        if (r.isNullAt(1)) BigDecimal(1) else BigDecimal(r.getDecimal(1)))
-      val (ck, got) = Graph.markLayer(rounds, l)
-      assert(got === want)
-      rounds.release(ck)
+    Rounds.run(spark.range(1).toDF(), "spec") { rounds =>
+      // connectedComponents signature: count + exact sum of xxhash64
+      val pairs = Seq((5L, 1L), (9L, 2L), (9L, 5L), (Long.MaxValue, 3L),
+        (-7L, Long.MinValue)).toDF("u", "v")
+      for (e <- Seq(pairs, pairs.limit(0))) {
+        val r = e.agg(count(lit(1)),
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
+        val want = (r.getLong(0),
+          if (r.isNullAt(1)) BigInt(0) else BigInt(r.getDecimal(1).toBigInteger))
+        val (ck, got) = rounds.markWith(e)(Dedup.ccSignature)
+        assert(got === want)
+        rounds.release(ck)
+      }
+      assert(rounds.markWith(pairs.limit(0))(Dedup.ccSignature)._2 === ((0L, BigInt(0))))
+      // betweenness forward layer: rows + max σ, σ = 1 on an empty layer
+      val layer = Seq((1L, 2L, "123456789012345678901234567890"), (1L, 3L, "7"),
+          (2L, 3L, "1")).toDF("s", "id", "sigma")
+        .withColumn("sigma", col("sigma").cast("decimal(38,0)"))
+      for (l <- Seq(layer, layer.limit(0))) {
+        val r = l.agg(count(lit(1)), max(col("sigma"))).head()
+        val want = (r.getLong(0),
+          if (r.isNullAt(1)) BigDecimal(1) else BigDecimal(r.getDecimal(1)))
+        val (ck, got) = Graph.markLayer(rounds, l)
+        assert(got === want)
+        rounds.release(ck)
+      }
     }
     // a betweenness run whose forward phase finds no layer (the seed
     // has no out-edge): maxσ stays 1 and every score is 0
@@ -1664,14 +1737,20 @@ class FunctionsSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val calls = "localCheckpoint\\(|\\.checkpoint\\(|getCheckpointFile".r
+    def text(f: String) =
+      new String(java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")
     val offenders = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString)
       .filterNot(_ == "functions/Rounds.scala")
-      .filter(f => calls.findFirstIn(new String(
-        java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")).isDefined)
+      .filter(f => calls.findFirstIn(text(f)).isDefined)
       .toSeq.sorted
     assert(offenders.isEmpty, s"checkpoint calls outside Rounds: $offenders")
+    // the round operators pin through Rounds.pin, never persist themselves
+    val storage = "StorageLevel|persist\\(".r
+    val pinners = Seq("functions/Graph.scala", "functions/Events.scala")
+      .filter(f => storage.findFirstIn(text(f)).isDefined)
+    assert(pinners.isEmpty, s"storage calls outside Rounds: $pinners")
   }
 
   test("connectedComponents: empty pair set yields empty mapping") {

@@ -30,13 +30,20 @@ object Observe {
   }
 
   /** `body`'s result and the `graft.Rounds` DEBUG lines it logged. */
-  def rounds[A](body: => A): (A, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  def rounds[A](body: => A): (A, Seq[String]) =
+    log("graft.Rounds", org.apache.logging.log4j.Level.DEBUG)(body)
+
+  /** `body`'s result and the messages logged at `level` or above under
+    * `logger` (and its children) while it ran; they are not printed.
+    */
+  def log[A](logger: String, level: org.apache.logging.log4j.Level)(
+      body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("rounds-spec", null, null, true,
+    val app = new AbstractAppender("observe-" + logger, null, null, true,
         Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit = {
         lines.add(e.getMessage.getFormattedMessage); ()
@@ -44,16 +51,16 @@ object Observe {
     }
     app.start()
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val cfg = new LoggerConfig("graft.Rounds", Level.DEBUG, false)
-    cfg.addAppender(app, Level.DEBUG, null)
-    ctx.getConfiguration.addLogger("graft.Rounds", cfg)
+    val cfg = new LoggerConfig(logger, level, false)
+    cfg.addAppender(app, level, null)
+    ctx.getConfiguration.addLogger(logger, cfg)
     ctx.updateLoggers()
     try {
       val got = body
       import scala.jdk.CollectionConverters._
       (got, lines.asScala.toSeq)
     } finally {
-      ctx.getConfiguration.removeLogger("graft.Rounds")
+      ctx.getConfiguration.removeLogger(logger)
       ctx.updateLoggers()
       app.stop()
     }
