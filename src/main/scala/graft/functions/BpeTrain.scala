@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark-first decomposition: the 100 TB corpus is touched ONCE (the
   * word-frequency aggregation); every merge iteration then runs on
   * the word-frequency relation — Zipf-bounded (millions of rows at
-  * web scale, not trillions), cached, and fully distributed: one
+  * web scale, not trillions), stored (each merge step replaces it with
+  * a checkpoint of the merged relation), and fully distributed: one
   * partial-aggregated shuffle for weighted pair counts per
   * iteration. The per-iteration argmax is a 1-row driver collect —
   * a model fit reading one parameter per step (the [[PqModel.train]]
@@ -38,13 +39,13 @@ object BpeTrain {
   /** Learn `numMerges` merges from the whitespace-token stream of
     * `text`. Stops early when no pair reaches `minCount`.
     */
-  def train(df: DataFrame, text: Column, numMerges: Int, minCount: Long = 2L): Seq[Merge] = {
+  def train(df: DataFrame, text: Column, numMerges: Int, minCount: Long = 2L): Seq[Merge] =
+      Rounds.run(df, "bpeTrain") { rounds =>
     require(numMerges >= 1 && numMerges <= (1 << 16), s"numMerges out of range: $numMerges")
     val words = df.select(explode(TokenExprs.tokens(text)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-    var syms = words.select(col("cnt"),
-      expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms"))
-      .cache()
+    var syms = rounds.pin(words.select(col("cnt"),
+      expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").as("syms")))
     val merges = Vector.newBuilder[Merge]
     var step = 1
     var done = false
@@ -60,15 +61,11 @@ object BpeTrain {
         val (a, b, c) = (best.head.getAs[String]("a"), best.head.getAs[String]("b"),
           best.head.getAs[Long]("c"))
         merges += Merge(step, a, b, c)
-        val next = syms.withColumn("syms",
-          GraftExpr.column(BpeMergeExpr(GraftExpr.expression(col("syms")), a, b))).cache()
-        next.count() // materialize before releasing the parent
-        syms.unpersist()
-        syms = next
+        syms = rounds.replace(syms, syms.withColumn("syms",
+          GraftExpr.column(BpeMergeExpr(GraftExpr.expression(col("syms")), a, b))))
         step += 1
       }
     }
-    syms.unpersist()
     merges.result()
   }
 

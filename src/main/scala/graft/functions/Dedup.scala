@@ -11,6 +11,15 @@ import org.apache.spark.sql.types.BinaryType
   * Hamming). All are pure DataFrame compositions — shuffles only on
   * shingle/band keys, no driver-side loops — so they scale to
   * billion-document corpora.
+  *
+  * A pair generator re-reads its shingle, fingerprint or signature
+  * relation (the pair join's two sides, the per-doc counts, the verify
+  * joins), so it stores that relation through [[Rounds.run]] as a mark:
+  * the generator runs EAGERLY, computing the stored relation when it is
+  * called, and returns a lazy plan over the mark, which then follows the
+  * result's lifetime (see [[Rounds]]). Nothing a generator stores goes
+  * to the session's cache manager, and a generator that fails frees
+  * everything it stored before the error propagates.
   */
 object Dedup {
 
@@ -75,6 +84,31 @@ object Dedup {
     df.select(idCol.as("id"), explode(shingles(text, n)).as("s0"))
       .select(col("id"), xxhash64(col("s0")).as("s"))
 
+  /** The df cap of the inverted-index generators: `rows` marked, then
+    * (for `cap` > 0) replaced by its rows whose `key` at most `cap`
+    * rows hold. Both relations are stored because both are re-read:
+    * the full one by the hot-key aggregate and the anti-join probe,
+    * the capped one by the per-doc counts and both pair-join sides
+    * (unstored, each re-runs the anti-join: measured 3× wall on the
+    * sf1 skew corpus).
+    */
+  private def dfCapped(rounds: Rounds, rows: DataFrame, key: String,
+      cap: Int): DataFrame = {
+    val all = rounds.mark(rows)
+    if (cap <= 0) all
+    else rounds.replace(all, all.join(
+      all.groupBy(col(key)).agg(count(lit(1)).as("df_"))
+        .filter(col("df_") > cap).select(col(key)),
+      Seq(key), "left_anti"))
+  }
+
+  /** The distinct shingle hashes of a whole corpus (an eval or
+    * reference set), in [[shingleRows]]' hash space.
+    */
+  private def shingleSet(df: DataFrame, text: Column, n: Int): DataFrame =
+    df.select(explode(shingles(text, n)).as("s0"))
+      .select(xxhash64(col("s0")).as("s")).distinct()
+
   /** Exact n-gram Jaccard near-dup pairs (i < j, jaccard ≥ threshold).
     * Algorithm: inverted index on shingles → pair intersection counts →
     * |A∪B| = |A|+|B|−|A∩B|. One shuffle on shingle, one on pair.
@@ -101,25 +135,8 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: Column, text: Column, n: Int,
       threshold: Double, maxDocFreq: Int): DataFrame =
-    ngramJaccardPairs(df, idCol, text, n, threshold, maxDocFreq, CacheScope.unmanaged)
-
-  /** Variant registering its pinned relations in `scope` — see
-    * [[CacheScope]] for the ownership contract.
-    */
-  def ngramJaccardPairs(df: DataFrame, idCol: Column, text: Column, n: Int,
-      threshold: Double, maxDocFreq: Int, scope: CacheScope): DataFrame = {
-    val sh =
-      if (maxDocFreq <= 0) scope.track(shingleRows(df, idCol, text, n).cache())
-      else {
-        // cached: consumers are the hot-shingle aggregation + the
-        // anti-join probe side
-        val shAll = scope.track(shingleRows(df, idCol, text, n).cache())
-        val hot = shAll.groupBy(col("s")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > maxDocFreq).select(col("s"))
-        // cached separately: the capped relation feeds per-doc counts
-        // and both pair-join sides (same shape as winnowPairs)
-        scope.track(shAll.join(hot, Seq("s"), "left_anti").cache())
-      }
+      Rounds.run(df, "ngramJaccardPairs") { rounds =>
+    val sh = dfCapped(rounds, shingleRows(df, idCol, text, n), "s", maxDocFreq)
     val cnt = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     val inter = sh.as("a").join(sh.as("b"), col("a.s") === col("b.s") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("i"), col("b.id").as("j"))
@@ -152,18 +169,11 @@ object Dedup {
     * `containment`-covered by j's.
     */
   def containmentPairs(df: DataFrame, idCol: Column, text: Column, n: Int,
-      threshold: Double, maxDocFreq: Int = 0,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      threshold: Double, maxDocFreq: Int = 0): DataFrame =
+      Rounds.run(df, "containmentPairs") { rounds =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
-    val sh =
-      if (maxDocFreq <= 0) scope.track(shingleRows(df, idCol, text, n).cache())
-      else {
-        val shAll = scope.track(shingleRows(df, idCol, text, n).cache())
-        val hot = shAll.groupBy(col("s")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > maxDocFreq).select(col("s"))
-        scope.track(shAll.join(hot, Seq("s"), "left_anti").cache())
-      }
+    val sh = dfCapped(rounds, shingleRows(df, idCol, text, n), "s", maxDocFreq)
     val cnt = sh.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     // intersections once per UNORDERED pair, then both directions
     val inter = sh.as("a").join(sh.as("b"),
@@ -184,8 +194,8 @@ object Dedup {
     * the caller has no corpus-specific cap.
     */
   def ngramJaccardPairsAuto(df: DataFrame, idCol: Column, text: Column, n: Int,
-      threshold: Double, scope: CacheScope = CacheScope.unmanaged): DataFrame =
-    ngramJaccardPairs(df, idCol, text, n, threshold, autoCap(df.count()), scope)
+      threshold: Double): DataFrame =
+    ngramJaccardPairs(df, idCol, text, n, threshold, autoCap(df.count()))
 
   /** EXACT all-pairs Jaccard with PREFIX FILTERING (Bayardo, Ma &
     * Srikant, "Scaling Up All Pairs Similarity Search", WWW'07) — the
@@ -221,14 +231,13 @@ object Dedup {
     * window + array verifies that buy nothing when no df is hot).
     */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: Column, text: Column, n: Int,
-      threshold: Double, scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      threshold: Double): DataFrame = Rounds.run(df, "ngramJaccardPairsPrefix") { rounds =>
     require(threshold > 0.0 && threshold <= 1.0, s"threshold must be in (0,1], got $threshold")
-    val docs = scope.track(df.select(idCol.as("id"), shingles(text, n).as("sh0"))
+    val docs = rounds.mark(df.select(idCol.as("id"), shingles(text, n).as("sh0"))
       .filter(size(col("sh0")) > 0)
       .select(col("id"),
         array_sort(transform(col("sh0"), s => xxhash64(s))).as("arr"),
-        size(col("sh0")).as("sz"))
-      .cache())
+        size(col("sh0")).as("sz")))
     val flat = docs.select(col("id"), col("sz"), explode(col("arr")).as("s"))
     val dfreq = flat.groupBy(col("s")).agg(count(lit(1)).as("df_"))
     val w = org.apache.spark.sql.expressions.Window
@@ -299,29 +308,28 @@ object Dedup {
     */
   def minhashLshPairs(df: DataFrame, idCol: Column, text: Column, n: Int,
       numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int): DataFrame =
-    minhashLshPairs(df, idCol, text, n, numHashes, bands, threshold, maxBucketSize,
-      CacheScope.unmanaged)
+    Rounds.run(df, "minhashLshPairs")(minhashPairs(_, df, idCol, text, n,
+      numHashes, bands, threshold, maxBucketSize))
 
-  /** Variant registering its pinned relations in `scope` — see
-    * [[CacheScope]] for the ownership contract.
+  /** [[minhashLshPairs]] storing through the caller's `rounds` (the
+    * curation pipelines run it inside their own [[Rounds.run]]).
     */
-  def minhashLshPairs(df: DataFrame, idCol: Column, text: Column, n: Int,
-      numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int,
-      scope: CacheScope): DataFrame = {
+  private def minhashPairs(rounds: Rounds, df: DataFrame, idCol: Column,
+      text: Column, n: Int, numHashes: Int, bands: Int, threshold: Double,
+      maxBucketSize: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
-    // cached: the band explode and both sides of the verify join re-scan
+    // stored: the band explode and both sides of the verify join re-scan
     // this relation; recomputing shingles+signatures 4× dominates without
-    // it. Only (id, sh, sig) is persisted — carrying the raw text too
+    // it. Only (id, sh, sig) is stored — carrying the raw text too
     // was the difference between OOM and completion at the 5M-doc
     // single-JVM point (ROUND7.md §8: banding reads (id, sig), verify
     // reads (id, sh); nothing downstream reads text)
-    val withSig = scope.track(df.select(idCol.as("id"), text.as("text"))
+    val withSig = rounds.mark(df.select(idCol.as("id"), text.as("text"))
       .withColumn("sh", shingles(col("text"), n))
       .filter(size(col("sh")) > 0)
       .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .select(col("id"), col("sh"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("id"), col("sh"), col("sig")))
     val bandedAll = withSig.select(
       col("id"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
@@ -355,10 +363,9 @@ object Dedup {
     * when the caller has no corpus-specific cap.
     */
   def minhashLshPairsAuto(df: DataFrame, idCol: Column, text: Column, n: Int,
-      numHashes: Int, bands: Int, threshold: Double,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame =
+      numHashes: Int, bands: Int, threshold: Double): DataFrame =
     minhashLshPairs(df, idCol, text, n, numHashes, bands, threshold,
-      autoCap(df.count()), scope)
+      autoCap(df.count()))
 
   /** Incremental near-dup pairs for corpus MAINTENANCE: all pairs with
     * at least one member in `newDf` (new×new and new×old), never
@@ -368,16 +375,15 @@ object Dedup {
     * where only NEW band rows probe the combined buckets:
     * candidate work is Σ_bucket new_b · total_b instead of total_b² —
     * for a drop that is 0.1% of the corpus, ~1000× less verify work
-    * than re-running the full pair search, and the history re-scan is
-    * signatures only (at scale, persist the history's (id, sh, sig)
-    * relation once and pass it through `scope`; it is append-only
-    * across drops). Pairs are normalized i < j; results are exactly
-    * `minhashLshPairs(new ∪ old)` minus the old×old pairs (spec-pinned).
+    * than re-running the full pair search (the history is still
+    * re-shingled and re-signed on every call). Pairs are normalized
+    * i < j; results are exactly `minhashLshPairs(new ∪ old)` minus the
+    * old×old pairs (spec-pinned).
     */
   def minhashLshPairsIncremental(newDf: DataFrame, oldDf: DataFrame,
       idCol: Column, text: Column, n: Int, numHashes: Int, bands: Int,
-      threshold: Double, maxBucketSize: Int = 0,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
+      threshold: Double, maxBucketSize: Int = 0): DataFrame =
+      Rounds.run(newDf, "minhashLshPairsIncremental") { rounds =>
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
     def sigs(df: DataFrame, isNew: Int): DataFrame =
@@ -386,8 +392,7 @@ object Dedup {
         .filter(size(col("sh")) > 0)
         .withColumn("sig", minhashSignature(col("sh"), numHashes))
         .select(col("id"), col("sh"), col("sig"), lit(isNew).as("is_new"))
-    val withSig = scope.track(sigs(newDf, 1).unionByName(sigs(oldDf, 0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val withSig = rounds.mark(sigs(newDf, 1).unionByName(sigs(oldDf, 0)))
     val bandedAll = withSig.select(
       col("id"), col("is_new"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
@@ -471,8 +476,8 @@ object Dedup {
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
-    val pairs = minhashLshPairs(kept, col("id"), col("text"), n, numHashes, bands,
-        threshold, resolveCap(maxBucketSize, df))
+    val pairs = minhashPairs(rounds, kept, col("id"), col("text"), n, numHashes,
+        bands, threshold, resolveCap(maxBucketSize, df))
       .select(col("j").as("drop_id")).distinct()
     kept.join(pairs, kept("id") === pairs("drop_id"), "left_anti")
       .select(col("id"), col("quality"))
@@ -503,21 +508,11 @@ object Dedup {
     * capped ones — see ROUND5.md §9).
     */
   def winnowPairs(df: DataFrame, idCol: Column, text: Column, k: Int, w: Int,
-      minOverlap: Double, maxDocFreq: Int = 0,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val fpAll = scope.track(
-      df.select(idCol.as("id"), explode(Winnow.winnow(text, k, w)).as("fp"))
-        .cache()) // consumers: the hot-fp aggregation + the anti-join probe side
-    val fp =
-      if (maxDocFreq <= 0) fpAll
-      else {
-        val hot = fpAll.groupBy(col("fp")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > maxDocFreq).select(col("fp"))
-        // cached separately: the capped relation feeds per-doc counts
-        // and both pair-join sides — uncached, each re-runs the
-        // anti-join (measured 3× wall on the sf1 skew corpus)
-        scope.track(fpAll.join(hot, Seq("fp"), "left_anti").cache())
-      }
+      minOverlap: Double, maxDocFreq: Int = 0): DataFrame =
+      Rounds.run(df, "winnowPairs") { rounds =>
+    val fp = dfCapped(rounds,
+      df.select(idCol.as("id"), explode(Winnow.winnow(text, k, w)).as("fp")),
+      "fp", maxDocFreq)
     val cnt = fp.groupBy(col("id")).agg(count(lit(1)).as("n_fp"))
     fp.as("a").join(fp.as("b"), col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("i"), col("b.id").as("j"))
@@ -543,9 +538,9 @@ object Dedup {
     * trading recall for cost pass an explicit cap to [[winnowPairs]].
     */
   def winnowPairsAuto(df: DataFrame, idCol: Column, text: Column, k: Int, w: Int,
-      minOverlap: Double, scope: CacheScope = CacheScope.unmanaged): DataFrame =
+      minOverlap: Double): DataFrame =
     winnowPairs(df, idCol, text, k, w, minOverlap,
-      autoCap(df.count(), alpha = 0.02, floor = 1000), scope)
+      autoCap(df.count(), alpha = 0.02, floor = 1000))
 
   /** Benchmark decontamination: flag training docs sharing at least
     * `minShared` distinct word n-grams with ANY doc of the evaluation
@@ -560,14 +555,11 @@ object Dedup {
     * [[ngramJaccardPairs]] (collision argument in [[shingleRows]]).
     */
   def decontaminate(train: DataFrame, trainId: Column, trainText: Column,
-      eval: DataFrame, evalText: Column, n: Int, minShared: Int): DataFrame = {
-    val tsh = shingleRows(train, trainId, trainText, n)
-    val esh = eval.select(explode(shingles(evalText, n)).as("s0"))
-      .select(xxhash64(col("s0")).as("s")).distinct()
-    tsh.join(esh, Seq("s"))
+      eval: DataFrame, evalText: Column, n: Int, minShared: Int): DataFrame =
+    shingleRows(train, trainId, trainText, n)
+      .join(shingleSet(eval, evalText, n), Seq("s"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
 
   /** [[decontaminate]] with a broadcast Bloom prefilter on the train
     * side — same exact result (the Bloom only admits candidates; the
@@ -582,36 +574,29 @@ object Dedup {
     * is a codegen'd [[BloomFilterMightContain]] evaluated map-side in
     * the scan stage, so only the ~contamination-rate + fpp fraction
     * of train shingles ever reaches the exchange. Build is one
-    * distributed `stat.bloomFilter` pass over the (cached,
-    * benchmark-scale) eval shingle set.
+    * distributed `stat.bloomFilter` pass over the (stored,
+    * benchmark-scale) eval shingle set, which the mark that stores it
+    * counts for the filter's size.
     */
   def decontaminateBloom(train: DataFrame, trainId: Column, trainText: Column,
       eval: DataFrame, evalText: Column, n: Int, minShared: Int,
-      fpp: Double = 0.01,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val esh = scope.track(
-      eval.select(explode(shingles(evalText, n)).as("s0"))
-        .select(xxhash64(col("s0")).as("s")).distinct()
-        .cache()) // consumers: count, bloom build, exact verify join
-    val expected = esh.count()
+      fpp: Double = 0.01): DataFrame = Rounds.run(train, "decontaminateBloom") { rounds =>
+    // stored: read by the bloom build and the exact verify join
+    val (esh, expected) = rounds.markN(shingleSet(eval, evalText, n))
     // an empty eval set means nothing can be contaminated — and
     // stat.bloomFilter NPEs on an empty build side
     if (expected == 0L)
-      return train.select(trainId.as("id")).limit(0)
-        .withColumn("n_shared", lit(0L))
-    val bf = esh.stat.bloomFilter("s", expected, fpp)
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
+      train.select(trainId.as("id")).limit(0).withColumn("n_shared", lit(0L))
+    else {
+      val mightContain = GraftExpr.column(BloomFilterMightContain(
+        Literal(buildBloomBytes(esh, expected, fpp), BinaryType),
+        GraftExpr.expression(col("s"))))
+      shingleRows(train, trainId, trainText, n)
+        .filter(mightContain)
+        .join(esh, Seq("s"))
+        .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
     }
-    val mightContain = GraftExpr.column(BloomFilterMightContain(
-      Literal(bytes, BinaryType), GraftExpr.expression(col("s"))))
-    shingleRows(train, trainId, trainText, n)
-      .filter(mightContain)
-      .join(esh, Seq("s"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
   }
 
   /** Multi-benchmark contamination report — [[decontaminate]] across
@@ -662,13 +647,10 @@ object Dedup {
     * shingles; the final exchange carries two longs per doc.
     */
   def noveltyStats(train: DataFrame, trainId: Column, trainText: Column,
-      ref: DataFrame, refText: Column, n: Int, fpp: Double = 0.01,
-      scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val esh = scope.track(
-      ref.select(explode(shingles(refText, n)).as("s0"))
-        .select(xxhash64(col("s0")).as("s")).distinct()
-        .cache()) // consumers: count, bloom build, exact verify join
-    val expected = esh.count()
+      ref: DataFrame, refText: Column, n: Int,
+      fpp: Double = 0.01): DataFrame = Rounds.run(train, "noveltyStats") { rounds =>
+    // stored: read by the bloom build and the exact verify join
+    val (esh, expected) = rounds.markN(shingleSet(ref, refText, n))
     noveltyStatsServe(train, trainId, trainText,
       NoveltyRef(esh, buildBloomBytes(esh, expected, fpp), n))
   }
@@ -693,18 +675,14 @@ object Dedup {
   /** Build + persist the frozen novelty reference (`dir/esh` parquet +
     * `dir/meta` with the bloom bytes and n). */
   def writeNoveltyRef(ref: DataFrame, refText: Column, n: Int, dir: String,
-      fpp: Double = 0.01): Unit = {
-    val esh = ref.select(explode(shingles(refText, n)).as("s0"))
-      .select(xxhash64(col("s0")).as("s")).distinct()
-      .cache()
-    try {
-      esh.write.mode("overwrite").parquet(s"$dir/esh")
-      val bytes = buildBloomBytes(esh, esh.count(), fpp)
-      val spark = ref.sparkSession
-      import spark.implicits._
-      Seq((n, bytes)).toDF("n", "bloom")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    } finally { esh.unpersist(); () }
+      fpp: Double = 0.01): Unit = Rounds.run(ref, "writeNoveltyRef") { rounds =>
+    val esh = rounds.pin(shingleSet(ref, refText, n))
+    esh.write.mode("overwrite").parquet(s"$dir/esh")
+    val bytes = buildBloomBytes(esh, esh.count(), fpp)
+    val spark = ref.sparkSession
+    import spark.implicits._
+    Seq((n, bytes)).toDF("n", "bloom")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** Read a persisted novelty reference back, serve-ready. */
@@ -862,16 +840,13 @@ object Dedup {
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
-    // the pipeline owns its pair-generation caches: connectedComponents
-    // materializes the pairs into its round checkpoints (it runs Spark
-    // actions), so nothing downstream references them — release before
-    // returning (see CacheScope)
-    val scope = new CacheScope
-    val pairs = minhashLshPairs(kept, col("id"), col("text"), n, numHashes, bands,
-      threshold, resolveCap(maxBucketSize, df), scope)
+    // the pairs' signature mark is freed on return: connectedComponents
+    // has materialized the pairs into its round checkpoints, so the
+    // result does not read it
+    val pairs = minhashPairs(rounds, kept, col("id"), col("text"), n, numHashes,
+      bands, threshold, resolveCap(maxBucketSize, df))
     val drops = connectedComponents(pairs.select(col("i"), col("j")))
       .filter(col("id") =!= col("rep")).select(col("id").as("drop_id"))
-    scope.close()
     kept.join(drops, kept("id") === drops("drop_id"), "left_anti")
       .select(col("id"), col("quality"))
   }
@@ -922,11 +897,9 @@ object Dedup {
     val kept = rounds.mark(df.select(idCol.as("id"), text.as("text"),
         Text.qualityScore(text, stopwords).as("quality"))
       .filter(col("quality") >= minQuality))
-    val scope = new CacheScope
-    val pairs = minhashLshPairs(kept, col("id"), col("text"), n, numHashes, bands,
-      threshold, resolveCap(maxBucketSize, df), scope)
+    val pairs = minhashPairs(rounds, kept, col("id"), col("text"), n, numHashes,
+      bands, threshold, resolveCap(maxBucketSize, df))
     val cc = connectedComponents(pairs.select(col("i"), col("j")))
-    scope.close()
     val keepers = bestPerCluster(cc, kept.select(col("id"), col("quality")),
       "id", "quality")
     val drops = cc.join(keepers, Seq("rep"))
@@ -968,14 +941,11 @@ object Dedup {
     val keepers = kept.groupBy(Text.fingerprint(col("text")).as("fp"))
       .agg(min(col("id")).as("id")).select(col("id"))
     val uniq = rounds.replace(kept, kept.join(keepers, "id"))
-    // pipeline-owned caches: released once connectedComponents has
-    // materialized the pairs into its round checkpoints (see CacheScope)
-    val scope = new CacheScope
-    val pairs = minhashLshPairs(uniq, col("id"), col("text"), n, numHashes, bands,
-      threshold, resolveCap(maxBucketSize, df), scope)
+    // the signature mark is freed on return, like curateClustered's
+    val pairs = minhashPairs(rounds, uniq, col("id"), col("text"), n, numHashes,
+      bands, threshold, resolveCap(maxBucketSize, df))
     val drops = connectedComponents(pairs.select(col("i"), col("j")))
       .filter(col("id") =!= col("rep")).select(col("id").as("drop_id"))
-    scope.close()
     val deduped = uniq.join(drops, uniq("id") === drops("drop_id"), "left_anti")
     val contaminated = decontaminate(deduped, col("id"), col("text"),
         evalDf.select(Text.redactPii(evalText).as("text")), col("text"),
@@ -1249,9 +1219,9 @@ object Dedup {
     * semantics are documented at [[ngramJaccardPairs]]).
     */
   def jaccardPairsAuto(df: DataFrame, idCol: Column, text: Column, n: Int,
-      threshold: Double, scope: CacheScope = CacheScope.unmanaged): DataFrame =
-    if (threshold >= 0.7) ngramJaccardPairsPrefix(df, idCol, text, n, threshold, scope)
-    else ngramJaccardPairsAuto(df, idCol, text, n, threshold, scope)
+      threshold: Double): DataFrame =
+    if (threshold >= 0.7) ngramJaccardPairsPrefix(df, idCol, text, n, threshold)
+    else ngramJaccardPairsAuto(df, idCol, text, n, threshold)
 
   /** The r-of-m pigeonhole block keys of a 64-bit signature as an
     * array column — the candidate-key scheme [[hammingPairs]] joins on

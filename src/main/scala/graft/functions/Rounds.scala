@@ -7,30 +7,37 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 import scala.reflect.ClassTag
 
-/** The round lifecycle of the iterative operators (the graph
+/** The storage owner of the library: every relation a library
+  * operator stores — the rounds of the iterative operators (the graph
   * fixpoints, the funnel's per-step reached relations, the dedup
-  * contraction) — the one place that knows how a round is
-  * materialized and how an operator's storage is freed. A lazy plan
-  * that references the previous round re-derives every earlier round
-  * per reference (join work quadratic in rounds), so each round is an
-  * EAGER checkpoint. With a session checkpoint dir set, rounds use
-  * reliable checkpoints — set one in production: checkpoint FILES
-  * survive executor loss and cache eviction, while the fallback local
-  * blocks are a truncated lineage whose loss is unrecoverable
-  * (observed once at 126M nodes on an 8 GB heap under GC-pressure
-  * eviction).
+  * contraction) and the relations a one-pass operator re-reads (a pair
+  * generator's shingle or signature relation, a Bloom join's build
+  * side, a tuning walk's baseline) — is stored through a `Rounds`, the
+  * one place that knows how a relation is materialized and how it is
+  * freed. An operator that stores for a lazy result marks (checkpoints)
+  * it, so it runs EAGERLY: the stored relations are computed when the
+  * operator is called, and only the final plan over them stays lazy.
+  * A lazy plan that references the previous round re-derives every
+  * earlier round per reference (join work quadratic in rounds), so
+  * each round is an EAGER checkpoint too. With a session checkpoint
+  * dir set, marks are reliable checkpoints — set one in production:
+  * checkpoint FILES survive executor loss and cache eviction, while
+  * the fallback local blocks are a truncated lineage whose loss is
+  * unrecoverable (observed once at 126M nodes on an 8 GB heap under
+  * GC-pressure eviction).
   *
   * An operator gets its `Rounds` from [[Rounds.run]], which owns
   * everything the call stores:
-  *  - a PIN ([[pin]]) persists a relation the rounds re-read (an edge
-  *    layout, a degree table) at MEMORY_AND_DISK through an internal
-  *    [[CacheScope]]. No pin outlives the call.
+  *  - a PIN ([[pin]]) persists a relation the call re-reads (an edge
+  *    layout, a degree table) at MEMORY_AND_DISK. No pin outlives the
+  *    call, so a pin serves only reads made inside it.
   *  - a MARK is a round's checkpoint ([[markWith]] and the entry
   *    points below). A mark the returned DataFrame reads (a
   *    `LogicalRDD` in its logical plan) outlives the call and follows
   *    the result's lifetime: ContextCleaner reclaims local blocks once
   *    the result is garbage, reliable files stay until the checkpoint
-  *    dir is cleaned. Every other mark is freed when the call returns.
+  *    dir is cleaned (`Session.release` frees local blocks between
+  *    runs). Every other mark is freed when the call returns.
   *  - [[release]] frees a pin or a mark (or a projection of one) early,
   *    to bound the storage a loop holds at once.
   * If the body throws — an operator rejecting its input, a convergence
@@ -74,15 +81,18 @@ import scala.reflect.ClassTag
 private[graft] final class Rounds private (anchor: DataFrame, op: String) {
   private val sc = anchor.sparkSession.sparkContext
   private val reliable = sc.getCheckpointDir.isDefined
-  private val pins = new CacheScope
+  private val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   // the marks not yet released, by checkpoint RDD id
   private val marks = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
   private var round = 0
   private var tick = System.nanoTime()
 
   /** Persist `df` until the call returns (or [[release]]). */
-  def pin(df: DataFrame): DataFrame =
-    pins.track(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  def pin(df: DataFrame): DataFrame = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pins += p
+    p
+  }
 
   /** Checkpoint `r`, materialized by `action` run on the checkpoint.
     * Reliable mode pins the round first: the checkpoint-file write
@@ -187,9 +197,10 @@ private[graft] final class Rounds private (anchor: DataFrame, op: String) {
   /** Free a pin, or a mark of this call (or a projection of one), now.
     * Anything else, and anything already freed, is left alone.
     */
-  def release(m: DataFrame): Unit =
-    if (!pins.release(m))
-      Rounds.markOf(m).flatMap(rdd => marks.remove(rdd.id)).foreach(free)
+  def release(m: DataFrame): Unit = pins.indexWhere(_ eq m) match {
+    case -1 => Rounds.markOf(m).flatMap(rdd => marks.remove(rdd.id)).foreach(free)
+    case i => pins.remove(i).unpersist(false)
+  }
 
   // local blocks go through GraftBlocks: `RDD.unpersist` on a locally
   // checkpointed RDD logs a lineage-truncation WARN per call
@@ -202,7 +213,8 @@ private[graft] final class Rounds private (anchor: DataFrame, op: String) {
 
   /** Free every pin and every mark whose RDD id is not in `keep`. */
   private def close(keep: Set[Int]): Unit = {
-    pins.close()
+    pins.foreach(_.unpersist(false))
+    pins.clear()
     marks.valuesIterator.filterNot(rdd => keep(rdd.id)).foreach(free)
     marks.clear()
   }

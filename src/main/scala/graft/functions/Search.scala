@@ -239,7 +239,8 @@ object Search {
     */
   def appendIndexUpdate(spark: SparkSession, dir: String, changes: DataFrame,
       idCol: Column, textCol: Column, version: Long,
-      deleteCol: Option[String] = None): Unit = {
+      deleteCol: Option[String] = None): Unit =
+      Rounds.run(changes, "appendIndexUpdate") { rounds =>
     require(version >= 1L, s"appendIndexUpdate: version must be >= 1, got $version")
     val current = readIndexMor(spark, dir)
     val ids = changes.select(idCol.cast("long").as("doc_id")).distinct()
@@ -247,29 +248,26 @@ object Search {
       .map(d => changes.filter(!coalesce(col(d), lit(false))))
       .getOrElse(changes)
     // the change batch tokenizes more than once below (postings log,
-    // docs log, lexicon merge) — cache it for the ingest's duration
-    val keptCached = keep.cache()
-    try {
-      val fresh = buildIndex(keptCached, idCol, textCol, current.lowercase)
-      fresh.postings.withColumn("__v", lit(version))
-        .write.mode("append").parquet(s"$dir/postings_log")
-      fresh.docs.withColumn("__v", lit(version))
-        .write.mode("append").parquet(s"$dir/docs_log")
-      ids.withColumn("__v", lit(version))
-        .write.mode("append").parquet(s"$dir/tombstones")
-      // only the vocab-sized lexicon + 1-row stats rewrite eagerly
-      // (delete+rename swap; derived state, rebuildable from the logs)
-      val (lexicon2, depFn) = adjustedDerived(current, ids, fresh)
-      val (depN, depT) = depFn()
-      lexicon2.write.mode("overwrite").parquet(s"$dir/lexicon_next")
-      swapDir(spark, dir, "lexicon_next", "lexicon")
-      import spark.implicits._
-      Seq((current.nDocs - depN + fresh.nDocs,
-          current.totalTokens - depT + fresh.totalTokens, current.lowercase))
-        .toDF("n_docs", "total_tokens", "lowercase")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats_next")
-      swapDir(spark, dir, "stats_next", "stats")
-    } finally keptCached.unpersist()
+    // docs log, lexicon merge) — pin it for the ingest's duration
+    val fresh = buildIndex(rounds.pin(keep), idCol, textCol, current.lowercase)
+    fresh.postings.withColumn("__v", lit(version))
+      .write.mode("append").parquet(s"$dir/postings_log")
+    fresh.docs.withColumn("__v", lit(version))
+      .write.mode("append").parquet(s"$dir/docs_log")
+    ids.withColumn("__v", lit(version))
+      .write.mode("append").parquet(s"$dir/tombstones")
+    // only the vocab-sized lexicon + 1-row stats rewrite eagerly
+    // (delete+rename swap; derived state, rebuildable from the logs)
+    val (lexicon2, depFn) = adjustedDerived(current, ids, fresh)
+    val (depN, depT) = depFn()
+    lexicon2.write.mode("overwrite").parquet(s"$dir/lexicon_next")
+    swapDir(spark, dir, "lexicon_next", "lexicon")
+    import spark.implicits._
+    Seq((current.nDocs - depN + fresh.nDocs,
+        current.totalTokens - depT + fresh.totalTokens, current.lowercase))
+      .toDF("n_docs", "total_tokens", "lowercase")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats_next")
+    swapDir(spark, dir, "stats_next", "stats")
   }
 
   private def swapDir(spark: SparkSession, dir: String, from: String, to: String): Unit = {

@@ -418,7 +418,7 @@ object Similarity {
     * `targetRecall`, and report the walk. The exact baseline is
     * computed ONCE on the sampled query set ([[bruteForceTopK]]
     * against the index cells — |sample|·N, linear in the corpus,
-    * constant in sample size) and cached for the walk.
+    * constant in sample size) and pinned for the walk.
     *
     * The walk probes INCREMENTALLY: the nprobe=2^s candidate pool is
     * a superset of 2^(s−1)'s (the probed-cell list is a rank prefix),
@@ -450,22 +450,19 @@ object Similarity {
 
   def ivfTuneNprobe(sampleQueries: DataFrame, qId: String, qVec: String,
       centroids: DataFrame, cells: DataFrame, k: Int,
-      targetRecall: Double, maxNprobe: Int = 64): NprobeTune = {
+      targetRecall: Double, maxNprobe: Int = 64): NprobeTune =
+      Rounds.run(sampleQueries, "ivfTuneNprobe") { rounds =>
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall in (0,1], got $targetRecall")
     require(maxNprobe >= 1, "maxNprobe must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val q = sampleQueries.select(col(qId).as("qid"), col(qVec).as("qv"))
-      .persist(lvl)
-    val exact = bruteForceTopK(q, cells, "qid", "qv", "id", "v", k)
-      .persist(lvl)
+    val q = rounds.pin(sampleQueries.select(col(qId).as("qid"), col(qVec).as("qv")))
+    val exact = rounds.pin(bruteForceTopK(q, cells, "qid", "qv", "id", "v", k))
     // centroid ranking once, to full walk depth — a sample×nlist
     // in-expression ranking, reused by every step's rank-window filter
-    val probesAll = rankedFused(
+    val probesAll = rounds.pin(rankedFused(
         q.select(col("qid").as("id"), col("qv").as("v")),
         centroids, math.max(1, maxNprobe))
-      .select(col("id").as("qid"), col("v").as("qv"), col("cid"), col("rn"))
-      .persist(lvl)
+      .select(col("id").as("qid"), col("v").as("qv"), col("cid"), col("rn")))
     val cellsSel = cells.select(col("cid"), col("id").as("nid"),
       col("v").as("nv"))
     def freshCandidates(lo: Int, hi: Int): DataFrame =
@@ -473,37 +470,28 @@ object Similarity {
         .join(cellsSel, Seq("cid"))
         .filter(col("qid") =!= col("nid"))
         .select(col("qid"), col("nid"), cosine(col("qv"), col("nv")).as("sim"))
-    var topk: DataFrame = null
-    try {
-      var trace = Vector.empty[(Int, Double)]
-      var prev = 0
-      var nprobe = 1
-      while (true) {
-        val fresh = freshCandidates(prev, nprobe)
-        val merged = (if (topk == null) rankTopK(fresh, k)
-          else rankTopK(
-            topk.select(col("qid"), col("nid"), col("sim"))
-              .unionByName(fresh), k)).persist(lvl)
-        val r = annRecall(merged, exact)
-          .agg((sum(col("n_hit")).cast("double") /
-            sum(col("n_exact")).cast("double")).as("r"))
-          .collect()(0)
-        val recall = if (r.isNullAt(0)) 1.0 else r.getDouble(0)
-        if (topk != null) topk.unpersist(false)
-        topk = merged
-        trace :+= (nprobe, recall)
-        if (recall >= targetRecall || nprobe >= maxNprobe)
-          return NprobeTune(nprobe, recall, recall >= targetRecall, trace)
-        prev = nprobe
-        nprobe = math.min(nprobe * 2, maxNprobe)
-      }
-      sys.error("unreachable")
-    } finally {
-      q.unpersist(false); exact.unpersist(false)
-      probesAll.unpersist(false)
-      if (topk != null) topk.unpersist(false)
-      ()
+    // each step's top-k is a mark whose materializing job is the
+    // micro-averaged recall aggregate against the exact baseline
+    def recall(topk: DataFrame): Double = {
+      val r = annRecall(topk, exact)
+        .agg((sum(col("n_hit")).cast("double") /
+          sum(col("n_exact")).cast("double")).as("r"))
+        .collect()(0)
+      if (r.isNullAt(0)) 1.0 else r.getDouble(0)
     }
+    var nprobe = 1
+    var (topk, r) = rounds.markWith(rankTopK(freshCandidates(0, nprobe), k))(recall)
+    var trace = Vector(nprobe -> r)
+    while (r < targetRecall && nprobe < maxNprobe) {
+      val prev = nprobe
+      nprobe = math.min(nprobe * 2, maxNprobe)
+      val next = rankTopK(topk.select(col("qid"), col("nid"), col("sim"))
+        .unionByName(freshCandidates(prev, nprobe)), k)
+      val (ck, rr) = rounds.replaceWith(topk, next)(recall)
+      topk = ck; r = rr
+      trace :+= (nprobe -> r)
+    }
+    NprobeTune(nprobe, r, r >= targetRecall, trace)
   }
 
   /** Element-wise centroid means: posexplode vector positions, average

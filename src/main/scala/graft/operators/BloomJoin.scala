@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.Bloom
+import graft.functions.{Bloom, Rounds}
 
 /** Bloom-reduced equi-join — the semi-join reduction for the
   * "medium dim" regime: the build side is too big to broadcast as a
@@ -81,6 +81,8 @@ object BloomJoin {
 
   /** The reduced exact join: [[reduceByBloom]] then the plain
     * equi-join. Row-identical to `probe.join(build, keys, joinType)`.
+    * Eager on the build side: it is stored (a [[Rounds]] mark) when the
+    * join is called, and the stored build follows the result's lifetime.
     */
   def bloomReduceJoin(probe: DataFrame, build: DataFrame, keys: Seq[String],
       joinType: String = "inner", fpp: Double = 0.01,
@@ -89,19 +91,13 @@ object BloomJoin {
     require(Set("inner", "leftsemi", "semi").contains(jt),
       s"bloomReduceJoin supports inner/left_semi joins only (the probe " +
         s"side is pre-filtered, so outer probe rows would be lost), got $joinType")
-    // the build lineage executes up to three times here (count for
-    // sizing, collect for the sketch, the exact join) — exactly the
-    // aggregated/persisted-branch build sides this operator targets,
-    // so pin it for the duration unless the caller already did.
-    // NONE = deserialized in memory: the build side is the SMALL side
-    // by contract. The final plan's join re-reads it from cache; the
-    // caller unpersists when the result is consumed (lazily safe —
-    // cache misses just recompute).
-    val pinned = if (build.storageLevel ==
-        org.apache.spark.storage.StorageLevel.NONE)
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else build
-    reduceByBloom(probe, pinned, keys, fpp, expectedKeys)
-      .join(pinned, keys, joinType)
+    // the build side is read twice more after its mark (the sketch
+    // collect, the exact join): the mark runs its lineage once, and its
+    // row count sizes the sketch unless the caller passed a size
+    Rounds.run(build, "bloomReduceJoin") { rounds =>
+      val (b, n) = rounds.markN(build)
+      reduceByBloom(probe, b, keys, fpp, expectedKeys.orElse(Some(n)))
+        .join(b, keys, joinType)
+    }
   }
 }

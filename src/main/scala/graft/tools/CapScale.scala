@@ -33,20 +33,24 @@ object CapScale {
       val t0 = System.nanoTime()
       val s = df.select(col("i"), col("j")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
-      (s, (System.nanoTime() - t0) / 1e9)
+      val sec = (System.nanoTime() - t0) / 1e9
+      graft.Session.release(spark)
+      (s, sec)
     }
+
+    // order-free fingerprint of a pair set, to compare runs exactly
+    def digest(s: Set[(Long, Long)]): Int = scala.util.hashing.MurmurHash3.unorderedHash(s)
 
     def report(op: String, truth: Set[(Long, Long)], run: String,
         got: Set[(Long, Long)], sec: Double): Unit = {
       val recall = if (truth.isEmpty) 1.0 else truth.intersect(got).size.toDouble / truth.size
-      println(f"""{"op":"$op","run":"$run","pairs":${got.size},"recall":$recall%.3f,"sec":$sec%.1f}""")
+      println(f"""{"op":"$op","run":"$run","pairs":${got.size},"digest":${digest(got)},"recall":$recall%.3f,"sec":$sec%.1f}""")
     }
 
     // n-gram Jaccard (df cap)
     locally {
       val (truth, tSec) = pairSet(Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5))
-      println(f"""{"op":"ngram","run":"truth_uncapped_clean","pairs":${truth.size},"sec":$tSec%.1f}""")
+      println(f"""{"op":"ngram","run":"truth_uncapped_clean","pairs":${truth.size},"digest":${digest(truth)},"sec":$tSec%.1f}""")
       val (c, cSec) = pairSet(Dedup.ngramJaccardPairsAuto(docs, col("doc_id"), col("text"), 3, 0.5))
       report("ngram", truth, "auto_clean", c, cSec)
       val (b, bSec) = pairSet(Dedup.ngramJaccardPairsAuto(tailed, col("doc_id"), col("text"), 3, 0.5))
@@ -56,7 +60,7 @@ object CapScale {
     // winnowing fingerprints (df cap)
     locally {
       val (truth, tSec) = pairSet(Dedup.winnowPairs(docs, col("doc_id"), col("text"), 16, 4, 0.5))
-      println(f"""{"op":"winnow","run":"truth_uncapped_clean","pairs":${truth.size},"sec":$tSec%.1f}""")
+      println(f"""{"op":"winnow","run":"truth_uncapped_clean","pairs":${truth.size},"digest":${digest(truth)},"sec":$tSec%.1f}""")
       val (c, cSec) = pairSet(Dedup.winnowPairsAuto(docs, col("doc_id"), col("text"), 16, 4, 0.5))
       report("winnow", truth, "auto_clean", c, cSec)
       val (b, bSec) = pairSet(Dedup.winnowPairsAuto(tailed, col("doc_id"), col("text"), 16, 4, 0.5))
@@ -66,7 +70,7 @@ object CapScale {
     // MinHash LSH (band-bucket cap)
     locally {
       val (truth, tSec) = pairSet(Dedup.minhashLshPairs(docs, col("doc_id"), col("text"), 3, 64, 16, 0.5))
-      println(f"""{"op":"minhash","run":"truth_uncapped_clean","pairs":${truth.size},"sec":$tSec%.1f}""")
+      println(f"""{"op":"minhash","run":"truth_uncapped_clean","pairs":${truth.size},"digest":${digest(truth)},"sec":$tSec%.1f}""")
       val (c, cSec) = pairSet(Dedup.minhashLshPairsAuto(docs, col("doc_id"), col("text"), 3, 64, 16, 0.5))
       report("minhash", truth, "auto_clean", c, cSec)
       val (b, bSec) = pairSet(Dedup.minhashLshPairsAuto(tailed, col("doc_id"), col("text"), 3, 64, 16, 0.5))

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{CacheScope, Dedup}
+import graft.functions.Dedup
 
 /** Scale audit for the edit-distance verify tier: the full O(|a|·|b|)
   * DP (the gate's reporting form) vs the banded default
@@ -23,10 +23,8 @@ object EditScale {
     val spark = graft.Session.local(32)
 
     val docs = Tables.load(spark, sfDir, "documents")
-    val scope = new CacheScope
-    val cands = scope.track(
-      Dedup.ngramJaccardPairsAuto(docs, col("doc_id"), col("text"), 3, 0.5, scope)
-        .select(col("i"), col("j")).cache())
+    val cands = Dedup.ngramJaccardPairsAuto(docs, col("doc_id"), col("text"), 3, 0.5)
+      .select(col("i"), col("j")).cache()
     val nCands = cands.count()
     val nDocs = docs.count()
     System.err.println(s"[editscale] $sfDir docs=$nDocs cands=$nCands")
@@ -55,7 +53,6 @@ object EditScale {
     if (runFull) time("edit_full") {
       Dedup.editDistancePairs(cands, docs, col("doc_id"), col("text"))
     }
-    scope.close()
     spark.stop()
   }
 }

@@ -26,16 +26,16 @@ object NgramScale {
     val t0 = System.nanoTime()
     val truth = graft.functions.Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"), n, th)
       .select(col("i"), col("j")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.catalog.clearCache()
     val truthSec = (System.nanoTime() - t0) / 1e9
+    graft.Session.release(spark)
     println(f"""{"truth_pairs":${truth.size},"sec":$truthSec%.1f}""")
     for (cap <- caps) {
       val t1 = System.nanoTime()
       val got = graft.functions.Dedup.ngramJaccardPairs(tailed, col("doc_id"), col("text"),
           n, th, cap)
         .select(col("i"), col("j")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
       val s = (System.nanoTime() - t1) / 1e9
+      graft.Session.release(spark)
       val recall = if (truth.isEmpty) 1.0 else truth.intersect(got).size.toDouble / truth.size
       println(f"""{"cap":$cap,"pairs":${got.size},"recall":$recall%.3f,"sec":$s%.1f}""")
     }

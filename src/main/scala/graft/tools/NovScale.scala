@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CacheScope, Dedup}
+import graft.functions.Dedup
 
 /** Scale audit for the contamination-scoring family: noveltyStats
   * (bloom + exact verify) and decontaminateReport (two suites, one
@@ -33,11 +33,8 @@ object NovScale {
     }
 
     val (tNov, scored) = time(2) {
-      val scope = new CacheScope
-      try Dedup.noveltyStats(train, col("doc_id"), col("text"),
-        suiteA, col("text"), n = 5, scope = scope)
+      Dedup.noveltyStats(train, col("doc_id"), col("text"), suiteA, col("text"), n = 5)
         .agg(count(lit(1)), sum(col("n_seen"))).head().getLong(0)
-      finally scope.close()
     }
     val (tRep, repRows) = time(2) {
       Dedup.decontaminateReport(train, col("doc_id"), col("text"),

@@ -27,8 +27,8 @@ object WinnowScale {
           k, w, ov, cap)
         .select(col("i"), col("j")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
       val s = (System.nanoTime() - t0) / 1e9
+      graft.Session.release(spark)
       if (cap <= 0) truth = Some(got)
       val recall = truth.map(t =>
         if (t.isEmpty) 1.0 else t.intersect(got).size.toDouble / t.size)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CacheScope, Dedup}
+import graft.functions.Dedup
 
 /** decontaminateBloom: exactness through the probabilistic prefilter,
   * and the map-side probe's plan shape.
@@ -19,11 +19,8 @@ class DecontamBloomSpec extends SparkSpec {
     val (train, eval) = sides()
     val exact = Dedup.decontaminate(train, $"doc_id", $"text", eval, $"text", 5, 3)
       .as[(Long, Long)].collect().sorted.toSeq
-    val scope = new CacheScope
-    val bloom = Dedup.decontaminateBloom(train, $"doc_id", $"text", eval, $"text", 5, 3,
-        scope = scope)
+    val bloom = Dedup.decontaminateBloom(train, $"doc_id", $"text", eval, $"text", 5, 3)
       .as[(Long, Long)].collect().sorted.toSeq
-    scope.close()
     assert(exact.nonEmpty, "fixture must exercise a non-empty contamination set")
     assert(bloom === exact)
   }

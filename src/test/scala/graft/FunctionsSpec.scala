@@ -1559,6 +1559,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("Rounds operators: reliable checkpoints match local, superseded rounds freed") {
     import graft.functions.{Events, Graph}
+    import graft.operators.BloomJoin
     import org.apache.spark.sql.DataFrame
     import scala.jdk.CollectionConverters._
     // a triangle with a tail: every operator runs a few rounds
@@ -1574,7 +1575,37 @@ class FunctionsSpec extends SparkSpec {
     val seeds0 = Seq(0L).toDF("id")
     val ev = Seq((1L, 1L, "a"), (1L, 2L, "b"), (1L, 3L, "c"), (2L, 1L, "a"),
       (2L, 5L, "c"), (3L, 2L, "b")).toDF("user", "us", "type")
+    // a corpus where every cap of 2 binds: docs 1, 6 and 7 are one text,
+    // so each of its shingles, fingerprints and band buckets is held by
+    // at least three docs, and the capped generators mark twice
+    val fox = "the quick brown fox jumps over the lazy dog near the river bank"
+    val docs = Seq((1L, fox), (2L, fox.replace("dog", "cat")),
+      (3L, fox.replace("jumps", "leaps")),
+      (4L, "lorem ipsum dolor sit amet the quick brown fox sits"),
+      (5L, "completely different words appear in this one document here"),
+      (6L, fox), (7L, fox)).toDF("doc_id", "text")
+    val (id, text) = (col("doc_id"), col("text"))
+    val odd = docs.filter(id % 2 === 1)
+    val even = docs.filter(id % 2 === 0)
+    val lorem = docs.filter(id === 4)
     val cases: Seq[(String, () => DataFrame)] = Seq(
+      "ngram" -> (() => Dedup.ngramJaccardPairs(docs, id, text, 3, 0.3)),
+      "ngram-capped" -> (() => Dedup.ngramJaccardPairs(docs, id, text, 3, 0.3, 2)),
+      "ngram-auto" -> (() => Dedup.ngramJaccardPairsAuto(docs, id, text, 3, 0.3)),
+      "ngram-prefix" -> (() => Dedup.ngramJaccardPairsPrefix(docs, id, text, 3, 0.5)),
+      "jaccard-auto" -> (() => Dedup.jaccardPairsAuto(docs, id, text, 3, 0.8)),
+      "containment-capped" -> (() => Dedup.containmentPairs(docs, id, text, 3, 0.5, 2)),
+      "minhash-capped" -> (() => Dedup.minhashLshPairs(docs, id, text, 3, 64, 16, 0.3, 2)),
+      "minhash-auto" -> (() => Dedup.minhashLshPairsAuto(docs, id, text, 3, 64, 16, 0.3)),
+      "minhash-incremental" -> (() => Dedup.minhashLshPairsIncremental(even, odd,
+        id, text, 3, 64, 16, 0.3)),
+      "winnow-capped" -> (() => Dedup.winnowPairs(docs, id, text, 16, 4, 0.3, 2)),
+      "winnow-auto" -> (() => Dedup.winnowPairsAuto(docs, id, text, 16, 4, 0.3)),
+      "decontaminateBloom" -> (() => Dedup.decontaminateBloom(docs, id, text,
+        lorem, text, 3, 1)),
+      "noveltyStats" -> (() => Dedup.noveltyStats(docs, id, text, lorem, text, 3)),
+      "bloomReduceJoin" -> (() => BloomJoin.bloomReduceJoin(g,
+        Seq(1L, 3L).toDF("src"), Seq("src"))),
       "cc" -> (() => Dedup.connectedComponents(g)),
       "sssp" -> (() => Graph.sssp(wg, seeds)),
       "bfs" -> (() => Graph.bfsDistance(g, seeds, 5)),
@@ -1640,16 +1671,23 @@ class FunctionsSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    // each fails mid-operator: sssp inside its first relaxation round
-    // (the weight guard), SCC at its color guard with the edge layouts
-    // pinned, coreness at its convergence check with every layer marked
-    // (a 1->2->3->4 chain from a range, not a local Seq: the optimizer
-    // folds the guard over local rows, so it would fail at planning)
+    // each fails mid-operator: the generator at its first mark, sssp
+    // inside its first relaxation round (the weight guard), SCC at its
+    // color guard with the edge layouts pinned, coreness at its
+    // convergence check with every layer marked (inputs with a guard
+    // come from a range, not a local Seq: the optimizer folds the guard
+    // over local rows, so it would fail at planning)
     val neg = spark.range(1, 4).select(col("id").as("src"),
       (col("id") + 1).as("dst"), when(col("id") === 2, -1L).otherwise(2L).as("w"))
     val cycle = (0L until 64L).map(i => (i, (i + 1) % 64)).toDF("src", "dst")
     val path = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    // a pair generator fails while it stores its shingles
+    val badText = spark.range(1, 4).select(col("id").as("doc_id"),
+      when(col("id") === 2, raise_error(lit("bad text 2")))
+        .otherwise(lit("a b c d e")).as("text"))
     val cases: Seq[(String, String, () => Any)] = Seq(
+      ("ngramJaccardPairs", "bad text 2",
+        () => Dedup.ngramJaccardPairs(badText, col("doc_id"), col("text"), 3, 0.5, 2)),
       ("sssp", "negative- or null-weight edge 2->3",
         () => Graph.sssp(neg, Seq(1L).toDF("id"))),
       ("scc", "maxPropRounds",
@@ -1746,10 +1784,20 @@ class FunctionsSpec extends SparkSpec {
       .filter(f => calls.findFirstIn(text(f)).isDefined)
       .toSeq.sorted
     assert(offenders.isEmpty, s"checkpoint calls outside Rounds: $offenders")
-    // the round operators pin through Rounds.pin, never persist themselves
-    val storage = "StorageLevel|persist\\(".r
-    val pinners = Seq("functions/Graph.scala", "functions/Events.scala")
-      .filter(f => storage.findFirstIn(text(f)).isDefined)
+    // every relation a library operator stores goes through Rounds;
+    // comment lines may still name the calls
+    val storage = "StorageLevel|persist\\(|\\.cache\\(\\)".r
+    val library = Seq("functions", "operators", "streaming", "windowing",
+      "queries", "api", "connectors", "examples")
+    def code(f: String) = text(f).split("\n").iterator.map(_.trim)
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+    val pinners = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString)
+      .filter(f => library.exists(d => f.startsWith(d + "/")))
+      .filterNot(_ == "functions/Rounds.scala")
+      .filter(f => code(f).exists(l => storage.findFirstIn(l).isDefined))
+      .toSeq.sorted
     assert(pinners.isEmpty, s"storage calls outside Rounds: $pinners")
   }
 
@@ -1760,35 +1808,39 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("pipelines own their caches: nothing stays pinned across consecutive curateFull runs") {
-    // the CacheScope contract: curateFull/curateClustered release their
-    // pair-generation caches before returning (connectedComponents has
-    // already materialized everything downstream), and superseded CC
-    // rounds release their local-checkpoint blocks — so a user
-    // composing pipelines repeatedly in one session accumulates
-    // nothing but the final star edge set per call
+    // each curation pipeline stores through one Rounds.run: its pair
+    // generation and superseded rounds are freed when it returns, so
+    // two consecutive runs of each leave nothing in the cache manager
+    // and no blocks but the checkpoints their results read (the kept or
+    // scrubbed `uniq` relation, the CC final star set, and for curate,
+    // whose result is lazy over the pairs, their signature relation)
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val docs = Tables.load(spark, sf0001, "documents")
     val evalSet = docs.filter(col("doc_id") % 50 === 0)
     val train = docs.filter(col("doc_id") % 50 =!= 0)
-    for (_ <- 1 to 2) {
-      val out = Dedup.curateFull(train, col("doc_id"), col("text"),
-        evalSet, col("text"), Text.langStopwords.head._2, minQuality = 0.4,
-        n = 3, numHashes = 64, bands = 16, threshold = 0.5,
-        decontamN = 5, decontamMinShared = 3)
-      assert(out.count() > 0)
+    val sw = Text.langStopwords.head._2
+    val (id, text) = (col("doc_id"), col("text"))
+    val runs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "curateFull" -> (() => Dedup.curateFull(train, id, text, evalSet, text, sw,
+        minQuality = 0.4, n = 3, numHashes = 64, bands = 16, threshold = 0.5,
+        decontamN = 5, decontamMinShared = 3)),
+      "curate" -> (() => Dedup.curate(train, id, text, sw, minQuality = 0.4,
+        n = 3, numHashes = 64, bands = 16, threshold = 0.5)),
+      "curateClustered" -> (() => Dedup.curateClustered(train, id, text, sw,
+        minQuality = 0.4, n = 3, numHashes = 64, bands = 16, threshold = 0.5)))
+    val outs = for ((name, run) <- runs; _ <- 1 to 2) yield {
+      val out = run()
+      assert(out.count() > 0, name)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name leaked cached relations into the cache manager")
+      out
     }
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "pipeline leaked cached relations into the cache manager")
-    // two checkpoints legitimately outlive each call because the
-    // returned plan READS THROUGH them (the documented final-round
-    // contract; callers/benches unpersist when done): the CC final
-    // star set, and (r16) the scrub+score `uniq` checkpoint that
-    // runs the PII/quality scan once instead of once per consumer.
-    // The superseded intermediates (kept, CC rounds, pair caches)
-    // must still all be released — that is what this bound pins.
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(leaked.size <= 4, s"leaked ${leaked.size} checkpoint RDDs (expected <= 2 per call: final star set + uniq scrub checkpoint)")
+    val read = outs.flatMap(_.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }).toSet
+    val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(added === read, s"blocks left behind: ${(added -- read).toSeq.sorted}")
   }
 
   test("int8-prefiltered verify is exactly the float-only verify (both pair engines)") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CacheScope, Dedup}
+import graft.functions.Dedup
 
 class IncrementalDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -10,14 +10,12 @@ class IncrementalDedupSpec extends SparkSpec {
     val docs = Tables.load(spark, sf0001, "documents")
     val newD = docs.filter($"doc_id" % 3 === 0)
     val oldD = docs.filter($"doc_id" % 3 =!= 0)
-    val scope = new CacheScope
     val inc = Dedup.minhashLshPairsIncremental(newD, oldD, $"doc_id", $"text",
-        n = 3, numHashes = 64, bands = 16, threshold = 0.5, scope = scope)
+        n = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     val full = Dedup.minhashLshPairs(docs, $"doc_id", $"text",
         n = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    scope.close()
     val want = full.filter { case (i, j) => i % 3 == 0 || j % 3 == 0 }
     assert(inc === want)
     assert(want.nonEmpty && want.size < full.size,
