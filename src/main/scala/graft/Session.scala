@@ -10,11 +10,13 @@ import org.apache.spark.sql.SparkSession
   * TIMESTAMP(NANOS) read as long nanos (normalized by [[Tables.load]]),
   * and the TopK
   * hash-aggregate capacity ([[graft.functions.TopK.FallbackConf]] at
-  * [[graft.functions.TopK.RequiredFallbackThreshold]]; the rankers raise
-  * it lazily too, the session default documents it), with log level
+  * [[graft.functions.TopK.RequiredFallbackThreshold]]; the rankers only
+  * check it), with log level
   * WARN. [[local]] adds `local[cpus]` and one shuffle partition per core.
   * An experiment that needs more passes its own confs as `extra`; they
-  * are applied last, so they also override the list.
+  * are applied last, so they also override the list. This is the only
+  * file that sets a session conf: library operators read the session's
+  * settings (shuffle width included) and never change them.
   */
 object Session {
   private val houseConfs: Seq[(String, String)] = Seq(

@@ -867,7 +867,7 @@ object Dedup {
     */
   def bestPerCluster(cc: DataFrame, scores: DataFrame, idCol: String,
       scoreCol: String): DataFrame = {
-    TopK.ensureHashAggCapacity(cc.sparkSession)
+    TopK.checkHashAggCapacity(cc.sparkSession)
     cc.select(col("id"), col("rep"))
       .join(scores.select(col(idCol).as("id"),
         col(scoreCol).cast("double").as("score")), Seq("id"))

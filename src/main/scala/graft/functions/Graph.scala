@@ -202,15 +202,13 @@ object Graph {
     * (r15 ADVICE: the hints were unconditional — correct and faster at
     * the gate scale, an executor-OOM risk on large graphs with modest
     * parallelism). ~2M rows of (long, long, struct) is low hundreds of
-    * MB of hash map per task — safe for typical task memory; a cluster
-    * with bigger executors can raise the conf, and parallelism scaling
-    * with the data keeps the hint on at every GraphScale decade with
-    * proportional partitions. NODE-sized build hints (rank/frontier/
-    * label/star-center checkpoints) are not gated: their build side is
-    * node-scale by construction.
+    * MB of hash map per task — safe for typical task memory, and
+    * parallelism scaling with the data keeps the hint on at every
+    * GraphScale decade with proportional partitions. NODE-sized build
+    * hints (rank/frontier/label/star-center checkpoints) are not
+    * gated: their build side is node-scale by construction.
     */
-  private val HashBuildRowsConf = "spark.graft.hashBuildRowsPerPartition"
-  private val HashBuildRowsDefault = 2000000L
+  private val HashBuildRowsPerPartition = 2000000L
 
   /** `df.hint("shuffle_hash")` only when `buildRows` spread over the
     * session's shuffle partitions stays under the per-partition bound;
@@ -218,11 +216,8 @@ object Graph {
     * stats-less relations this guards).
     */
   private def hashHintIfBounded(df: DataFrame, buildRows: Long): DataFrame = {
-    val spark = df.sparkSession
-    val p = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    val cap = spark.conf.getOption(HashBuildRowsConf).map(_.toLong)
-      .getOrElse(HashBuildRowsDefault)
-    if (buildRows <= cap * p) df.hint("shuffle_hash") else df
+    val p = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
+    if (buildRows <= HashBuildRowsPerPartition * p) df.hint("shuffle_hash") else df
   }
 
   /** The shared power-iteration loop: `based` is (id, base, r0) — the
@@ -1065,12 +1060,10 @@ object Graph {
     * layout, the flood joins the newly-flagged frontier against a
     * src-pinned layout, and the peel is two left-anti joins; no
     * windows, no driver-side graph state beyond the loop counters.
-    * The loop relations are thin (two longs), so the operator sizes
-    * its own shuffle width (~200k rows/task, clamped to
-    * [defaultParallelism, 1024]) for the duration of the call
-    * instead of inheriting a session knob tuned for sketch-payload
-    * operators (measured 1.75× at 10M edges), restoring the session
-    * setting on exit.
+    * The loop runs at the session's shuffle width. Its relations are
+    * thin (two longs), so a wide session pays its partition count on
+    * every shrinking trim round: the 10M-edge random decade on 4
+    * cores measured 77 s at width 4 and 165 s at width 128 (SCALE.md).
     */
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 20,
       maxPropRounds: Int = 100): DataFrame =
@@ -1082,13 +1075,6 @@ object Graph {
     // extra Spark job per probe, round-multiplied (measured: 136 jobs
     // for 17 s of task time on the sf0.1 gate — job-overhead-bound)
     var (e, eN) = rounds.markN(simpleDirected(edges))
-    val spark = edges.sparkSession
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(
-      spark.sparkContext.defaultParallelism.toLong,
-      math.min(1024L, eN / 200000L)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
     // the full node set, pinned once: nodes that drop out of the
     // edge set un-emitted (their last edge died with a trimmed or
     // flooded partner) are provably singleton SCCs, swept by ONE
@@ -1255,7 +1241,6 @@ object Graph {
       .select(col("id"), col("id").as("c"))
     rounds.mark(emitted.unionByName(missing)
       .select(col("id"), col("c").as("rep")))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** Approximate harmonic centrality via HyperBall (Boldi & Vigna,

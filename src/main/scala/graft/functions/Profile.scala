@@ -416,7 +416,7 @@ object Profile {
     */
   def clusterCards(assign: DataFrame, idCol: String, cidCol: String,
       meta: DataFrame, metaIdCol: String, byCol: Column): DataFrame = {
-    TopK.ensureHashAggCapacity(assign.sparkSession)
+    TopK.checkHashAggCapacity(assign.sparkSession)
     val counts = assign.select(col(idCol).as("id"), col(cidCol).as("cid"))
       .join(meta.select(col(metaIdCol).as("id"), byCol.cast("long").as("value")), Seq("id"))
       .groupBy(col("cid"), col("value"))

@@ -88,15 +88,15 @@ object Similarity {
     * (null input vectors) are excluded from the top-k — see [[TopK]]'s
     * null-score contract.
     *
-    * The ranker OWNS its ObjectHashAggregate capacity: Spark's default
+    * The ObjectHashAggregate capacity is the session's: Spark's default
     * fallback threshold (128 distinct keys/task) silently reverts this
-    * aggregate to the very candidate sort it replaces, so every call
-    * raises the session threshold first ([[TopK.ensureHashAggCapacity]]
-    * — raise-only, idempotent). A fresh default session gets the scale
-    * behavior without knowing the conf exists.
+    * aggregate to the very candidate sort it replaces, so
+    * [[graft.Session]] sets it and every call only checks it
+    * ([[TopK.checkHashAggCapacity]] — one WARN on `graft.TopK` when a
+    * caller's session is below it; same rows, sort fallback).
     */
   private[functions] def rankTopK(joined: DataFrame, k: Int): DataFrame = {
-    TopK.ensureHashAggCapacity(joined.sparkSession)
+    TopK.checkHashAggCapacity(joined.sparkSession)
     joined.groupBy(col("qid"))
       .agg(TopK.topKBy(col("sim"), col("nid"), k).as("tk"))
       .select(col("qid"), posexplode(col("tk")).as(Seq("p", "e")))

@@ -49,36 +49,38 @@ object TopK {
     * re-materializes every candidate row into exactly the sort spill
     * it exists to kill (measured: the 2M-vector run re-spilled the
     * same 66 GB; at 4M it holds ~17 MB of k-entry buffers per task and
-    * finishes — SCALE.md).
+    * finishes — SCALE.md). [[graft.Session]] sets it; the rankers only
+    * check it ([[checkHashAggCapacity]]).
     */
   val FallbackConf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
 
-  /** Keys-per-task ceiling the rankers guarantee themselves. Memory at
-    * the ceiling is bounded by ROWS per task, not keys: a task holds
-    * at most (its input rows) buffers of ≤ k (id, sim) entries — 16·k
-    * bytes each — and ANN tasks see N·nprobe/partitions candidate rows
-    * whose distinct qids are far fewer; 4M keys × k=10 would still be
-    * ~640 MB worst-case, far below the sort spill it replaces.
+  /** Keys-per-task ceiling the house session sets and the rankers
+    * check for. Memory at the ceiling is bounded by ROWS per task, not
+    * keys: a task holds at most (its input rows) buffers of ≤ k
+    * (id, sim) entries — 16·k bytes each — and ANN tasks see
+    * N·nprobe/partitions candidate rows whose distinct qids are far
+    * fewer; 4M keys × k=10 would still be ~640 MB worst-case, far
+    * below the sort spill it replaces.
     */
   val RequiredFallbackThreshold = 4000000L
 
-  /** Raise [[FallbackConf]] to [[RequiredFallbackThreshold]] on this
-    * session if it is lower — called by every ranker that plans a
-    * [[TopKByAgg]], so a FRESH DEFAULT session gets the scale behavior
-    * the operator is designed for without knowing the conf exists.
-    * Raise-only: a caller who set it HIGHER keeps their value. The set
-    * is session-scoped (Spark reads it at planning time, and per-query
-    * scoping can't reach a lazily-planned DataFrame); the only effect
-    * on unrelated queries is that their ObjectHashAggregates also stay
-    * hash-based longer, which is the direction Spark itself moved
-    * (SPARK-36645 raised map-side thresholds for the same reason).
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.TopK")
+
+  /** Read-only: when `spark`'s [[FallbackConf]] is below
+    * [[RequiredFallbackThreshold]], log one WARN naming both, and plan
+    * anyway — the result is the same, past the threshold's keys per
+    * task the aggregate just sorts. Called by every operator that plans
+    * a [[TopKByAgg]]; the conf belongs to the session, never to them.
     */
-  def ensureHashAggCapacity(spark: SparkSession): Unit = {
+  def checkHashAggCapacity(spark: SparkSession): Unit = {
     val cur =
       try spark.conf.get(FallbackConf, "128").toLong
       catch { case _: NumberFormatException => 128L }
     if (cur < RequiredFallbackThreshold)
-      spark.conf.set(FallbackConf, RequiredFallbackThreshold.toString)
+      log.warn(s"$FallbackConf is $cur, below the $RequiredFallbackThreshold " +
+        "the map-side top-k needs: past that many keys per task its " +
+        s"aggregate falls back to a sort; set $FallbackConf=" +
+        s"$RequiredFallbackThreshold on the session (graft.Session does)")
   }
 }
 

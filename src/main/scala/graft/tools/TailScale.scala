@@ -19,18 +19,7 @@ object TailScale {
         "q_dedup_simhash", "q_dedup_winnow", "q_dedup_winnow_skew",
         "q_dedup_ngram", "q_dedup_ngram_skew", "q_dedup_exact",
         "ann_ivf_auto", "ann_lsh_auto", "ann_pairs_auto")
-    // TypedImperativeAggregate maps (TopKByAgg rank stage) fall back
-    // to SORT-based aggregation after 128 distinct keys by default —
-    // which re-materializes every ANN candidate row into the very
-    // sort the aggregate exists to avoid. Since round 9 the rankers
-    // raise the threshold THEMSELVES (TopK.ensureHashAggCapacity);
-    // SPARK_GRAFT_DEFAULT_CONF=1 puts the session back at Spark's
-    // default to prove exactly that on the third-decade run.
-    val defaultConf =
-      if (sys.env.get("SPARK_GRAFT_DEFAULT_CONF").contains("1"))
-        Seq(graft.functions.TopK.FallbackConf -> "128")
-      else Nil
-    val spark = graft.Session.local(graft.Session.cpus(32), defaultConf: _*)
+    val spark = graft.Session.local(graft.Session.cpus(32))
     // ann_* pseudo-gates run the production auto-sized ANN variants
     // (the gates pin tiny cells for oracle tractability; the auto
     // paths are what must hold at this decade)

@@ -191,8 +191,9 @@ class PlanSpec extends SparkSpec {
     // fallbackThreshold) — for the ANN rankers that re-materializes
     // every candidate row into the very sort TopKByAgg exists to kill
     // (measured 66 GB re-spill at the 2M-vector decade, SCALE.md).
-    // rankTopK must OWN the conf: a fresh default session calling any
-    // public ranker gets zero fallback tasks.
+    // The house session owns the conf: a ranker on it plans zero
+    // fallback tasks, and a ranker on a session left at 128 only warns.
+    import org.apache.spark.sql.{DataFrame, SparkSession}
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
@@ -206,7 +207,7 @@ class PlanSpec extends SparkSpec {
       }
       p +: inner.flatMap(allNodes)
     }
-    def fallbackTasks(df: org.apache.spark.sql.DataFrame): Long = {
+    def fallbackTasks(df: DataFrame): Long = {
       // collect() drives df's OWN QueryExecution (a write would plan a
       // separate one whose metrics this plan never sees)
       df.collect()
@@ -215,38 +216,37 @@ class PlanSpec extends SparkSpec {
       assert(aggs.nonEmpty, "expected an ObjectHashAggregate in the plan")
       aggs.map(_.metrics("numTasksFallBacked").value).sum
     }
+    def vecs(s: SparkSession): DataFrame = s.range(1200).select(col("id"),
+      array((col("id") % 7).cast("double"), (col("id") % 5).cast("double"),
+        (col("id") % 3).cast("double"), lit(1.0)).as("v"))
+    // a clone at Spark's default; the shared session is never touched
+    val low = spark.newSession()
+    low.conf.set(TopK.FallbackConf, "128")
+    // negative control: at the Spark default the metric DOES fire —
+    // proving the assertion below can actually detect the regression.
     // 2000 query groups, all in ONE partition — far past the 128 default
-    val joined = spark.range(2000).selectExpr("id % 2000 as qid")
-      .crossJoin(spark.range(8).selectExpr("id as nid"))
+    val joined = low.range(2000).selectExpr("id % 2000 as qid")
+      .crossJoin(low.range(8).selectExpr("id as nid"))
       .selectExpr("qid", "nid", "cast(qid * 8 + nid as double) as sim")
       .repartition(1)
-    val prev = spark.conf.getOption(TopK.FallbackConf)
-    try {
-      // negative control: at the Spark default the metric DOES fire —
-      // proving the assertion below can actually detect the regression
-      spark.conf.set(TopK.FallbackConf, "128")
-      val bare = joined.groupBy(col("qid"))
-        .agg(TopK.topKBy(col("sim"), col("nid"), 3).as("tk"))
-      assert(fallbackTasks(bare) > 0, "negative control: expected sort fallback at threshold 128")
+    val bare = joined.groupBy(col("qid"))
+      .agg(TopK.topKBy(col("sim"), col("nid"), 3).as("tk"))
+    assert(fallbackTasks(bare) > 0, "negative control: expected sort fallback at threshold 128")
 
-      // fresh-default-session behavior: reset to the default, then go
-      // through a PUBLIC ranker — it must raise the conf itself and
-      // plan a zero-fallback aggregate
-      spark.conf.set(TopK.FallbackConf, "128")
-      val vecs = spark.range(1200).select(col("id"),
-        array((col("id") % 7).cast("double"), (col("id") % 5).cast("double"),
-          (col("id") % 3).cast("double"), lit(1.0)).as("v"))
-      val ranked = Similarity.lshTopK(vecs.toDF(), "id", "v", k = 3, bits = 2)
-      assert(spark.conf.get(TopK.FallbackConf).toLong >= TopK.RequiredFallbackThreshold,
-        "ranker did not raise the fallback threshold on a default session")
-      assert(fallbackTasks(ranked) === 0L,
-        "ranker's top-k aggregate fell back to sort-based aggregation")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(TopK.FallbackConf, v)
-        case None    => spark.conf.unset(TopK.FallbackConf)
-      }
+    // a PUBLIC ranker on the low session checks the conf and leaves it
+    val (_, warns) = Observe.log("graft.TopK", org.apache.logging.log4j.Level.WARN) {
+      Similarity.lshTopK(vecs(low), "id", "v", k = 3, bits = 2)
     }
+    assert(low.conf.get(TopK.FallbackConf) === "128", "ranker changed the session's conf")
+    assert(warns.size === 1, warns)
+    assert(warns.head.contains(TopK.FallbackConf) &&
+      warns.head.contains(TopK.RequiredFallbackThreshold.toString), warns.head)
+
+    // the house session carries the threshold: zero fallback tasks
+    assert(spark.conf.get(TopK.FallbackConf).toLong >= TopK.RequiredFallbackThreshold)
+    val ranked = Similarity.lshTopK(vecs(spark), "id", "v", k = 3, bits = 2)
+    assert(fallbackTasks(ranked) === 0L,
+      "ranker's top-k aggregate fell back to sort-based aggregation")
   }
 
   test("classifier scoring broadcasts the model relations; ER links without cartesian") {
