@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   * and the TopK
   * hash-aggregate capacity ([[graft.functions.TopK.FallbackConf]] at
   * [[graft.functions.TopK.RequiredFallbackThreshold]]; the rankers only
-  * check it), with log level
+  * check it), and RocksDB as the streaming state store with changelog
+  * checkpointing (each commit uploads the micro-batch's delta, not a
+  * full snapshot; every keyed stream operator runs on
+  * `transformWithState`, which needs RocksDB), with log level
   * WARN. [[local]] adds `local[cpus]` and one shuffle partition per core.
   * An experiment that needs more passes its own confs as `extra`; they
   * are applied last, so they also override the list. This is the only
@@ -25,7 +28,10 @@ object Session {
     "spark.ui.enabled" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     graft.functions.TopK.FallbackConf ->
-      graft.functions.TopK.RequiredFallbackThreshold.toString)
+      graft.functions.TopK.RequiredFallbackThreshold.toString,
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** The house session on `local[cpus]` with `cpus` shuffle partitions. */
   def local(cpus: Int, extra: (String, String)*): SparkSession =

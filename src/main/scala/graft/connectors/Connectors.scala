@@ -307,7 +307,7 @@ object Connectors {
     *
     * The time base is the rate source's tick counter (1 tick = 1 second
     * at the default rowsPerSecond=1; raise it in tests for fast
-    * wall-clocks). The single-key `flatMapGroupsWithState` renders the
+    * wall-clocks). A single-key `statefulTws` logic renders the
     * reference's singleton partition: the `next_awake` cursor is Spark
     * state, so it survives micro-batch boundaries and restarts via the
     * checkpoint — the snapshot/resume contract for free.
@@ -315,37 +315,40 @@ object Connectors {
   def pollingSourceAligned[T](spark: SparkSession, intervalTicks: Long,
       alignToTick: Option[Long] = None, rowsPerSecond: Int = 1)(
       fetch: Long => Option[T])(implicit tEnc: Encoder[T]): Dataset[T] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import graft.streaming.TransformWithStateOps.{GraftStatefulLogic, statefulTws}
     require(intervalTicks > 0, "intervalTicks must be positive")
     val ticks = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond.toLong)
       .load()
-      .select(col("value")).as(Encoders.scalaLong)
-    ticks.groupByKey(_ => "singleton")(Encoders.STRING)
-      .flatMapGroupsWithState[Long, T](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Long], state: GroupState[Long]) =>
-          val out = Vector.newBuilder[T]
-          var nextAwake: Option[Long] = state.getOption
-          rows.toVector.sorted.foreach { tick =>
-            if (nextAwake.isEmpty) {
-              nextAwake = Some(alignToTick match {
-                case Some(a) =>
-                  val since = java.lang.Math.floorMod(tick - a, intervalTicks)
-                  if (since == 0) tick else tick + (intervalTicks - since)
-                case None => tick
-              })
-            }
-            if (tick >= nextAwake.get) {
-              try {
-                fetch(tick).foreach(out += _)
-                nextAwake = Some(nextAwake.get + intervalTicks)
-              } catch {
-                case r: PollRetry => nextAwake = Some(tick + r.timeoutTicks)
-              }
+      .select(lit("singleton"), col("value"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+    val cursor = new GraftStatefulLogic[String, Long, Long, T] {
+      def onBatch(key: String, rows: Seq[Long], state: Option[Long]): (Option[Long], Seq[T]) = {
+        val out = Vector.newBuilder[T]
+        var nextAwake = state
+        rows.sorted.foreach { tick =>
+          if (nextAwake.isEmpty) {
+            nextAwake = Some(alignToTick match {
+              case Some(a) =>
+                val since = java.lang.Math.floorMod(tick - a, intervalTicks)
+                if (since == 0) tick else tick + (intervalTicks - since)
+              case None => tick
+            })
+          }
+          if (tick >= nextAwake.get) {
+            try {
+              fetch(tick).foreach(out += _)
+              nextAwake = Some(nextAwake.get + intervalTicks)
+            } catch {
+              case r: PollRetry => nextAwake = Some(tick + r.timeoutTicks)
             }
           }
-          nextAwake.foreach(state.update)
-          out.result().iterator
-      }(Encoders.scalaLong, tEnc)
+        }
+        (nextAwake, out.result())
+      }
+    }
+    statefulTws(ticks, cursor)(Encoders.STRING, Encoders.scalaLong,
+        Encoders.tuple(Encoders.STRING, tEnc))
+      .map(_._2)(tEnc)
   }
 }

@@ -302,7 +302,7 @@ object Examples {
   // batch_operator (reference examples/batch_operator.py): collect into
   // size-limited batches, average each batch, then re-batch the
   // averages and format. Streaming keeps the reference's size+timeout
-  // semantics (StreamingOps.collectStream); bounded input has no
+  // semantics (TransformWithStateOps.collectTws); bounded input has no
   // timeouts, so the batch rendering chunks each key's arrival-ordered
   // stream at the size limit — relational throughout (row_number →
   // chunk id → ordered collect), no lambdas.
@@ -425,7 +425,7 @@ object Examples {
   // partition awoken every `frequency`, emitting its call counter and
   // the scheduled-vs-actual delay, stopping after `n` emissions. The
   // PeriodicPartition's (_counter, _next_awake) instance fields become
-  // flatMapGroupsWithState state on the singleton partition (surviving
+  // statefulTws state on the singleton partition (surviving
   // micro-batches + restarts); the prometheus Gauge becomes an observed
   // metric on the stream (read per-batch from StreamingQueryProgress,
   // like the reference scrapes the gauge).
@@ -433,29 +433,29 @@ object Examples {
 
   def periodicCounter(spark: SparkSession, frequencyTicks: Long, n: Long,
       rowsPerSecond: Int = 50): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import graft.streaming.TransformWithStateOps.{GraftStatefulLogic, statefulTws}
     import spark.implicits._
     require(frequencyTicks > 0 && n > 0)
     val ticks = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond.toLong).load()
-      .select(col("value")).as[Long]
-    ticks.groupByKey(_ => "singleton")
-      .flatMapGroupsWithState[(Long, Long), (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Long], state: GroupState[(Long, Long)]) =>
-          val out = Vector.newBuilder[(Long, Long)]
-          var (counter, nextAwake) = state.getOption.getOrElse((0L, -1L))
-          rows.toVector.sorted.foreach { tick =>
-            if (nextAwake < 0) nextAwake = tick
-            if (tick >= nextAwake && counter < n) {
-              counter += 1
-              out += ((counter, tick - nextAwake)) // the reference's delay gauge
-              nextAwake += frequencyTicks
-            }
+      .select(lit("singleton"), col("value")).as[(String, Long)]
+    val partition = new GraftStatefulLogic[String, Long, (Long, Long), (Long, Long)] {
+      def onBatch(key: String, rows: Seq[Long],
+          state: Option[(Long, Long)]): (Option[(Long, Long)], Seq[(Long, Long)]) = {
+        val out = Vector.newBuilder[(Long, Long)]
+        var (counter, nextAwake) = state.getOrElse((0L, -1L))
+        rows.sorted.foreach { tick =>
+          if (nextAwake < 0) nextAwake = tick
+          if (tick >= nextAwake && counter < n) {
+            counter += 1
+            out += ((counter, tick - nextAwake)) // the reference's delay gauge
+            nextAwake += frequencyTicks
           }
-          state.update((counter, nextAwake))
-          out.result().iterator
-      }.toDF("counter", "delay_ticks")
+        }
+        (Some((counter, nextAwake)), out.result())
+      }
+    }
+    statefulTws(ticks, partition).map(_._2).toDF("counter", "delay_ticks")
       .observe("periodic", avg(col("delay_ticks")).as("next_batch_delay"))
   }
 

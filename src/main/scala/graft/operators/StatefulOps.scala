@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * partitions by (key, order), then a single streaming pass — no
   * per-group buffering, so a key's history never has to fit in memory.
   *
-  * Streaming equivalents (transformWithState / flatMapGroupsWithState)
-  * live in graft.streaming.
+  * Streaming equivalents (transformWithState) live in graft.streaming.
   */
 object StatefulOps {
 

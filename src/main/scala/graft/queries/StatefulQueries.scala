@@ -102,7 +102,7 @@ object StatefulQueries {
     // (reference operators/__init__.py:1106-1218 `collect(max_size=…)`,
     // exercised by examples/batch_operator.py): each key's event types
     // in event_id arrival order, chunked into arrays of ≤5. Streaming
-    // carries the size+timeout semantics (StreamingOps.collectStream);
+    // carries the size+timeout semantics (TransformWithStateOps.collectTws);
     // this gate oracles the bounded chunking.
     "q_collect_chunks" -> { (s, dir) =>
       import s.implicits._

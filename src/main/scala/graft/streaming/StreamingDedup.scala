@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import graft.functions.{Dedup, MinHash}
@@ -51,15 +52,16 @@ import graft.functions.{Dedup, MinHash}
   * caps logical membership FIFO (a degenerate boilerplate bucket
   * otherwise grows without bound AND would make every arrival
   * O(bucket); with the cap it is O(maxBucketSize) verify work per
-  * (doc, band)). Requires the RocksDB state store provider, the same
-  * requirement as every transformWithState operator here.
+  * (doc, band)). Runs on the RocksDB state store that the house
+  * session ([[graft.Session]]) sets, like every transformWithState
+  * operator here.
   *
   * Throughput tuning (profiled on tools/DedupStreamBench, rounds
   * 9-10): set `spark.sql.streaming.stateStore.rocksdb.
   * trackTotalNumberOfRows=false` (per-put row counting forces a
   * read-before-write on every ListState append the operators never
-  * use — ~15% on the asset path) and set `...rocksdb.
-  * changelogCheckpointing.enabled=true`. The changelog setting is
+  * use — ~15% on the asset path); the house session already turns
+  * on RocksDB changelog checkpointing. That setting is
   * MEASURED A/B (round 10, asset path, 5k docs): at 500-doc
   * micro-batches it cuts summed commit time 29-31 s → 11-14 s and
   * lifts throughput ~1.4× (339-349 → 429-506 docs/s) because each
@@ -67,7 +69,7 @@ import graft.functions.{Dedup, MinHash}
   * snapshot; at 2500-doc batches the two are within noise (commit
   * cost amortizes either way). Pair-set parity is exact in every
   * configuration, so changelog-on is strictly safe and is the
-  * default every house bench/tool sets. The remaining cost is a
+  * house default. The remaining cost is a
   * FIXED ~0.4 s/micro-batch TWS+RocksDB commit floor
   * (per-partition commit file-sync ≈ 52 ms, invariant to checkpoint
   * AND local-dir filesystem — machinery latency, not disk), so
@@ -178,29 +180,33 @@ object StreamingDedup {
     }
   }
 
-  private final class BucketProcessor(threshold: Double, maxBucketSize: Int,
-      ttl: Option[java.time.Duration])
-    extends StatefulProcessor[Long, (Long, Long, Array[Long]), (Long, Long, Double)] {
+  /** The one bucket processor: keyed by the 64-bit bucket hash, input
+    * rows (bucket, id, payload) become residents (`resident`) in the
+    * ListState `stateName`, and every FIFO-visible (resident, arrival)
+    * pair of distinct ids that `verify` accepts is emitted once as
+    * (smaller id, larger id, verdict). The three operators differ only
+    * in the resident type, the state name (kept per operator so their
+    * checkpoints resume) and `verify`.
+    */
+  private final class BucketProcessor[P, R, O](stateName: String, resEnc: Encoder[R],
+      resident: (Long, P) => R, id: R => Long, verify: (R, R) => Option[O],
+      maxBucketSize: Int, ttl: Option[java.time.Duration])(implicit ct: ClassTag[R])
+    extends StatefulProcessor[Long, (Long, Long, P), (Long, Long, O)] {
 
-    @transient private var residents: ListState[Resident] = _
+    @transient private var residents: ListState[R] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      residents = getHandle.getListState[Resident]("graft_lsh_bucket",
-        Encoders.product[Resident], ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
+      residents = getHandle.getListState[R](stateName, resEnc,
+        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
 
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Array[Long])],
-        tv: TimerValues): Iterator[(Long, Long, Double)] = {
-      val arrivals = rows.map { case (_, id, sh) => Resident(id, sh) }.toArray
-      val out = Vector.newBuilder[(Long, Long, Double)]
+    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, P)],
+        tv: TimerValues): Iterator[(Long, Long, O)] = {
+      val arrivals = rows.map { case (_, i, p) => resident(i, p) }.toArray
+      val out = Vector.newBuilder[(Long, Long, O)]
       fifoVisit(residents, maxBucketSize, arrivals) { (r, a) =>
-        if (r.id != a.id) {
-          val inter = intersect(r.hashes, a.hashes)
-          val union = r.hashes.length + a.hashes.length - inter
-          val jac = if (union == 0) 0.0 else inter.toDouble / union
-          if (jac >= threshold) {
-            val (i, j) = if (r.id < a.id) (r.id, a.id) else (a.id, r.id)
-            out += ((i, j, jac))
-          }
+        val (ri, ai) = (id(r), id(a))
+        if (ri != ai) verify(r, a).foreach { o =>
+          out += ((math.min(ri, ai), math.max(ri, ai), o))
         }
       }
       out.result().iterator
@@ -215,41 +221,14 @@ object StreamingDedup {
     */
   final case class VecResident(id: Long, vec: Array[Double])
 
-  private final class VecBucketProcessor(threshold: Double, maxBucketSize: Int,
-      ttl: Option[java.time.Duration])
-    extends StatefulProcessor[Long, (Long, Long, Array[Double]), (Long, Long, Double)] {
-
-    @transient private var residents: ListState[VecResident] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      residents = getHandle.getListState[VecResident]("graft_vec_bucket",
-        Encoders.product[VecResident], ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    private def cosine(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i); val y = b(i)
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
+  private def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) {
+      val x = a(i); val y = b(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
     }
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Array[Double])],
-        tv: TimerValues): Iterator[(Long, Long, Double)] = {
-      val arrivals = rows.map { case (_, id, v) => VecResident(id, v) }.toArray
-      val out = Vector.newBuilder[(Long, Long, Double)]
-      fifoVisit(residents, maxBucketSize, arrivals) { (r, a) =>
-        if (r.id != a.id && r.vec.length == a.vec.length) {
-          val sim = cosine(r.vec, a.vec)
-          if (sim >= threshold) {
-            val (i, j) = if (r.id < a.id) (r.id, a.id) else (a.id, r.id)
-            out += ((i, j, sim))
-          }
-        }
-      }
-      out.result().iterator
-    }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
 
   /** Embedding-space variant — on-ingest SemDeDup candidate+verify:
@@ -281,7 +260,11 @@ object StreamingDedup {
       .as[(Long, Long, Array[Double])]
     prepared
       .groupByKey(_._1)
-      .transformWithState(new VecBucketProcessor(threshold, maxBucketSize, ttl),
+      .transformWithState(new BucketProcessor[Array[Double], VecResident, Double](
+          "graft_vec_bucket", Encoders.product[VecResident], VecResident(_, _), _.id,
+          (r, a) => if (r.vec.length != a.vec.length) None
+            else Some(cosine(r.vec, a.vec)).filter(_ >= threshold),
+          maxBucketSize, ttl),
         timeModeFor(ttl), OutputMode.Append())
   }
 
@@ -312,7 +295,14 @@ object StreamingDedup {
       .map { case (id, sh, bh) => (bh, id, sh) }
     prepared
       .groupByKey(_._1)
-      .transformWithState(new BucketProcessor(threshold, maxBucketSize, ttl),
+      .transformWithState(new BucketProcessor[Array[Long], Resident, Double](
+          "graft_lsh_bucket", Encoders.product[Resident], Resident(_, _), _.id,
+          (r, a) => {
+            val inter = intersect(r.hashes, a.hashes)
+            val union = r.hashes.length + a.hashes.length - inter
+            Some(if (union == 0) 0.0 else inter.toDouble / union).filter(_ >= threshold)
+          },
+          maxBucketSize, ttl),
         timeModeFor(ttl), OutputMode.Append())
   }
 
@@ -321,33 +311,6 @@ object StreamingDedup {
     * resident).
     */
   final case class SigResident(id: Long, sig: Long)
-
-  private final class SigBucketProcessor(maxHamming: Int, maxBucketSize: Int,
-      ttl: Option[java.time.Duration])
-    extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Int)] {
-
-    @transient private var residents: ListState[SigResident] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      residents = getHandle.getListState[SigResident]("graft_sig_bucket",
-        Encoders.product[SigResident], ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long)],
-        tv: TimerValues): Iterator[(Long, Long, Int)] = {
-      val arrivals = rows.map { case (_, id, sig) => SigResident(id, sig) }.toArray
-      val out = Vector.newBuilder[(Long, Long, Int)]
-      fifoVisit(residents, maxBucketSize, arrivals) { (r, a) =>
-        if (r.id != a.id) {
-          val h = java.lang.Long.bitCount(r.sig ^ a.sig)
-          if (h <= maxHamming) {
-            val (i, j) = if (r.id < a.id) (r.id, a.id) else (a.id, r.id)
-            out += ((i, j, h))
-          }
-        }
-      }
-      out.result().iterator
-    }
-  }
 
   /** Streaming multimodal near-dup: assets arriving on a stream pair
     * against recent residents by byte-gradient dHash within
@@ -388,7 +351,10 @@ object StreamingDedup {
       .as[(Long, Long, Long)]
     prepared
       .groupByKey(_._1)
-      .transformWithState(new SigBucketProcessor(maxHamming, maxBucketSize, ttl),
+      .transformWithState(new BucketProcessor[Long, SigResident, Int](
+          "graft_sig_bucket", Encoders.product[SigResident], SigResident(_, _), _.id,
+          (r, a) => Some(java.lang.Long.bitCount(r.sig ^ a.sig)).filter(_ <= maxHamming),
+          maxBucketSize, ttl),
         timeModeFor(ttl), OutputMode.Append())
   }
 

@@ -2,18 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.windowing.{Clock, EventClock, SystemClock, Windower, Windowing}
 
 /** Streaming analogues of the stateful/windowed operator surface —
   * the `stateful_batch` core on unbounded data (reference:
   * src/operators.rs:441-1041). Mapping:
   *
-  *  - per-key state + epoch-ordered application → `mapGroupsWithState` /
-  *    `flatMapGroupsWithState` over `groupByKey` (hash exchange ⇔ the
+  *  - per-key state + epoch-ordered application → `transformWithState`
+  *    over `groupByKey` ([[TransformWithStateOps]]; hash exchange ⇔ the
   *    reference's routed exchange, src/operators.rs:572-594)
   *  - `notify_at`/`on_notify` timers (src/operators.rs:813-860) →
-  *    `GroupState.setTimeoutTimestamp` / timeout-fired invocations
+  *    processing-time timers (`registerTimer` / `handleExpiredTimer`)
   *  - `snapshot()` per epoch (src/recovery.rs) → state-store
   *    checkpointing (free; delete-on-restart semantics handled by
   *    `checkpointLocation`)
@@ -24,86 +24,25 @@ import graft.windowing.{Clock, EventClock, SystemClock, Windower, Windowing}
 object StreamingOps {
 
   /** stateful_map on a stream: per-key running (S, V) → (S, W).
-    * Emits one output per input row. Uses update-mode
-    * flatMapGroupsWithState with no timeout (pure data-driven state).
+    * Emits one output per input row, in arrival order, as a timerless
+    * [[TransformWithStateOps.GraftStatefulLogic]] on
+    * [[TransformWithStateOps.statefulTws]] (pure data-driven state).
     */
-  def statefulMapStream[K: Encoder, V, S: Encoder, W: Encoder](
+  def statefulMapStream[K: Encoder, V, S: Encoder, W](
       ds: Dataset[(K, V)], init: K => S)(step: (S, V) => (S, W))(
-      implicit kvEnc: Encoder[(K, V)], outEnc: Encoder[(K, W)]): Dataset[(K, W)] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[S, (K, W)](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: K, rows: Iterator[(K, V)], state: GroupState[S]) =>
-          var s = state.getOption.getOrElse(init(key))
-          val out = rows.map { case (_, v) =>
-            val (s2, w) = step(s, v)
-            s = s2
-            (key, w)
-          }.toVector
-          state.update(s)
-          out.iterator
+      implicit outEnc: Encoder[(K, W)]): Dataset[(K, W)] = {
+    val logic = new TransformWithStateOps.GraftStatefulLogic[K, V, S, W] {
+      def onBatch(key: K, values: Seq[V], state: Option[S]): (Option[S], Seq[W]) = {
+        var s = state.getOrElse(init(key))
+        val out = values.iterator.map { v =>
+          val (s2, w) = step(s, v)
+          s = s2
+          w
+        }.toVector
+        (Some(s), out)
       }
-
-  /** collect on a stream (reference operators/__init__.py:1106-1218):
-    * buffer values per key, flush as a batch when `maxSize` is reached
-    * or `timeoutMillis` passes without new input (processing-time
-    * timeout ⇔ the reference's `notify_at` timer).
-    */
-  def collectStream[K: Encoder, V: Encoder](
-      ds: Dataset[(K, V)], maxSize: Int, timeoutMillis: Long)(
-      implicit kvEnc: Encoder[(K, V)], outEnc: Encoder[(K, Seq[V])],
-      bufEnc: Encoder[Vector[V]]): Dataset[(K, Seq[V])] =
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[Vector[V], (K, Seq[V])](OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: K, rows: Iterator[(K, V)], state: GroupState[Vector[V]]) =>
-          if (state.hasTimedOut) {
-            val buf = state.getOption.getOrElse(Vector.empty)
-            state.remove()
-            if (buf.nonEmpty) Iterator.single((key, buf)) else Iterator.empty
-          } else {
-            var buf = state.getOption.getOrElse(Vector.empty)
-            val flushed = Vector.newBuilder[(K, Seq[V])]
-            rows.foreach { case (_, v) =>
-              buf = buf :+ v
-              if (buf.size >= maxSize) { flushed += ((key, buf)); buf = Vector.empty }
-            }
-            if (buf.nonEmpty) {
-              state.update(buf)
-              state.setTimeoutDuration(timeoutMillis)
-            } else state.remove()
-            flushed.result().iterator
-          }
-      }
-
-  /** Generic keyed state machine on a stream — the closest analogue of
-    * `StatefulBatchLogic.on_batch` + `on_notify` (reference
-    * operators/__init__.py:593-792). `onBatch` sees the key's batch and
-    * state; `onTimeout` fires after `timeoutMillis` idle. Return
-    * (newState | None to clear, emitted rows).
-    */
-  def statefulStream[K: Encoder, V, S: Encoder, W: Encoder](
-      ds: Dataset[(K, V)], timeoutMillis: Option[Long])(
-      onBatch: (K, Seq[V], Option[S]) => (Option[S], Seq[W]),
-      onTimeout: (K, S) => (Option[S], Seq[W]) = (_: K, _: S) => (None, Seq.empty[W]))(
-      implicit kvEnc: Encoder[(K, V)], outEnc: Encoder[(K, W)]): Dataset[(K, W)] = {
-    val timeoutConf = if (timeoutMillis.isDefined) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[S, (K, W)](OutputMode.Append, timeoutConf) {
-        (key: K, rows: Iterator[(K, V)], state: GroupState[S]) =>
-          if (state.hasTimedOut) {
-            val (s2, out) = onTimeout(key, state.get)
-            s2 match { case Some(s) => state.update(s); case None => state.remove() }
-            out.map((key, _)).iterator
-          } else {
-            val (s2, out) = onBatch(key, rows.map(_._2).toSeq, state.getOption)
-            s2 match {
-              case Some(s) =>
-                state.update(s)
-                timeoutMillis.foreach(state.setTimeoutDuration)
-              case None => state.remove()
-            }
-            out.map((key, _)).iterator
-          }
-      }
+    }
+    TransformWithStateOps.statefulTws(ds, logic)
   }
 
   /** Windowed aggregation on a stream: EventClock.waitFor becomes the
@@ -206,7 +145,7 @@ object StreamingOps {
     ds.sparkSession.table(name)
   }
 
-  /** Like [[runToMemory]] but safe for ProcessingTimeTimeout state ops:
+  /** Like [[runToMemory]] but safe for processing-time timer state ops:
     * those keep scheduling micro-batches, so `processAllAvailable` never
     * settles (Spark's documented behavior for timer-driven state). Polls
     * the sink until `expectedRows` appear or `timeoutMs` elapses, then

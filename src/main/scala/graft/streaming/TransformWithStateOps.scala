@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming._
 
 /** Spark 4 `transformWithState` bridge — the closest structural match to
@@ -12,9 +12,12 @@ import org.apache.spark.sql.streaming._
   *  - `on_notify`  ⇔ `handleExpiredTimer`
   *  - `snapshot`   ⇔ state-store persistence (free via checkpoint)
   *
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass`), which is also the
-  * recommended provider at 100 TB state sizes.
+  * Needs the RocksDB state store provider, which the house session
+  * ([[graft.Session]]) sets with changelog checkpointing; it is also
+  * the recommended provider at 100 TB state sizes. This is graft's one
+  * keyed stream engine: `StreamingOps.statefulMapStream`, [[collectTws]]
+  * and the singleton cursors in `Connectors` and `Examples` are logics
+  * on [[statefulTws]].
   */
 object TransformWithStateOps {
 
@@ -88,14 +91,13 @@ object TransformWithStateOps {
     * a timer-capable operator keeps scheduling micro-batches, so
     * timerless logic must run in TimeMode.None for queries to drain.
     *
-    * Engine-choice throughput (measured, `tools/TwsBench`, 1M items /
-    * 10k keys / RocksDB both sides): TWS pays ~60 µs/key-visit of
-    * engine machinery over `StreamingOps.statefulStream` on the
-    * simplest ValueState shape (~1.8× wall on a pure running sum) and
-    * reaches parity on ListState shapes (bounded collect 1.0–1.1×).
-    * Default remains TWS for the capability surface (timers, TTL,
-    * typed ListState/MapState); the FMGWS engine stays the documented
-    * compat path for simple high-rate shapes.
+    * Engine-choice history (measured, `tools/TwsBench` — tool removed;
+    * source at `72c199a` — 1M items / 10k keys / RocksDB both sides):
+    * TWS paid ~60 µs/key-visit of engine machinery over the
+    * `flatMapGroupsWithState` engine on the simplest ValueState shape
+    * (~1.8× wall on a pure running sum) and reached parity on ListState
+    * shapes (bounded collect 1.0–1.1×). TWS is the only engine now, for
+    * its capability surface (timers, TTL, typed ListState/MapState).
     */
   def statefulTws[K: Encoder, V, S, W](
       ds: Dataset[(K, V)], logic: GraftStatefulLogic[K, V, S, W],
@@ -107,44 +109,27 @@ object TransformWithStateOps {
       .transformWithState(new LogicProcessor[K, V, S, W](logic, sEnc), tm, OutputMode.Append())
   }
 
-  /** collect via transformWithState ListState — buffers per key, flushes
-    * at maxSize (timer-based timeout flush via [[GraftStatefulLogic]]
-    * wiring when running with a processing-time trigger).
+  /** collect on a stream (reference operators/__init__.py:1106-1218):
+    * buffer values per key and flush at `maxSize`, or once the key has
+    * been idle for `timeoutMs` (the [[GraftStatefulLogic.notifyAfterMs]]
+    * debounce ⇔ the reference's `notify_at` timer). A size flush that
+    * empties the buffer clears the state; the leftover of a batch stays
+    * buffered.
     */
-  private class CollectProcessor[K, V](maxSize: Int, timeoutMs: Long, vEnc: Encoder[V])
-    extends StatefulProcessor[K, (K, V), (K, Seq[V])] {
-
-    @transient private var buf: ListState[V] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getListState[V]("graft_collect", vEnc, TTLConfig.NONE)
-
-    override def handleInputRows(key: K, rows: Iterator[(K, V)], tv: TimerValues): Iterator[(K, Seq[V])] = {
-      var cur = if (buf.exists()) buf.get().toVector else Vector.empty[V]
-      val out = Vector.newBuilder[(K, Seq[V])]
-      rows.foreach { case (_, v) =>
-        cur = cur :+ v
-        if (cur.size >= maxSize) { out += ((key, cur)); cur = Vector.empty }
-      }
-      buf.clear()
-      if (cur.nonEmpty) {
-        buf.put(cur.toArray[Any].asInstanceOf[Array[V]])
-        getHandle.registerTimer(tv.getCurrentProcessingTimeInMs() + timeoutMs)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(key: K, tv: TimerValues, info: ExpiredTimerInfo): Iterator[(K, Seq[V])] = {
-      val cur = if (buf.exists()) buf.get().toVector else Vector.empty[V]
-      buf.clear()
-      if (cur.nonEmpty) Iterator.single((key, cur)) else Iterator.empty
-    }
-  }
-
   def collectTws[K: Encoder, V](
       ds: Dataset[(K, V)], maxSize: Int, timeoutMs: Long)(
-      implicit vEnc: Encoder[V], outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] =
-    ds.groupByKey(_._1)
-      .transformWithState(new CollectProcessor[K, V](maxSize, timeoutMs, vEnc),
-        TimeMode.ProcessingTime(), OutputMode.Append())
+      implicit bufEnc: Encoder[Seq[V]], outEnc: Encoder[(K, Seq[V])]): Dataset[(K, Seq[V])] = {
+    require(maxSize > 0, "maxSize must be positive")
+    val logic = new GraftStatefulLogic[K, V, Seq[V], Seq[V]] {
+      def onBatch(key: K, values: Seq[V], state: Option[Seq[V]]): (Option[Seq[V]], Seq[Seq[V]]) = {
+        val buf = state.getOrElse(Vector.empty[V]) ++ values
+        val (full, rest) = buf.splitAt(buf.size - buf.size % maxSize)
+        (Option(rest).filter(_.nonEmpty), full.grouped(maxSize).toVector)
+      }
+      override def onNotify(key: K, state: Option[Seq[V]]): (Option[Seq[V]], Seq[Seq[V]]) =
+        (None, state.toVector)
+      override def notifyAfterMs: Option[Long] = Some(timeoutMs)
+    }
+    statefulTws(ds, logic)
+  }
 }

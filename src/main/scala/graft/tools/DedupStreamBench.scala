@@ -30,15 +30,6 @@ object DedupStreamBench {
     val spark = graft.Session.local(cpus, sys.env.get("SPARK_GRAFT_LOCAL_DIR")
       .map("spark.local.dir" -> _).toSeq ++ Seq(
       "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-      "spark.sql.streaming.stateStore.providerClass" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
-      // changelog checkpointing: commit uploads the batch's delta, not
-      // a full RocksDB snapshot — the production setting for any
-      // high-frequency trigger (pairs with the ListState append path:
-      // an arrival is one merge record in the changelog)
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "true"),
       // per-put row counting forces a RocksDB read-before-write on every
       // ListState append; the operator never reads the row count
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->

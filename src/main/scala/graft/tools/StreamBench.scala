@@ -11,12 +11,6 @@ import graft.connectors.Testing
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val rocksDb =
-      if (sys.env.get("SPARK_GRAFT_ROCKSDB").contains("1")) Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-      else Nil
     // Emission-deferral (default ON, SPARK_GRAFT_NODATA=1 restores
     // Spark's default): without no-data micro-batches each addBatch
     // cycle runs ONE state commit round instead of two (the second being
@@ -31,7 +25,7 @@ object StreamBench {
     // oversized parallelism is pure overhead at this group count
     // (measured: 8 → 4 partitions saves ~7%, 2 another ~4%; at real
     // cluster group counts size this to data, not to the default 200).
-    val spark = graft.Session.local(graft.Session.cpus(8), rocksDb ++ noData :+
+    val spark = graft.Session.local(graft.Session.cpus(8), noData :+
       ("spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4")): _*)
     import spark.implicits._
 

@@ -444,8 +444,8 @@ object WindowLogicOps {
     * event-time timer per (key, window); session windows run the
     * merge-on-arrival buffer processor ([[SessionLogicProcessor]]) —
     * state per key is bounded by the watermark horizon. The watermark
-    * comes from `clock.waitFor`. Requires the RocksDB state store
-    * provider (transformWithState).
+    * comes from `clock.waitFor`. Runs on transformWithState, so it needs
+    * the RocksDB state store the house session sets.
     */
   def windowLogicStream[V, W, S](
       df: DataFrame, keyCol: String, clock: EventClock, windower: Windower,

@@ -141,72 +141,54 @@ class CorpusSpec extends SparkSpec {
   test("streaming running count: final estimates bit-equal the batch estimates") {
     import graft.connectors.Testing
     import graft.streaming.{StreamingCms, StreamingOps}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // last emission per (key, item) = the final (full-data) estimate:
-      // counters only grow and every batch re-emits its arrivals
-      val rows = (0L until 3000L).map(i => ("k" + (i % 2), i % 37))
-      val src = Testing.testingSource[(String, Long)](spark)
-      src.addBatch(rows.take(1000): _*)
-      src.addBatch(rows.slice(1000, 2000): _*)
-      src.addBatch(rows.drop(2000): _*)
-      val out = StreamingCms.runningCount(src.toDS(), depth = 3, width = 32)
-      val got = StreamingOps.runToMemory(out, "scms").as[(String, (Long, Long))]
-        .collect().groupBy(r => (r._1, r._2._1))
-        .map { case (k, v) => k -> v.map(_._2._2).max }
-      val skDf = rows.toDF("k", "h").groupBy($"k")
-        .agg(Cms.cmsSketch($"h", lit(1L), 3, 32).as("sk"))
-      val want = rows.toDF("k", "h").distinct().join(skDf, "k")
-        .select($"k", $"h", Cms.cmsEstimate($"sk", $"h").as("est"))
-        .as[(String, Long, Long)].collect()
-        .map(r => (r._1, r._2) -> r._3).toMap
-      assert(got === want)
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    // last emission per (key, item) = the final (full-data) estimate:
+    // counters only grow and every batch re-emits its arrivals
+    val rows = (0L until 3000L).map(i => ("k" + (i % 2), i % 37))
+    val src = Testing.testingSource[(String, Long)](spark)
+    src.addBatch(rows.take(1000): _*)
+    src.addBatch(rows.slice(1000, 2000): _*)
+    src.addBatch(rows.drop(2000): _*)
+    val out = StreamingCms.runningCount(src.toDS(), depth = 3, width = 32)
+    val got = StreamingOps.runToMemory(out, "scms").as[(String, (Long, Long))]
+      .collect().groupBy(r => (r._1, r._2._1))
+      .map { case (k, v) => k -> v.map(_._2._2).max }
+    val skDf = rows.toDF("k", "h").groupBy($"k")
+      .agg(Cms.cmsSketch($"h", lit(1L), 3, 32).as("sk"))
+    val want = rows.toDF("k", "h").distinct().join(skDf, "k")
+      .select($"k", $"h", Cms.cmsEstimate($"sk", $"h").as("est"))
+      .as[(String, Long, Long)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    assert(got === want)
   }
 
   test("streaming cms survives stop/restart without double counting") {
     import graft.connectors.Testing
     import graft.streaming.StreamingCms
     import java.nio.file.Files
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ckpt = Files.createTempDirectory("graft-scms-ckpt").toFile.getPath
-      val outDir = Files.createTempDirectory("graft-scms-out").toFile.getPath
-      val src = Testing.testingSource[(String, Long)](spark)
-      def start() = StreamingCms.runningCount(src.toDS(), depth = 3, width = 32)
-        .map { case (k, (h, e)) => (k, h, e) }.toDF("k", "h", "est")
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
-      val rows1 = (0L until 500L).map(i => ("k" + (i % 2), i % 11))
-      val rows2 = (500L until 1000L).map(i => ("k" + (i % 2), i % 11))
-      src.addBatch(rows1: _*)
-      val q1 = start(); q1.processAllAvailable(); q1.stop()
-      src.addBatch(rows2: _*)
-      val q2 = start(); q2.processAllAvailable(); q2.stop()
-      // final estimate per (key, item) = max over emissions; lost state
-      // would read low, a replayed batch-1 would read high — both fail
-      val got = spark.read.parquet(outDir).as[(String, Long, Long)]
-        .collect().groupBy(r => (r._1, r._2)).map { case (k, v) => k -> v.map(_._3).max }
-      val all = rows1 ++ rows2
-      val skDf = all.toDF("k", "h").groupBy($"k")
-        .agg(Cms.cmsSketch($"h", lit(1L), 3, 32).as("sk"))
-      val want = all.toDF("k", "h").distinct().join(skDf, "k")
-        .select($"k", $"h", Cms.cmsEstimate($"sk", $"h").as("est"))
-        .as[(String, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-      assert(got === want)
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    val ckpt = Files.createTempDirectory("graft-scms-ckpt").toFile.getPath
+    val outDir = Files.createTempDirectory("graft-scms-out").toFile.getPath
+    val src = Testing.testingSource[(String, Long)](spark)
+    def start() = StreamingCms.runningCount(src.toDS(), depth = 3, width = 32)
+      .map { case (k, (h, e)) => (k, h, e) }.toDF("k", "h", "est")
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    val rows1 = (0L until 500L).map(i => ("k" + (i % 2), i % 11))
+    val rows2 = (500L until 1000L).map(i => ("k" + (i % 2), i % 11))
+    src.addBatch(rows1: _*)
+    val q1 = start(); q1.processAllAvailable(); q1.stop()
+    src.addBatch(rows2: _*)
+    val q2 = start(); q2.processAllAvailable(); q2.stop()
+    // final estimate per (key, item) = max over emissions; lost state
+    // would read low, a replayed batch-1 would read high — both fail
+    val got = spark.read.parquet(outDir).as[(String, Long, Long)]
+      .collect().groupBy(r => (r._1, r._2)).map { case (k, v) => k -> v.map(_._3).max }
+    val all = rows1 ++ rows2
+    val skDf = all.toDF("k", "h").groupBy($"k")
+      .agg(Cms.cmsSketch($"h", lit(1L), 3, 32).as("sk"))
+    val want = all.toDF("k", "h").distinct().join(skDf, "k")
+      .select($"k", $"h", Cms.cmsEstimate($"sk", $"h").as("est"))
+      .as[(String, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(got === want)
   }
 
   test("all four sketch families survive a parquet round-trip and re-merge to the direct sketch") {

@@ -26,17 +26,31 @@ class HarnessSpec extends SparkSpec {
     assert(offenders.isEmpty, s"SparkSession.builder outside Session.scala: $offenders")
   }
 
+  /** The non-comment lines of a source file, trimmed. */
+  private def code(text: String): Iterator[String] = text.split("\n").iterator.map(_.trim)
+    .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+
   test("only Session.scala sets session conf") {
     // library code may read, check or log a setting, never set one or
     // define a conf key of its own; comment lines may still name them
-    def code(text: String) = text.split("\n").iterator.map(_.trim)
-      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
     val setters = librarySources.collect { case (f, text) if code(text).exists(l =>
       l.contains(".conf.set(") || l.contains(".conf.unset(")) => f }
     assert(setters.isEmpty, s"session conf set outside Session.scala: $setters")
     val keys = librarySources.collect {
       case (f, text) if code(text).exists(_.contains("\"spark.graft.")) => f }
     assert(keys.isEmpty, s"graft conf keys defined: $keys")
+  }
+
+  test("one keyed stream engine on the house state store") {
+    // every keyed stream operator is a transformWithState logic, and
+    // only the house session chooses the state store; the group-state
+    // match covers flatMapGroupsWithState too
+    val groupState = librarySources.collect {
+      case (f, text) if code(text).exists(_.contains("mapGroupsWithState")) => f }
+    val store = librarySources.collect { case (f, text) if code(text).exists(l =>
+      l.contains("stateStore.providerClass") || l.contains("rocksdb.changelogCheckpointing")) => f }
+    assert(groupState.isEmpty && store.isEmpty,
+      s"group-state engine in: $groupState; state-store confs in: $store")
   }
 
   test("Bench: a gate that throws is listed as failed and never timed") {

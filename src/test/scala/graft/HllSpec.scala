@@ -61,31 +61,22 @@ class HllSpec extends SparkSpec {
   test("streaming running distinct: final estimate bit-equals the batch estimate") {
     import graft.connectors.Testing
     import graft.streaming.{StreamingHll, StreamingOps}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // max over per-batch emissions = the final (full-data) estimate:
-      // registers only grow, and on this corpus the estimator is
-      // monotone across the LC->raw switch
-      val rows = (0L until 3000L).map(i =>
-        ("k" + (i % 2), graft.functions.SamplingImpl.splitmix64(i)))
-      val src = Testing.testingSource[(String, Long)](spark)
-      src.addBatch(rows.take(1000): _*)
-      src.addBatch(rows.slice(1000, 2000): _*)
-      src.addBatch(rows.drop(2000): _*)
-      val out = StreamingHll.runningDistinct(src.toDS(), p = 9)
-      val got = StreamingOps.runToMemory(out, "shll").as[(String, Double)]
-        .collect().groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
-      val want = rows.toDF("k", "h").groupBy($"k")
-        .agg(Hll.hllEstimate(Hll.hllSketch($"h", p = 9)).as("est"))
-        .as[(String, Double)].collect().toMap
-      assert(got === want)
-    } finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+    // max over per-batch emissions = the final (full-data) estimate:
+    // registers only grow, and on this corpus the estimator is
+    // monotone across the LC->raw switch
+    val rows = (0L until 3000L).map(i =>
+      ("k" + (i % 2), graft.functions.SamplingImpl.splitmix64(i)))
+    val src = Testing.testingSource[(String, Long)](spark)
+    src.addBatch(rows.take(1000): _*)
+    src.addBatch(rows.slice(1000, 2000): _*)
+    src.addBatch(rows.drop(2000): _*)
+    val out = StreamingHll.runningDistinct(src.toDS(), p = 9)
+    val got = StreamingOps.runToMemory(out, "shll").as[(String, Double)]
+      .collect().groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
+    val want = rows.toDF("k", "h").groupBy($"k")
+      .agg(Hll.hllEstimate(Hll.hllSketch($"h", p = 9)).as("est"))
+      .as[(String, Double)].collect().toMap
+    assert(got === want)
   }
 
   test("hllMerge2 scalar ≡ aggregate merge, bit-for-bit; nulls propagate") {

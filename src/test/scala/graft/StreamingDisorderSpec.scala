@@ -23,17 +23,6 @@ import graft.streaming.StreamingEvents
 class StreamingDisorderSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def disorder[T](evs: Seq[T], timeOf: T => Long, d: Long,
       seed: Long): Seq[T] = {
     val rng = new scala.util.Random(seed)
@@ -52,24 +41,23 @@ class StreamingDisorderSpec extends SparkSpec {
   private val steps = Seq("view", "click", "purchase")
 
   private def funnelDis(splits: Seq[Seq[(Long, Long, String)]],
-      d: Long): Map[Long, Seq[Long]] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, (Long, String))](spark)
-      val out = StreamingEvents.funnelStreamDisordered(src.toDS(), steps,
-        disorderUs = d, maxSpanUs = Some(10L))
-      val q = out.writeStream.format("memory").queryName("dfunnel")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b =>
-          src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
-          q.processAllAvailable()
-        }
-        spark.table("dfunnel").as[(Long, Seq[Long])].collect()
-          .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_.length) }
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS dfunnel")
+      d: Long): Map[Long, Seq[Long]] = {
+    val src = Testing.testingSource[(Long, (Long, String))](spark)
+    val out = StreamingEvents.funnelStreamDisordered(src.toDS(), steps,
+      disorderUs = d, maxSpanUs = Some(10L))
+    val q = out.writeStream.format("memory").queryName("dfunnel")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b =>
+        src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
+        q.processAllAvailable()
       }
+      spark.table("dfunnel").as[(Long, Seq[Long])].collect()
+        .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_.length) }
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS dfunnel")
     }
+  }
 
   private def funnelBatch: Map[Long, Seq[Long]] =
     Events.funnel(funnelRows.toDF("user_id", "us", "event_type"),
@@ -104,7 +92,7 @@ class StreamingDisorderSpec extends SparkSpec {
     for (seed <- 1L to 4L) {
       val arrival = disorder[(Long, Long)](evs, _._2, d, seed)
       val drain = evs.map(_._1).distinct.map(u => (u, maxT + d + 1))
-      val got = withRocksDb {
+      val got = {
         val src = Testing.testingSource[(Long, Long)](spark)
         val out = StreamingEvents.sessionizeStreamDisordered(src.toDS(),
           gapUs = 10L, disorderUs = d)
@@ -142,7 +130,7 @@ class StreamingDisorderSpec extends SparkSpec {
     for (seed <- 1L to 4L) {
       val arrival = disorder[(Long, Long, Long)](evs, _._2, d, seed)
       val drain = evs.map(_._1).distinct.map(u => (u, maxT + d + 1, 0L))
-      val got = withRocksDb {
+      val got = {
         val src = Testing.testingSource[(Long, (Long, Long))](spark)
         val out = StreamingEvents.cusumStreamDisordered(src.toDS(),
           ref = 10L, threshold = 5L, disorderUs = d)
@@ -184,7 +172,7 @@ class StreamingDisorderSpec extends SparkSpec {
     for (seed <- 1L to 4L) {
       val arrival = disorder[(Long, Long, String)](evs, _._2, d, seed)
       val drain = evs.map(_._1).distinct.map(u => (u, maxT + d + 1, "~"))
-      val got = withRocksDb {
+      val got = {
         val src = Testing.testingSource[(Long, (Long, String))](spark)
         val out = StreamingEvents.transitionsStreamDisordered(src.toDS(),
           disorderUs = d)
@@ -227,7 +215,7 @@ class StreamingDisorderSpec extends SparkSpec {
         .toSet
       val arrival = disorder[(Long, Long, String, Long)](rows, _._2, d, seed)
       val drain = rows.map(_._1).distinct.map(u => (u, maxT + d + 1, "~", 0L))
-      val got = withRocksDb {
+      val got = {
         val src =
           Testing.testingSource[(Long, (Long, Long, String, String))](spark)
         val out = StreamingEvents.attributionStreamDisordered(src.toDS(),
@@ -258,7 +246,7 @@ class StreamingDisorderSpec extends SparkSpec {
     // D=10: high-water 30 → frontier 20, session rows ≤ 20 released;
     // t=15 arrives after (15 ≤ flushed 20) → DROPPED; t=25 is inside
     // the buffer window → accepted and ordered before 30
-    val got = withRocksDb {
+    val got = {
       val src = Testing.testingSource[(Long, Long)](spark)
       val out = StreamingEvents.sessionizeStreamDisordered(src.toDS(),
         gapUs = 100L, disorderUs = 10L)
@@ -281,68 +269,64 @@ class StreamingDisorderSpec extends SparkSpec {
   }
 
   test("disorder faces: idle-flush timer drains the tail buffer") {
-    withRocksDb {
-      val src = Testing.testingSource[(Long, Long)](spark)
-      val out = StreamingEvents.sessionizeStreamDisordered(src.toDS(),
-        gapUs = 100L, disorderUs = 1000000L, idleFlushMs = 400L)
-      // ProcessingTime time mode keeps scheduling micro-batches, so
-      // processAllAvailable never settles (the TransformWithStateSpec
-      // TTL-test pattern): poll the sink with a deadline instead —
-      // the engine's own batches fire the timer once the key idles
-      // past the debounce
-      val q = out.writeStream.format("memory").queryName("didle")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("100 milliseconds"))
-        .start()
-      try {
-        // everything sits in the disorder buffer (frontier far below)
-        src.addBatch((1L, 5L), (1L, 30L))
-        val deadline = System.currentTimeMillis() + 30000
-        while (System.currentTimeMillis() < deadline &&
-            spark.table("didle").count() < 2) Thread.sleep(200L)
-        val got = spark.table("didle").as[(Long, (Long, Long))].collect()
-          .filter(_._1 == 1L).map(r => r._2).sorted.toSeq
-        assert(got === Seq((5L, 1L), (30L, 1L)), got.toString)
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS didle")
-      }
+    val src = Testing.testingSource[(Long, Long)](spark)
+    val out = StreamingEvents.sessionizeStreamDisordered(src.toDS(),
+      gapUs = 100L, disorderUs = 1000000L, idleFlushMs = 400L)
+    // ProcessingTime time mode keeps scheduling micro-batches, so
+    // processAllAvailable never settles (the TransformWithStateSpec
+    // TTL-test pattern): poll the sink with a deadline instead —
+    // the engine's own batches fire the timer once the key idles
+    // past the debounce
+    val q = out.writeStream.format("memory").queryName("didle")
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger
+        .ProcessingTime("100 milliseconds"))
+      .start()
+    try {
+      // everything sits in the disorder buffer (frontier far below)
+      src.addBatch((1L, 5L), (1L, 30L))
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline &&
+          spark.table("didle").count() < 2) Thread.sleep(200L)
+      val got = spark.table("didle").as[(Long, (Long, Long))].collect()
+        .filter(_._1 == 1L).map(r => r._2).sorted.toSeq
+      assert(got === Seq((5L, 1L), (30L, 1L)), got.toString)
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS didle")
     }
   }
 
   test("disorder buffer + high-water mark survive stop/restart") {
-    withRocksDb {
-      import java.nio.file.Files
-      val ckpt = Files.createTempDirectory("graft-dis-ckpt").toFile.getPath
-      val outDir = Files.createTempDirectory("graft-dis-out").toFile.getPath
-      val src = Testing.testingSource[(Long, Long)](spark)
-      def startQuery() =
-        StreamingEvents.sessionizeStreamDisordered(src.toDS(),
-            gapUs = 10L, disorderUs = 50L)
-          .map { case (u, (us, idx)) => (u, us, idx) }
-          .toDF("u", "us", "idx").writeStream
-          .format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
+    import java.nio.file.Files
+    val ckpt = Files.createTempDirectory("graft-dis-ckpt").toFile.getPath
+    val outDir = Files.createTempDirectory("graft-dis-out").toFile.getPath
+    val src = Testing.testingSource[(Long, Long)](spark)
+    def startQuery() =
+      StreamingEvents.sessionizeStreamDisordered(src.toDS(),
+          gapUs = 10L, disorderUs = 50L)
+        .map { case (u, (us, idx)) => (u, us, idx) }
+        .toDF("u", "us", "idx").writeStream
+        .format("parquet").option("path", outDir)
+        .option("checkpointLocation", ckpt).outputMode("append").start()
 
-      // run 1: both events inside the disorder window — buffered only
-      val q1 = startQuery()
-      src.addBatch((1L, 40L), (1L, 20L))
-      q1.processAllAvailable()
-      q1.stop()
-      assert(spark.read.parquet(outDir).count() === 0L,
-        "events must still be buffered at stop")
+    // run 1: both events inside the disorder window — buffered only
+    val q1 = startQuery()
+    src.addBatch((1L, 40L), (1L, 20L))
+    q1.processAllAvailable()
+    q1.stop()
+    assert(spark.read.parquet(outDir).count() === 0L,
+      "events must still be buffered at stop")
 
-      // run 2: an advancer past 40+50 releases BOTH in order — only
-      // possible if the buffer and the 40 high-water mark recovered
-      val q2 = startQuery()
-      src.addBatch((1L, 200L))
-      q2.processAllAvailable()
-      q2.stop()
-      val got = spark.read.parquet(outDir).as[(Long, Long, Long)]
-        .collect().sortBy(_._2).toSeq
-      // gap 10: 20 opens session 1, 40 opens session 2 (gap 20 > 10);
-      // 200 itself still buffered
-      assert(got === Seq((1L, 20L, 1L), (1L, 40L, 2L)), got.toString)
-    }
+    // run 2: an advancer past 40+50 releases BOTH in order — only
+    // possible if the buffer and the 40 high-water mark recovered
+    val q2 = startQuery()
+    src.addBatch((1L, 200L))
+    q2.processAllAvailable()
+    q2.stop()
+    val got = spark.read.parquet(outDir).as[(Long, Long, Long)]
+      .collect().sortBy(_._2).toSeq
+    // gap 10: 20 opens session 1, 40 opens session 2 (gap 20 > 10);
+    // 200 itself still buffered
+    assert(got === Seq((1L, 20L, 1L), (1L, 40L, 2L)), got.toString)
   }
 }

@@ -12,17 +12,6 @@ import graft.streaming.StreamingEvents
 class StreamingEventsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   // the EventsSpec corpus: user 1 completes within span, user 2 stalls
   // at step 1 (same-instant click; later click outside span), user 3
   // drops at step 3, user 4 never enters
@@ -34,24 +23,23 @@ class StreamingEventsSpec extends SparkSpec {
     (4L, 10L, "click"), (4L, 20L, "purchase"))
   private val steps = Seq("view", "click", "purchase")
 
-  private def lastPerUser(splits: Seq[Seq[(Long, Long, String)]]): Map[Long, Seq[Long]] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, (Long, String))](spark)
-      val out = StreamingEvents.funnelStream(src.toDS(), steps, Some(10L))
-      val q = out.writeStream.format("memory").queryName("sfunnel")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b =>
-          src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
-          q.processAllAvailable()
-        }
-        // last emission per user = deepest prefix (emissions only grow)
-        spark.table("sfunnel").as[(Long, Seq[Long])].collect()
-          .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_.length) }
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS sfunnel")
+  private def lastPerUser(splits: Seq[Seq[(Long, Long, String)]]): Map[Long, Seq[Long]] = {
+    val src = Testing.testingSource[(Long, (Long, String))](spark)
+    val out = StreamingEvents.funnelStream(src.toDS(), steps, Some(10L))
+    val q = out.writeStream.format("memory").queryName("sfunnel")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b =>
+        src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
+        q.processAllAvailable()
       }
+      // last emission per user = deepest prefix (emissions only grow)
+      spark.table("sfunnel").as[(Long, Seq[Long])].collect()
+        .groupBy(_._1).map { case (u, vs) => u -> vs.map(_._2).maxBy(_.length) }
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS sfunnel")
     }
+  }
 
   private def batchExpected: Map[Long, Seq[Long]] =
     Events.funnel(rows.toDF("user_id", "us", "event_type"),
@@ -80,20 +68,19 @@ class StreamingEventsSpec extends SparkSpec {
   }
 
   private def sessionStream(splits: Seq[Seq[(Long, Long)]],
-      gapUs: Long): Map[(Long, Long), Long] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, Long)](spark)
-      val out = StreamingEvents.sessionizeStream(src.toDS(), gapUs)
-      val q = out.writeStream.format("memory").queryName("ssess")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b => src.addBatch(b: _*); q.processAllAvailable() }
-        spark.table("ssess").as[(Long, (Long, Long))].collect()
-          .map { case (u, (us, idx)) => (u, us) -> idx }.toMap
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS ssess")
-      }
+      gapUs: Long): Map[(Long, Long), Long] = {
+    val src = Testing.testingSource[(Long, Long)](spark)
+    val out = StreamingEvents.sessionizeStream(src.toDS(), gapUs)
+    val q = out.writeStream.format("memory").queryName("ssess")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b => src.addBatch(b: _*); q.processAllAvailable() }
+      spark.table("ssess").as[(Long, (Long, Long))].collect()
+        .map { case (u, (us, idx)) => (u, us) -> idx }.toMap
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS ssess")
     }
+  }
 
   test("sessionizeStream: batch parity under two different micro-batch splits") {
     val evs = Seq((1L, 0L), (1L, 10L), (1L, 21L), (2L, 5L), (1L, 40L),
@@ -130,24 +117,23 @@ class StreamingEventsSpec extends SparkSpec {
   // ---- cusum ----
 
   private def cusumStream(splits: Seq[Seq[(Long, Long, Long)]], ref: Long,
-      thr: Long): Map[(Long, Long), (Long, Boolean)] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, (Long, Long))](spark)
-      val out = StreamingEvents.cusumStream(src.toDS(), ref, thr)
-      val q = out.writeStream.format("memory").queryName("scusum")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b =>
-          src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
-          q.processAllAvailable()
-        }
-        spark.table("scusum")
-          .as[(Long, (Long, Long, Long, Boolean))].collect()
-          .map { case (u, (us, _, c, s)) => (u, us) -> ((c, s)) }.toMap
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS scusum")
+      thr: Long): Map[(Long, Long), (Long, Boolean)] = {
+    val src = Testing.testingSource[(Long, (Long, Long))](spark)
+    val out = StreamingEvents.cusumStream(src.toDS(), ref, thr)
+    val q = out.writeStream.format("memory").queryName("scusum")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b =>
+        src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
+        q.processAllAvailable()
       }
+      spark.table("scusum")
+        .as[(Long, (Long, Long, Long, Boolean))].collect()
+        .map { case (u, (us, _, c, s)) => (u, us) -> ((c, s)) }.toMap
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS scusum")
     }
+  }
 
   test("cusumStream: batch parity across splits; clamp, strict threshold, state carry") {
     // user 1 drifts up past the threshold, dips (clamp at 0 resets),
@@ -169,23 +155,22 @@ class StreamingEventsSpec extends SparkSpec {
   // ---- transitions ----
 
   private def transStream(splits: Seq[Seq[(Long, Long, String)]])
-      : Map[(String, String), Long] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, (Long, String))](spark)
-      val out = StreamingEvents.transitionsStream(src.toDS())
-      val q = out.writeStream.format("memory").queryName("strans")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b =>
-          src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
-          q.processAllAvailable()
-        }
-        spark.table("strans").as[(Long, (String, String))].collect()
-          .groupBy(_._2).map { case (p, vs) => p -> vs.length.toLong }
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS strans")
+      : Map[(String, String), Long] = {
+    val src = Testing.testingSource[(Long, (Long, String))](spark)
+    val out = StreamingEvents.transitionsStream(src.toDS())
+    val q = out.writeStream.format("memory").queryName("strans")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b =>
+        src.addBatch(b.map(r => (r._1, (r._2, r._3))): _*)
+        q.processAllAvailable()
       }
+      spark.table("strans").as[(Long, (String, String))].collect()
+        .groupBy(_._2).map { case (p, vs) => p -> vs.length.toLong }
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS strans")
     }
+  }
 
   test("transitionsStream: batch-matrix parity across splits; first events emit nothing") {
     val evs = Seq(
@@ -207,27 +192,26 @@ class StreamingEventsSpec extends SparkSpec {
 
   private def attribStream(splits: Seq[Seq[(Long, Long, String, Long)]],
       model: String, lookback: Long = 100L)
-      : Set[(Long, Long, Long, Long)] =
-    withRocksDb {
-      val src = Testing.testingSource[(Long, (Long, Long, String, String))](spark)
-      val out = StreamingEvents.attributionStream(src.toDS(),
-        convType = "buy", touchTypes = Seq("view", "click"),
-        lookbackUs = lookback, model = model)
-      val q = out.writeStream.format("memory").queryName("sattr")
-        .outputMode("append").start()
-      try {
-        splits.foreach { b =>
-          src.addBatch(b.map(r => (r._1, (r._2, r._4, r._3, r._3))): _*)
-          q.processAllAvailable()
-        }
-        spark.table("sattr")
-          .as[(Long, (Long, Long, Long, String, Long, Long))].collect()
-          .map { case (u, (cus, tid, _, _, _, cr)) => (u, cus, tid, cr) }
-          .toSet
-      } finally {
-        q.stop(); spark.sql("DROP TABLE IF EXISTS sattr")
+      : Set[(Long, Long, Long, Long)] = {
+    val src = Testing.testingSource[(Long, (Long, Long, String, String))](spark)
+    val out = StreamingEvents.attributionStream(src.toDS(),
+      convType = "buy", touchTypes = Seq("view", "click"),
+      lookbackUs = lookback, model = model)
+    val q = out.writeStream.format("memory").queryName("sattr")
+      .outputMode("append").start()
+    try {
+      splits.foreach { b =>
+        src.addBatch(b.map(r => (r._1, (r._2, r._4, r._3, r._3))): _*)
+        q.processAllAvailable()
       }
+      spark.table("sattr")
+        .as[(Long, (Long, Long, Long, String, Long, Long))].collect()
+        .map { case (u, (cus, tid, _, _, _, cr)) => (u, cus, tid, cr) }
+        .toSet
+    } finally {
+      q.stop(); spark.sql("DROP TABLE IF EXISTS sattr")
     }
+  }
 
   private def attribBatch(rows: Seq[(Long, Long, String, Long)],
       model: String, lookback: Long = 100L): Set[(Long, Long, Long, Long)] =

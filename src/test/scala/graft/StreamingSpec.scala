@@ -20,31 +20,6 @@ class StreamingSpec extends SparkSpec {
     assert(got === Set(("a", 1.0), ("b", 2.0), ("a", 4.0)))
   }
 
-  test("collectStream flushes on maxSize") {
-    // Even batch: everything flushes via maxSize; no residual buffer means
-    // no processing-time timer is registered, so the query drains cleanly.
-    // (Timer-based timeout flushes are covered by the wall-clock-dependent
-    // semantics of GroupStateTimeout and exercised in production only.)
-    val src = Testing.testingSource[(String, Int)](spark)
-    src.addBatch(("k", 1), ("k", 2), ("k", 3), ("k", 4))
-    val out = StreamingOps.collectStream(src.toDS(), maxSize = 2, timeoutMillis = 60000)
-      .map { case (k, vs) => (k, vs.mkString(",")) }
-    val got = StreamingOps.runToMemoryUntil(out, "collected", expectedRows = 2, timeoutMs = 30000)
-      .as[(String, String)].collect().toSet
-    assert(got === Set(("k", "1,2"), ("k", "3,4")))
-  }
-
-  test("collectStream flushes a partial buffer when the timer fires (notify_at analogue)") {
-    val src = Testing.testingSource[(String, Int)](spark)
-    src.addBatch(("t", 1), ("t", 2), ("t", 3))
-    // maxSize never reached; the 1s processing-time timer must flush
-    val out = StreamingOps.collectStream(src.toDS(), maxSize = 10, timeoutMillis = 1000)
-      .map { case (k, vs) => (k, vs.mkString(",")) }
-    val got = StreamingOps.runToMemoryUntil(out, "timer_collect", expectedRows = 1, timeoutMs = 30000)
-      .as[(String, String)].collect().toSet
-    assert(got === Set(("t", "1,2,3")))
-  }
-
   test("lateTee marking matches the stream's numRowsDroppedByWatermark") {
     import java.sql.Timestamp
     def t(s: String) = Timestamp.valueOf(s)
@@ -144,43 +119,28 @@ class StreamingSpec extends SparkSpec {
     assert(got.head._2.endsWith("mail me <EMAIL>"))
   }
 
-  test("statefulStream onBatch sees whole per-key batch and can clear state") {
-    val src = Testing.testingSource[(String, Int)](spark)
-    src.addBatch(("a", 1), ("a", 2), ("b", 7))
-    val out = StreamingOps.statefulStream[String, Int, Int, Int](
-      src.toDS(), timeoutMillis = None)(
-      onBatch = (_, vs, s) => {
-        val total = s.getOrElse(0) + vs.sum
-        (Some(total), Seq(total))
-      })
-    val got = StreamingOps.runToMemory(out, "batched")
-      .as[(String, Int)].collect().toSet
-    assert(got === Set(("a", 3), ("b", 7)))
-  }
-
   test("withIdleWatermark closes windows on wall clock with no further data (EventClock idle advance)") {
     // Data-driven watermark alone would stall at 10:00:05 and the
     // [10:00:00,10:00:10) window would NEVER emit in append mode; the
     // wall-clock heartbeat (event time = now ≫ 2024) must close it.
-    val src = Testing.testingSource[(String, java.sql.Timestamp)](spark)
+    // the policy goes on a clone, never on the shared session, so the
+    // default-policy refusal case below holds in any suite order
+    val maxPolicy = spark.newSession()
+    maxPolicy.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
+    val src = Testing.testingSource[(String, java.sql.Timestamp)](maxPolicy)
     def at(sec: Int) = new java.sql.Timestamp(
       java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime + sec * 1000L)
     src.addBatch(("k", at(0)), ("k", at(3)), ("k", at(5)))
-    spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "max")
-    try {
-      val ticked = StreamingOps.withIdleWatermark(
-        src.toDS().toDF("k", "ts"), "ts", "1 second")
-      val agged = ticked
-        .groupBy(window(col("ts"), "10 seconds"), col("k"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("k"), col("n"))
-      val got = StreamingOps.runToMemoryUntil(agged, "idle_wm",
-        expectedRows = 1, timeoutMs = 60000)
-        .as[(String, Long)].collect().toSet
-      assert(got === Set(("k", 3L)))
-    } finally {
-      spark.conf.unset("spark.sql.streaming.multipleWatermarkPolicy")
-    }
+    val ticked = StreamingOps.withIdleWatermark(
+      src.toDS().toDF("k", "ts"), "ts", "1 second")
+    val agged = ticked
+      .groupBy(window(col("ts"), "10 seconds"), col("k"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("k"), col("n"))
+    val got = StreamingOps.runToMemoryUntil(agged, "idle_wm",
+      expectedRows = 1, timeoutMs = 60000)
+      .as[(String, Long)].collect().toSet
+    assert(got === Set(("k", 3L)))
   }
 
   test("tracing captures micro-batch spans with observed step metrics (setup_tracing analogue)") {
