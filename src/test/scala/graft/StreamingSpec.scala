@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.connectors.Testing
-import graft.streaming.StreamingOps
+import graft.streaming.{StreamingOps, TransformWithStateOps}
 import graft.windowing.{EventClock, TumblingWindower}
 
 class StreamingSpec extends SparkSpec {
@@ -18,6 +18,19 @@ class StreamingSpec extends SparkSpec {
     val got = StreamingOps.runToMemory(out, "running_sum")
       .as[(String, Double)].collect().toSet
     assert(got === Set(("a", 1.0), ("b", 2.0), ("a", 4.0)))
+  }
+
+  test("collectStream flushes on maxSize") {
+    // collect on the keyed stream engine (TransformWithStateOps.collectTws):
+    // every key's count is a multiple of maxSize, so each key flushes
+    // whole groups in arrival order and leaves no buffer for the timer
+    val src = Testing.testingSource[(String, Int)](spark)
+    src.addBatch(("k", 1), ("j", 5), ("k", 2), ("k", 3), ("j", 6), ("k", 4))
+    val out = TransformWithStateOps.collectTws(src.toDS(), maxSize = 2, timeoutMs = 60000)
+      .map { case (k, vs) => (k, vs.mkString(",")) }
+    val got = StreamingOps.runToMemoryUntil(out, "collected", expectedRows = 3, timeoutMs = 30000)
+      .as[(String, String)].collect().toSet
+    assert(got === Set(("k", "1,2"), ("k", "3,4"), ("j", "5,6")))
   }
 
   test("lateTee marking matches the stream's numRowsDroppedByWatermark") {
@@ -117,6 +130,28 @@ class StreamingSpec extends SparkSpec {
       .select("id", "text").as[(Long, String)].collect().toSeq
     assert(got.map(_._1) === Seq(1L))
     assert(got.head._2.endsWith("mail me <EMAIL>"))
+  }
+
+  test("statefulStream onBatch sees whole per-key batch and can clear state") {
+    // stateful_batch on the keyed stream engine (statefulTws): one
+    // onBatch call per key and micro-batch, and a None state clears the
+    // key, here whenever one batch brings the key 7 or more
+    val src = Testing.testingSource[(String, Int)](spark)
+    val logic = new TransformWithStateOps.GraftStatefulLogic[String, Int, Int, Int] {
+      def onBatch(key: String, vs: Seq[Int], s: Option[Int]): (Option[Int], Seq[Int]) = {
+        val total = s.getOrElse(0) + vs.sum
+        (if (vs.sum >= 7) None else Some(total), Seq(total))
+      }
+    }
+    val q = TransformWithStateOps.statefulTws(src.toDS(), logic).writeStream
+      .format("memory").queryName("batched").outputMode("append").start()
+    try {
+      src.addBatch(("a", 1), ("a", 2), ("b", 7)); q.processAllAvailable()
+      src.addBatch(("a", 4), ("b", 1)); q.processAllAvailable()
+    } finally q.stop()
+    // a: 3, then 7 on the kept state; b: 7 (cleared), then 1 from empty
+    assert(spark.table("batched").as[(String, Int)].collect().toSeq.sorted ===
+      Seq(("a", 3), ("a", 7), ("b", 1), ("b", 7)))
   }
 
   test("withIdleWatermark closes windows on wall clock with no further data (EventClock idle advance)") {
